@@ -1,7 +1,9 @@
 package graft
 
+import java.net.URI
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.clf.ClfParser
@@ -28,9 +30,17 @@ import graft.sinks.Sink
  * copy+delete archive becomes an atomic `FileSystem.rename`; staging uses
  * dynamic partition overwrite so a day re-run is idempotent.
  *
+ * Passes: the raw text is scanned once, by the staging write, which also
+ * observes the line and reject counts (`Dataset.observe`, no job of its
+ * own); the input-file list is the scan's file listing. The pruned day
+ * slice is read once into a cache that the per-user sink write fills and
+ * the totals aggregate reuses; the totals row is collected once and
+ * appended from the driver. A day at small volume costs about a dozen
+ * Spark jobs, so each extra action shows in the run's wall time.
+ *
  * Scale: nothing here collects data rows to the driver — the only
- * driver-side materialization is the distinct input-file list (metadata,
- * one string per file) and the 3-scalar totals row, both O(metadata).
+ * driver-side values are the input-file listing (metadata, one string per
+ * file), the two observed counts and the 3-scalar totals row.
  */
 object Pipeline {
 
@@ -65,38 +75,37 @@ object Pipeline {
       glob: String = "*.log",
       catalogTable: Option[String] = None): Report = {
 
-    // provenance column is captured at scan time, BEFORE caching —
-    // input_file_name() over an InMemoryRelation evaluates to ""
     val raw = ClfParser.read(spark, inputDir, glob)
-      .withColumn("_src", input_file_name())
-      .cache()
+    // the scan's own file listing (no job), so the files archived below
+    // are exactly the files the staging write parsed
+    val inputFiles = raw.inputFiles.toSeq.sorted
+
+    // one pass over the text: parse, count lines and rejects, stage
+    val counts = Observation()
+    Staging.stage(
+      ClfParser.parse(raw, Some(counts)).withColumn("date", lit(date)), stagingPath)
+    val observed = counts.get
+    catalogTable.foreach(Staging.register(spark, _, stagingPath))
+
+    // Aggregate over the staged day slice (partition-pruned re-read, as
+    // the reference's Glue job does) so the sink reflects what was staged.
+    // The first sink write fills the cache; the totals read it.
+    val day = Staging.readDay(spark, stagingPath, date).cache()
     try {
-      val inputFiles = raw.select(col("_src")).distinct()
-        .collect().map(_.getString(0)).toSeq.sorted
+      sink.overwrite(
+        LogAnalytics.requestsPerUser(day).orderBy(col("user_id").asc_nulls_last),
+        "user_requests")
+      val totals = LogAnalytics.totalsRow(
+        day, runDate = lit(date), successPred = col("status_code") === 200)
+      val t = totals.collect()(0)
+      sink.append(spark.createDataFrame(java.util.List.of(t), totals.schema), "total_requests")
 
-      val parsed  = ClfParser.parse(raw)
-      val rejects = ClfParser.rejects(raw).count()
-      Staging.stage(parsed.withColumn("date", lit(date)), stagingPath)
-      catalogTable.foreach(Staging.register(spark, _, stagingPath))
-
-      // Aggregate over the staged day slice (partition-pruned re-read, as
-      // the reference's Glue job does) so the sink reflects what was staged.
-      val day = Staging.readDay(spark, stagingPath, date).cache()
-      try {
-        val parsedRows = day.count()
-        sink.overwrite(
-          LogAnalytics.requestsPerUser(day).orderBy(col("user_id").asc_nulls_last),
-          "user_requests")
-        val totals = LogAnalytics.totalsRow(
-          day, runDate = lit(date), successPred = col("status_code") === 200)
-        sink.append(totals, "total_requests")
-        val t = totals.collect()(0)
-
-        archiveDir.foreach(moveFiles(spark, inputFiles, _))
-        Report(inputFiles, parsedRows, rejects,
-          t.getAs[Long]("user_count"), t.getAs[Long]("total_successful_requests"))
-      } finally day.unpersist()
-    } finally raw.unpersist()
+      archiveDir.foreach(moveFiles(spark, inputFiles, _))
+      Report(inputFiles,
+        observed(ClfParser.LinesMetric).asInstanceOf[Long],
+        observed(ClfParser.RejectsMetric).asInstanceOf[Long],
+        t.getAs[Long]("user_count"), t.getAs[Long]("total_successful_requests"))
+    } finally day.unpersist()
   }
 
   /** Archive processed inputs: atomic rename into `archiveDir` (the
@@ -108,7 +117,8 @@ object Pipeline {
     val fs   = dest.getFileSystem(conf)
     fs.mkdirs(dest)
     files.foreach { f =>
-      val src = new Path(f)
+      // the listing's URI strings are percent-encoded (`a%20b.log`)
+      val src = new Path(new URI(f))
       // a silently-failed rename would leave the file in the inbox to be
       // re-ingested under the NEXT run's date — fail the run instead
       require(fs.rename(src, new Path(dest, src.getName)),

@@ -1,7 +1,10 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.testbus.BusDrain
 import graft.sinks.ParquetSink
 
 /** Golden end-to-end test: fixture CLF files through the full pipeline,
@@ -22,14 +25,36 @@ class PipelineSpec extends GraftSpec {
     "this line is not CLF at all" // reject
   )
 
-  test("fixture logs → staged partition, golden aggregates, archived inputs") {
+  /** A fresh root whose `inbox` holds the given files; returns the root. */
+  private def withInbox(files: (String, Seq[String])*): String = {
     val root = Files.createTempDirectory("graft_pipeline").toString
     val inbox = s"$root/inbox"; Files.createDirectories(Paths.get(inbox))
-    Files.write(Paths.get(inbox, "2015-11-13.log"),
-      String.join("\n", lines1: _*).getBytes)
-    Files.write(Paths.get(inbox, "2015-11-13b.log"),
-      String.join("\n", lines2: _*).getBytes)
-    Files.write(Paths.get(inbox, "notes.txt"), "ignore me".getBytes)
+    files.foreach { case (name, lines) =>
+      Files.write(Paths.get(inbox, name), String.join("\n", lines: _*).getBytes)
+    }
+    root
+  }
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def countingJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    BusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      BusDrain(sc)
+      (r, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("fixture logs → staged partition, golden aggregates, archived inputs") {
+    val root = withInbox("2015-11-13.log" -> lines1, "2015-11-13b.log" -> lines2,
+      "notes.txt" -> Seq("ignore me"))
+    val inbox = s"$root/inbox"
 
     val report = Pipeline.run(spark,
       inputDir = inbox,
@@ -77,8 +102,40 @@ class PipelineSpec extends GraftSpec {
     // second run on the drained inbox: nothing to do, earlier staging intact
     val again = Pipeline.run(spark, inbox, s"$root/staging", "2015-11-14",
       new ParquetSink(s"$root/results"), Some(s"$root/processed"))
-    assert(again.parsedRows == 0)
+    assert(again == Pipeline.Report(Seq.empty, 0L, 0L, 0L, 0L))
     assert(graft.stage.Staging.readDay(spark, s"$root/staging", "2015-11-13").count() == 5)
+    // ...and its sinks: user_requests is overwritten empty, and the empty
+    // day's totals row (an aggregate over no rows: no max, no sum) is
+    // appended after the first day's
+    assert(spark.read.parquet(s"$root/results/user_requests").count() == 0)
+    val totals2 = spark.read.parquet(s"$root/results/total_requests")
+      .collect().map(_.toSeq).toSet
+    assert(totals2 == Set(Seq("2015-11-13", 2L, 3L), Seq(null, 0L, null)))
+  }
+
+  test("inbox names that need URL escaping are parsed and archived") {
+    val root = withInbox("a b.log" -> lines1, "c%41.log" -> lines2)
+    val report = Pipeline.run(spark, s"$root/inbox", s"$root/staging", "2015-11-13",
+      new ParquetSink(s"$root/results"), Some(s"$root/processed"))
+    assert(report.inputFiles.length == 2)
+    assert(report.parsedRows == 5 && report.rejectRows == 1)
+    Seq("a b.log", "c%41.log").foreach { name =>
+      assert(!Files.exists(Paths.get(root, "inbox", name)), name)
+      assert(Files.exists(Paths.get(root, "processed", name)), name)
+    }
+  }
+
+  test("one run over the fixture stays within its Spark job budget") {
+    // one staging write (its scan observes the counts), the cached day
+    // slice filled by the per-user sink write, one totals collect and the
+    // driver-side totals append; a stray count() or a second totals
+    // aggregate goes over
+    val root = withInbox("2015-11-13.log" -> lines1, "2015-11-13b.log" -> lines2)
+    val (report, jobs) = countingJobs(Pipeline.run(spark, s"$root/inbox",
+      s"$root/staging", "2015-11-13", new ParquetSink(s"$root/results"),
+      Some(s"$root/processed")))
+    assert(report.parsedRows == 5)
+    assert(jobs <= 12, s"$jobs jobs")
   }
 
   test("dynamic partition overwrite: re-staging one day leaves others intact") {

@@ -72,6 +72,36 @@ class ClfParserSpec extends GraftSpec {
     assert(ClfParser.rejects(fixtures.toDF("value")).count() == 1L)
   }
 
+  test("parse's observed counts equal the line count and rejects(), regex once per line") {
+    val valid = fixtures.head
+    val lines = fixtures ++ Seq(
+      "", "   ", valid + "   ", valid + "\t", " " + valid,
+      // grammar matches that the tolerance contract nulls: not rejects
+      valid.replace("Mozilla", "Moz\u0001illa"), valid.replace("Mozilla", "Moz\u0002illa"),
+      "\u0001" + valid,
+      // no match, including text shaped like the parser's own rewrite
+      "\u0001", "\u0002", "\u0001a" + "\u0002b" * 8, "not \u0001 a \u0002 log")
+    val dir = java.nio.file.Files.createTempDirectory("graft_clf_counts")
+    java.nio.file.Files.write(dir.resolve("a.log"),
+      String.join("\n", lines: _*).getBytes("UTF-8"))
+    val raw = ClfParser.read(spark, dir.toString)
+    assert(raw.count() == lines.length)
+
+    val counts = org.apache.spark.sql.Observation()
+    val parsedDf = ClfParser.parse(raw, Some(counts))
+    parsedDf.write.format("noop").mode("overwrite").save()
+    val observed = counts.get
+    val want = ClfParser.rejects(raw).count()
+    assert(want == 8L)
+    assert(observed(ClfParser.RejectsMetric) == want)
+    assert(observed(ClfParser.LinesMetric) == lines.length.toLong)
+
+    // the counts ride on the parse's one line rewrite: the line regex
+    // appears once in the executed plan
+    val plan = parsedDf.queryExecution.executedPlan.toString
+    assert(plan.split(java.util.regex.Pattern.quote(ClfParser.clfRegex), -1).length - 1 == 1, plan)
+  }
+
   test("a line embedding the parser's control chars is malformed, never garbled") {
     // these lines MATCH the CLF grammar, but the / inside a
     // quoted field would corrupt the single-pass rewrite's field
