@@ -25,22 +25,27 @@ import graft.sinks.Sink
  *    (sink overwrite) + one totals row (sink append).
  *
  * Spark-first deltas: the whole-file-in-memory fetch becomes a distributed
- * text scan; the reference's three separate aggregate actions become one
- * cached day-slice with a single multi-aggregate totals pass; the S3
+ * text scan; the reference's three scans of the day become one per-user
+ * aggregate whose sink write also records the totals row; the S3
  * copy+delete archive becomes an atomic `FileSystem.rename`; staging uses
  * dynamic partition overwrite so a day re-run is idempotent.
  *
  * Passes: the raw text is scanned once, by the staging write, which also
  * observes the line and reject counts (`Dataset.observe`, no job of its
- * own); the input-file list is the scan's file listing. The pruned day
- * slice is read once into a cache that the per-user sink write fills and
- * the totals aggregate reuses; the totals row is collected once and
- * appended from the driver. A day at small volume costs about a dozen
- * Spark jobs, so each extra action shows in the run's wall time.
+ * own); the input-file list is the scan's file listing. The staged day is
+ * then scanned once, by the per-user sink write: it reads only the day's
+ * directory with the declared schema (no inference job) and observes the
+ * totals row over the per-user groups, which is appended from the driver
+ * as a one-row local table. A day costs five Spark jobs — the staging
+ * write's date shuffle and write, the per-user aggregate's shuffle and
+ * write, the totals append — and at small volume the job count, not the
+ * data, sets the run's wall time, so each extra action shows.
  *
  * Scale: nothing here collects data rows to the driver — the only
  * driver-side values are the input-file listing (metadata, one string per
- * file), the two observed counts and the 3-scalar totals row.
+ * file), the two observed counts and the observed 3-scalar totals row.
+ * Registering a new day in the catalog is one metadata call for that
+ * partition, not a repair of the table.
  */
 object Pipeline {
 
@@ -63,7 +68,8 @@ object Pipeline {
    * @param archiveDir  where processed inputs move; None = leave in place
    * @param catalogTable register the staged layout under this catalog name
    *                     (the reference's Glue-table ensure,
-   *                     `sree-etl-tdk-lambda.py:196-200`); None = skip
+   *                     `sree-etl-tdk-lambda.py:196-200`) and add the
+   *                     day's partition to it; None = skip
    */
   def run(
       spark: SparkSession,
@@ -85,27 +91,33 @@ object Pipeline {
     Staging.stage(
       ClfParser.parse(raw, Some(counts)).withColumn("date", lit(date)), stagingPath)
     val observed = counts.get
-    catalogTable.foreach(Staging.register(spark, _, stagingPath))
+    val parsedRows = observed(ClfParser.LinesMetric).asInstanceOf[Long]
+    catalogTable.foreach { t =>
+      Staging.register(spark, t, stagingPath)
+      if (parsedRows > 0) Staging.addDay(spark, t, date)
+    }
 
-    // Aggregate over the staged day slice (partition-pruned re-read, as
-    // the reference's Glue job does) so the sink reflects what was staged.
-    // The first sink write fills the cache; the totals read it.
-    val day = Staging.readDay(spark, stagingPath, date).cache()
-    try {
-      sink.overwrite(
-        LogAnalytics.requestsPerUser(day).orderBy(col("user_id").asc_nulls_last),
-        "user_requests")
-      val totals = LogAnalytics.totalsRow(
-        day, runDate = lit(date), successPred = col("status_code") === 200)
-      val t = totals.collect()(0)
-      sink.append(spark.createDataFrame(java.util.List.of(t), totals.schema), "total_requests")
+    // One pass over the staged day slice (partition-pruned re-read, as
+    // the reference's Glue job does) so the sinks reflect what was staged:
+    // the per-user sink write also records the totals row.
+    val day = Staging.readDay(spark, stagingPath, date, Some(Staging.stagedSchema))
+    val runDate = lit(date)
+    val successful = col("status_code") === 200
+    val totals = Observation()
+    sink.overwrite(
+      LogAnalytics.requestsPerUserObserved(day, runDate, successful, totals),
+      "user_requests")
+    sink.append(
+      LogAnalytics.observedTotals(spark, totals,
+        LogAnalytics.totalsRow(day, runDate, successful).schema),
+      "total_requests")
 
-      archiveDir.foreach(moveFiles(spark, inputFiles, _))
-      Report(inputFiles,
-        observed(ClfParser.LinesMetric).asInstanceOf[Long],
-        observed(ClfParser.RejectsMetric).asInstanceOf[Long],
-        t.getAs[Long]("user_count"), t.getAs[Long]("total_successful_requests"))
-    } finally day.unpersist()
+    archiveDir.foreach(moveFiles(spark, inputFiles, _))
+    val t = totals.get
+    Report(inputFiles, parsedRows,
+      observed(ClfParser.RejectsMetric).asInstanceOf[Long],
+      t("user_count").asInstanceOf[Long],
+      t("total_successful_requests").asInstanceOf[Long])
   }
 
   /** Archive processed inputs: atomic rename into `archiveDir` (the

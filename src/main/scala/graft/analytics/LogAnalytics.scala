@@ -1,8 +1,8 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 /**
  * The reference's aggregate job re-expressed as one declarative pass
@@ -52,6 +52,48 @@ object LogAnalytics {
       count_distinct(col(userCol)).as("user_count"),
       sum(when(successPred, 1L).otherwise(0L)).as("total_successful_requests")
     )
+
+  /**
+   * [[requestsPerUser]] that also records the [[totalsRow]] of `df` into
+   * `totals` when the first action over the result runs: the totals fold
+   * the per-user groups, so they cost no scan, shuffle or job of their
+   * own. Each group carries its user's success count and `runDate` max
+   * besides `requests_count`; over the groups, `count` of the non-NULL
+   * keys is `count_distinct` of the user column, and `sum`/`max` of the
+   * per-user values are the day's. An empty `df` has no groups, which
+   * gives the `[null, 0, null]` of an aggregate over no rows — exactly
+   * [[totalsRow]], whose schema [[observedTotals]] gives the row back in.
+   *
+   * Put no operator that runs its input twice (a range sort samples it)
+   * between the result and its action: the observed values must come
+   * from the one run.
+   */
+  def requestsPerUserObserved(
+      df: DataFrame,
+      runDate: Column,
+      successPred: Column,
+      totals: Observation,
+      userCol: String = "user_id",
+      requestCol: String = "request_resource"): DataFrame =
+    df.groupBy(col(userCol))
+      .agg(count(col(requestCol)).as("requests_count"),
+        max(runDate).as("_run_date"),
+        sum(when(successPred, 1L).otherwise(0L)).as("_successful"))
+      .observe(totals,
+        max(col("_run_date")).as("run_date"),
+        count(col(userCol)).as("user_count"),
+        sum(col("_successful")).as("total_successful_requests"))
+      .drop("_run_date", "_successful")
+
+  /** The totals row [[requestsPerUserObserved]] recorded, as a one-row
+    * local DataFrame with `schema` ([[totalsRow]]'s); blocks until the
+    * observed aggregate has run. */
+  def observedTotals(
+      spark: SparkSession, totals: Observation, schema: StructType): DataFrame = {
+    val observed = totals.get
+    spark.createDataFrame(
+      java.util.List.of(Row.fromSeq(schema.fieldNames.toSeq.map(observed))), schema)
+  }
 
   /**
    * Batch sessionization: per-user session counts where a session breaks

@@ -13,6 +13,11 @@ import org.apache.spark.sql.DataFrame
  * tests; [[JdbcSink]] is the production writer and is a one-line swap.
  */
 trait Sink {
+  /** Replace `table` with `df`. Must run `df` as ONE Dataset write action
+    * (`df.write…`): `graft.Pipeline` reads the day's totals from an
+    * `Observation` on `df`, which only that action records — a sink that
+    * ran `df` through an RDD, twice, or not at all would lose the totals
+    * or leave the pipeline waiting for them. */
   def overwrite(df: DataFrame, table: String): Unit
   def append(df: DataFrame, table: String): Unit
 }

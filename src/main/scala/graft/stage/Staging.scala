@@ -1,6 +1,8 @@
 package graft.stage
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -15,9 +17,11 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
  * `push_down_predicate="date = '<today>'"`).
  *
  * Scale notes: the `date` partition layout means a day query lists and reads
- * exactly one directory regardless of total table size; Catalyst partition
- * pruning turns the `.filter` in [[readDay]] into planning-time file
- * skipping, so this holds at 100 TB the same way it holds at sf0.01.
+ * exactly one directory regardless of total table size: [[readDay]] lists
+ * only the day's directory, and a `date` filter over the whole root (the
+ * catalog table, [[readAll]]) prunes directories at planning time. So this
+ * holds at 100 TB the same way it holds at sf0.01, and given the declared
+ * [[stagedSchema]] a day read starts no job before it runs.
  */
 object Staging {
 
@@ -42,12 +46,28 @@ object Staging {
       .parquet(path)
 
   /**
-   * Partition-pruned read of a single day. The equality filter on the
-   * partition column prunes directories at planning time (visible as
-   * `PartitionFilters: [isnotnull(date), (date = …)]` in `.explain`).
+   * Partition-pruned read of a single day. Only the day's `date=`
+   * directory is listed (`basePath` keeps `date` a partition column), so
+   * building the DataFrame costs the same on a 40-day table as on a
+   * 1-day one: no listing job past
+   * `spark.sql.sources.parallelPartitionDiscovery.threshold` directories,
+   * and with `schema` given no footer-inference job either. The equality
+   * filter stays on the partition column, so the plan shows
+   * `PartitionFilters: [isnotnull(date), (date = …)]` in `.explain`.
+   * A day that was never staged reads the whole root under the same
+   * filter: empty, with the schema a read of the root has.
    */
-  def readDay(spark: SparkSession, path: String, date: String): DataFrame =
-    spark.read.parquet(path).filter(col("date") === lit(date))
+  def readDay(
+      spark: SparkSession, path: String, date: String,
+      schema: Option[StructType] = None): DataFrame = {
+    val reader = schema.fold(spark.read)(spark.read.schema(_))
+    val dir = new Path(path, ExternalCatalogUtils.getPartitionPathString("date", date))
+    val staged = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dir)
+    val read =
+      if (staged) reader.option("basePath", path).parquet(dir.toString)
+      else reader.parquet(path)
+    read.filter(col("date") === lit(date))
+  }
 
   /** Read the whole staged table (all partitions). */
   def readAll(spark: SparkSession, path: String): DataFrame =
@@ -399,22 +419,33 @@ object Staging {
    */
   def register(spark: SparkSession, table: String, path: String): Unit =
     if (!spark.catalog.tableExists(table)) {
-      // quote both interpolations: the path goes inside a single-quoted SQL
-      // literal (an apostrophe in a filesystem path would otherwise break —
-      // or inject into — the DDL), and the table name is backtick-quoted
-      // PER dot-separated part — quoting the whole string would turn
-      // `db.tbl` into a single-part name and desynchronize the DDL from
-      // the tableExists check above.
-      val loc = path.replace("'", "''")
-      val ident = table.split('.')
-        .map(p => s"`${p.replace("`", "``")}`").mkString(".")
+      // the path goes inside a single-quoted SQL literal: an apostrophe in
+      // a filesystem path would otherwise break — or inject into — the DDL
+      val ident = quoteIdent(table)
       spark.sql(
         s"""CREATE TABLE $ident ($cleansedDdl, date STRING)
            |USING parquet
            |PARTITIONED BY (date)
-           |LOCATION '$loc'""".stripMargin)
+           |LOCATION '${quoteLiteral(path)}'""".stripMargin)
       spark.sql(s"MSCK REPAIR TABLE $ident")
     }
+
+  /** Add one staged day to a table [[register]]ed earlier (idempotent).
+    * `register` discovers the days staged before the table existed; a day
+    * staged after that is invisible through the catalog until its
+    * partition is added — the reference loads each day's partition into
+    * its Glue table. Metadata only: no listing of other days, no job. */
+  def addDay(spark: SparkSession, table: String, date: String): Unit =
+    spark.sql(s"ALTER TABLE ${quoteIdent(table)} ADD IF NOT EXISTS " +
+      s"PARTITION (date = '${quoteLiteral(date)}')")
+
+  /** Backtick-quote a table name PER dot-separated part: quoting the whole
+    * string would turn `db.tbl` into a single-part name and desynchronize
+    * the DDL from `tableExists`. */
+  private def quoteIdent(table: String): String =
+    table.split('.').map(p => s"`${p.replace("`", "``")}`").mkString(".")
+
+  private def quoteLiteral(v: String): String = v.replace("'", "''")
 
   /**
    * Export manifest: per-shard row count and an ORDER-DEFINED content

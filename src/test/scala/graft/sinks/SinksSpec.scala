@@ -1,6 +1,11 @@
 package graft.sinks
 
+import org.apache.spark.sql.{Observation, Row}
+import org.apache.spark.sql.functions.{col, lit}
+
 import graft.GraftSpec
+import graft.analytics.LogAnalytics
+import graft.stage.Staging
 
 class SinksSpec extends GraftSpec {
   import spark.implicits._
@@ -49,5 +54,50 @@ class SinksSpec extends GraftSpec {
     assert(tot.count() == 2L)
     assert(tot.select("run_date").collect().map(_.getString(0)).toSet ==
       Set("2026-08-12", "2026-08-13"))
+  }
+
+  test("observed totals equal totalsRow over the staged day, through both sinks") {
+    // staged rows with the declared schema: (user_id, request_resource,
+    // status_code, date), the other columns NULL
+    def row(user: java.lang.Long, resource: String, status: java.lang.Long, date: String) =
+      Row("10.0.0.1", null, user, null, "GET", resource, "HTTP/1.0", status, null, null, null, date)
+    val staged = java.nio.file.Files.createTempDirectory("graft_observed").toString
+    Staging.stage(spark.createDataFrame(java.util.List.of(
+      row(7L, "/a", 200L, "2024-05-06"),
+      row(7L, "/b", 404L, "2024-05-06"),
+      row(null, "/c", 200L, "2024-05-06"),          // null user, counted as a success
+      row(null, null, null, "2024-05-06"),          // a rejected line's all-NULL row
+      row(9L, "/d", 500L, "2024-05-07"),            // a day with no 200s
+      row(null, "/e", 404L, "2024-05-07")), Staging.stagedSchema), staged)
+    val days = Seq("2024-05-06", "2024-05-07", "2024-05-08") // the last never staged
+    val successful = col("status_code") === 200
+
+    def check(sink: Sink, readBack: String => org.apache.spark.sql.DataFrame): Unit = {
+      days.foreach { date =>
+        val day = Staging.readDay(spark, staged, date, Some(Staging.stagedSchema))
+        val totals = Observation()
+        sink.overwrite(
+          LogAnalytics.requestsPerUserObserved(day, lit(date), successful, totals), "user_requests")
+        val twin = LogAnalytics.totalsRow(day, lit(date), successful)
+        val got = LogAnalytics.observedTotals(spark, totals, twin.schema)
+        assert(got.schema == twin.schema, date)
+        assert(got.collect().toSeq == twin.collect().toSeq, date)
+        sink.append(got, "total_requests")
+
+        def perUser(df: org.apache.spark.sql.DataFrame) =
+          df.collect().map(r => Option(r.get(0)).map(_.toString.toLong) -> r.getLong(1)).toSet
+        assert(perUser(readBack("user_requests")) == perUser(LogAnalytics.requestsPerUser(day)), date)
+      }
+      val appended = readBack("total_requests").collect().map(_.toSeq).toSet
+      assert(appended == Set(Seq("2024-05-06", 1L, 2L), Seq("2024-05-07", 1L, 0L), Seq(null, 0L, null)))
+    }
+
+    val root = java.nio.file.Files.createTempDirectory("graft_observed_sink").toString
+    check(new ParquetSink(root), t => spark.read.parquet(s"$root/$t"))
+
+    val url = s"jdbc:derby:memory:graftobs${System.nanoTime()};create=true"
+    val props = new java.util.Properties()
+    props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    check(new JdbcSink(url, props), t => spark.read.jdbc(url, t, props))
   }
 }

@@ -25,6 +25,37 @@ class StagingSpec extends GraftSpec {
     assert(plan.contains("PartitionFilters"))
   }
 
+  test("readDay lists only its day: on 40 days, one job at most, none given a schema") {
+    // past spark.sql.sources.parallelPartitionDiscovery.threshold (32)
+    // directories, a read of the root starts a listing job of its own
+    val start = java.time.LocalDate.parse("2024-01-01")
+    val df = (0 until 40).flatMap(d => Seq(2L * d, 2L * d + 1).map(_ -> s"${start.plusDays(d)} 10:00:00"))
+      .toDF("id", "t").withColumn("time", to_timestamp(col("t"))).drop("t")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stage40").toString
+    Staging.stage(Staging.withDate(df), tmp)
+    val date = start.plusDays(35).toString
+    val root = spark.read.parquet(tmp).filter(col("date") === date) // the twin
+
+    val (inferred, inferJobs) = countingJobs(Staging.readDay(spark, tmp, date))
+    assert(inferJobs <= 1, s"$inferJobs jobs")
+    assert(inferred.schema == root.schema)
+    assert(inferred.collect().toSet == root.collect().toSet)
+    assert(inferred.select("id").as[Long].collect().sorted.toSeq == Seq(70L, 71L))
+
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "id BIGINT, time TIMESTAMP, date STRING")
+    val (declared, declaredJobs) = countingJobs(Staging.readDay(spark, tmp, date, Some(schema)))
+    assert(declaredJobs == 0, s"$declaredJobs jobs")
+    assert(declared.schema == schema)
+    assert(declared.select("id", "date").as[(Long, String)].collect().toSet ==
+      Set(70L -> date, 71L -> date))
+
+    // a day never staged reads empty, with the root's schema
+    val missing = Staging.readDay(spark, tmp, "2023-12-31")
+    assert(missing.schema == root.schema && missing.isEmpty)
+    assert(Staging.readDay(spark, tmp, "2023-12-31", Some(schema)).isEmpty)
+  }
+
   test("range-sorted layout: disjoint per-file key ranges; hash layout spans") {
     val df = (1L to 4000L).map(i => ((i * 2654435761L) % 1000L, i))
       .toDF("k", "payload")
