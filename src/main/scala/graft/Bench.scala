@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.ext.Materialize
@@ -53,22 +52,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir   = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
-    val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-        .config("spark.ui.enabled", "false")
-        .config(Harness.parallelismFloors.head._1, Harness.parallelismFloors.head._2)
-        .config(Harness.parallelismFloors(1)._1, Harness.parallelismFloors(1)._2)
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      Harness.quietRddWarnings()
-      s
-    }
-    var spark = newSession()
+    val cpus    = Harness.cpus
+    var spark = Harness.session(cpus)
 
     val base = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
     // Prior round's per-query steady state, read BEFORE this run
@@ -90,15 +75,10 @@ object Bench {
       }
     } catch { case scala.util.control.NonFatal(_) => Map.empty[String, Double] }
 
-    // Optional comma-separated query-name filter (substring match) for
-    // local iteration — e.g. SPARK_GRAFT_ONLY=q18,q37. Unset OR set-but-
-    // empty = all queries, the driver contract: without the nonEmpty
-    // filters an empty var would run the full set (every name contains "")
-    // yet route the durable record to the .partial path, leaving the real
-    // full-run file stale.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
+    // Optional query-name filter for local iteration — e.g.
+    // SPARK_GRAFT_ONLY=q18,q37 (contract: Harness.onlyFilter). A filtered
+    // run writes its durable record to the .partial path.
+    val only = Harness.onlyFilter(sys.env.get("SPARK_GRAFT_ONLY"))
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // name -> (sweep seconds, fresh-session seconds): every guard firing
     // is recorded, so the round record explains itself
@@ -120,7 +100,7 @@ object Bench {
       s"SPARK_GRAFT_SWEEP_ORDER must be sorted|reverse, got $sweepOrder")
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
     val results = (if (sweepOrder == "reverse") ordered.reverse else ordered)
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
+      .filter { case (name, _) => only.forall(_(name)) }
       .flatMap { case (name, fn) =>
       def warmUp(): Unit =
         try { Harness.consume(fn(spark, warmDir)); Materialize.release(spark) }
@@ -162,7 +142,7 @@ object Bench {
             baseline.get(name).exists(b => s > 2.0 * b && s > 1.0) =>
           rerunBudget -= 1
           spark.stop()
-          spark = newSession()
+          spark = Harness.session(cpus)
           warmUp()
           val fresh = timedRun()
           fresh.foreach(f => reruns(name) = (s, f))
@@ -201,13 +181,7 @@ object Bench {
       if (errors.contains(name)) None else secs.map(name -> _)
     }
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"'          => "\\\""
-        case '\\'         => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c            => c.toString
-      } + "\""
+    import Harness.{jsonString => jstr}
     // 4-dp timings: 0.1 ms resolution is below run-to-run noise, and the
     // compact line keeps ALL per-query entries inside whatever stdout
     // window the driver's round record captures (the r10 record's tail
@@ -232,7 +206,7 @@ object Bench {
     // floor itself is steady-state (scheduler warm), min-of-5.
     val jobFloor = (1 to 5).map { _ =>
       val t0 = System.nanoTime()
-      spark.range(0, 1000, 1, cpus.toInt).groupBy(col("id") % 7).count().collect()
+      spark.range(0, 1000, 1, cpus).groupBy(col("id") % 7).count().collect()
       (System.nanoTime() - t0) / 1e9
     }.min
     // Cross-round variance adjudications live in a checked-in artifact

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run one declared query N times with timing + formatted plan.
   * Usage: runMain graft.Explain <queryKey> [sfDir] [reps]
   */
@@ -10,33 +8,30 @@ object Explain {
     val key   = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps  = if (args.length > 2) args(2).toInt else 3
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config(Harness.parallelismFloors.head._1, Harness.parallelismFloors.head._2)
-      .config(Harness.parallelismFloors(1)._1, Harness.parallelismFloors(1)._2)
-    // Measurement-only conf override (guide §1): semicolon-separated k=v
-    // pairs, e.g. SPARK_GRAFT_EXTRA_CONF="spark.sql.shuffle.partitions=8".
-    // Explain is a dev tool — Bench never reads this.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k.trim, v.trim)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Harness.quietRddWarnings()
+    val spark = Harness.session(Harness.cpus,
+      sys.env.get("SPARK_GRAFT_EXTRA_CONF").map(extraConf).getOrElse(Nil))
     val fn = SparkEntry.queries(key)
     (1 to reps).foreach { i =>
       val t0 = System.nanoTime()
       Harness.consume(fn(spark, sfDir)) // same action Bench times
       println(f"[explain] $key run $i: ${(System.nanoTime() - t0) / 1e9}%.3f s")
       graft.ext.Materialize.release(spark)
+      Harness.dropStreamSinks(spark)
     }
     fn(spark, sfDir).explain("formatted")
     spark.stop()
   }
+
+  /**
+   * Measurement-only conf override (guide §1): semicolon-separated k=v
+   * pairs, e.g. SPARK_GRAFT_EXTRA_CONF="spark.sql.shuffle.partitions=8".
+   * Empty segments are skipped; the value is everything after the first
+   * `=`. Explain is a dev tool — Bench never reads this.
+   */
+  def extraConf(raw: String): Seq[(String, String)] =
+    raw.split(';').toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      val i = kv.indexOf('=')
+      require(i > 0, s"SPARK_GRAFT_EXTRA_CONF segment '$kv' is not k=v")
+      kv.take(i).trim -> kv.drop(i + 1).trim
+    }
 }

@@ -2,10 +2,69 @@ package graft
 
 import org.apache.logging.log4j.Level
 import org.apache.logging.log4j.core.config.Configurator
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared plumbing for the harness mains (Bench / Verify / Explain). */
+/**
+ * Shared plumbing for the harness mains: the one place that knows what the
+ * engine session is. Callers: [[RunPipeline]], [[Verify]], [[Bench]] (its
+ * first session and the fresh-session re-run), [[Explain]] and the test
+ * suite's `TestSpark`. `perfbench` builds its own session, reads
+ * [[parallelismFloors]] and [[quietRddWarnings]], and runs its queries
+ * through [[consume]] and [[dropStreamSinks]].
+ */
 object Harness {
+
+  /** Session width: `SPARK_GRAFT_CPUS`, else every core the JVM sees. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /**
+   * The engine session on `local[cpus]`: one shuffle partition per core,
+   * UTC, [[graft.functions.GraftExtensions]], UI off and the
+   * [[parallelismFloors]]; `extra` pairs are applied last, so they override
+   * any of those. Logs at WARN with [[quietRddWarnings]].
+   */
+  def session(cpus: Int, extra: Seq[(String, String)] = Nil): SparkSession = {
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+    (parallelismFloors ++ extra).foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    quietRddWarnings()
+    spark
+  }
+
+  /**
+   * The `SPARK_GRAFT_ONLY` query filter shared by Bench and Verify: a
+   * comma-separated list of name substrings (e.g. `q18,q37`); a query is
+   * selected when its name contains any of them. `None` selects every
+   * query, and so does a set-but-empty value (`""`, `" , "`): every name
+   * contains "", so treating it as a filter would run the full set while
+   * Bench routed its record to the `.partial` path.
+   */
+  def onlyFilter(raw: Option[String]): Option[String => Boolean] =
+    raw.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .filter(_.nonEmpty)
+      .map(terms => (name: String) => terms.exists(name.contains))
+
+  /**
+   * A JSON string literal: escapes backslash, quote and ALL control chars
+   * (< 0x20) — a tab or CR in hand-written oracle SQL would otherwise make the
+   * oracle compare's json.load fail and silently drop every result.
+   */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /**
    * Engine session defaults that remove two PARALLELISM FLOORS whose
@@ -76,7 +135,7 @@ object Harness {
    * timed region) — a query never reads a sink across invocations, so
    * dropping them changes nothing but the leak.
    */
-  def dropStreamSinks(spark: org.apache.spark.sql.SparkSession): Unit =
+  def dropStreamSinks(spark: SparkSession): Unit =
     spark.sessionState.catalog.getTempViewNames()
       .filter(_.startsWith("graft_stream_sink_"))
       .foreach(spark.catalog.dropTempView)

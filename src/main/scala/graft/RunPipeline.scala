@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sinks.ParquetSink
 
 /**
@@ -19,17 +17,7 @@ object RunPipeline {
       "usage: RunPipeline <inputDir> <stagingPath> <date> <resultsDir> [archiveDir]")
     val Array(inputDir, stagingPath, date, resultsDir) = args.take(4)
     val archiveDir = args.lift(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .config(Harness.parallelismFloors.head._1, Harness.parallelismFloors.head._2)
-      .config(Harness.parallelismFloors(1)._1, Harness.parallelismFloors(1)._2)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     val r = Pipeline.run(spark, inputDir, stagingPath, date,
       new ParquetSink(resultsDir), archiveDir)
     println(s"[pipeline] files=${r.inputFiles.length} parsed=${r.parsedRows} " +

@@ -204,22 +204,4 @@ object AnnLsh {
       // after which Spark correctly re-sorts — re-stage to restore it
       .sortBy("table", "bucket")
       .saveAsTable(table)
-
-  /** The [[Dedup.maintainDedupIndex]] loop for the LSH side: compact the
-    * [[buildLshIndex]] parquet dir's append-accreted small files and,
-    * when `bucketTable` is set, re-stage the [[stageLshBuckets]] table
-    * whole from the compacted index (restoring the fresh-stage
-    * single-file-per-bucket sort-elision). Probe results unchanged by
-    * construction; same swap contract as
-    * [[graft.stage.Staging.compactDir]]. */
-  def maintainLshIndex(
-      spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      bucketTable: Option[String] = None, numBuckets: Int = 256,
-      targetFileBytes: Long = 128L * 1024 * 1024)
-      : Option[graft.stage.Staging.CompactionStat] = {
-    val stat = graft.stage.Staging.compactDir(spark, indexPath, targetFileBytes)
-    bucketTable.foreach(t =>
-      stageLshBuckets(spark.read.parquet(indexPath), t, numBuckets))
-    stat
-  }
 }

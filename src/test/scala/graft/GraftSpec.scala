@@ -8,24 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole suite (creation is expensive). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // the engine's parallelism-floor defaults (Harness.parallelismFloors)
-      // so the suite exercises the same session shape the mains run
-      .config(Harness.parallelismFloors.head._1,
-        Harness.parallelismFloors.head._2)
-      .config(Harness.parallelismFloors(1)._1,
-        Harness.parallelismFloors(1)._2)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session(4)
 }
 
 abstract class GraftSpec extends AnyFunSuite {
