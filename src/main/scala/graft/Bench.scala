@@ -85,21 +85,7 @@ object Bench {
     val reruns = scala.collection.mutable.LinkedHashMap[String, (Double, Double)]()
     var rerunBudget = 8 // restarts are ~5 s each; a sweep-wide pathology
                         // should surface as a few entries, not consume the run
-    // Sweep order (r16 verdict item 5): the accumulation hypothesis says
-    // in-sweep inflation tracks POSITION (session-state buildup over 370+
-    // queries), not query identity. SPARK_GRAFT_SWEEP_ORDER=reverse runs
-    // the same set back-to-front so ONE comparison run can confirm or
-    // kill it — if totals match and per-query deltas move with position,
-    // the inflation is accumulation; if a band inflates regardless of
-    // position, it is real. Default name-sorted order stays the
-    // cross-round comparable series (pair a reverse run with
-    // SPARK_GRAFT_BENCH_BASELINE=/dev/null so the fresh-session guard
-    // does not replace the very sweep numbers under test).
-    val sweepOrder = sys.env.getOrElse("SPARK_GRAFT_SWEEP_ORDER", "sorted")
-    require(sweepOrder == "sorted" || sweepOrder == "reverse",
-      s"SPARK_GRAFT_SWEEP_ORDER must be sorted|reverse, got $sweepOrder")
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    val results = (if (sweepOrder == "reverse") ordered.reverse else ordered)
+    val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_(name)) }
       .flatMap { case (name, fn) =>
       def warmUp(): Unit =
@@ -158,25 +144,6 @@ object Bench {
       // Dropping the views releases the rows; queries never read a sink
       // across invocations (each drain makes a fresh one).
       Harness.dropStreamSinks(spark)
-      if (sys.env.contains("SPARK_GRAFT_DEBUG")) {
-        val sc = spark.sparkContext
-        val blocks = sc.getPersistentRDDs.values.map(_.partitions.length).sum
-        val cl = java.lang.management.ManagementFactory.getClassLoadingMXBean
-        val pools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
-        def poolUsed(prefix: String): Long = {
-          var used = 0L
-          pools.forEach(p => if (p.getName.startsWith(prefix)) used += p.getUsage.getUsed)
-          used
-        }
-        val temps = spark.sessionState.catalog.listTables("default").size
-        System.err.println(f"[bench-debug] $name%-26s ${secs.getOrElse(-1.0)}%7.2f s " +
-          f"rdds=${sc.getPersistentRDDs.size} parts=$blocks " +
-          f"mem=${(Runtime.getRuntime.totalMemory - Runtime.getRuntime.freeMemory) / (1 << 20)}MB " +
-          f"classes=${cl.getLoadedClassCount} " +
-          f"codecache=${poolUsed("CodeHeap") / (1 << 20)}MB " +
-          f"meta=${poolUsed("Metaspace") / (1 << 20)}MB " +
-          f"tables=$temps")
-      }
       // an error in either run disqualifies the timing: errors-only reporting
       if (errors.contains(name)) None else secs.map(name -> _)
     }
@@ -223,11 +190,8 @@ object Bench {
     val rerunsJson = reruns.map { case (k, (s, f)) =>
       s"${jstr(k)}:{" + s""""sweep_sec":${sec(s)},"fresh_sec":${sec(f)}}"""
     }.mkString("{", ",", "}")
-    val meta = s"""{"q37_cc_rounds":${graft.ext.Dedup.lastComponentsRounds.get()},"job_floor_sec":${sec(jobFloor)},"sweep_order":${jstr(sweepOrder)},"fresh_session_reruns":$rerunsJson,"notes":$notes}"""
-    // a reverse-order experiment must never overwrite the durable
-    // forward series the cross-round drift compare reads
-    val out = if (only.isEmpty && sweepOrder == "sorted") base
-      else base + ".partial"
+    val meta = s"""{"q37_cc_rounds":${graft.ext.Dedup.lastComponentsRounds.get()},"job_floor_sec":${sec(jobFloor)},"fresh_session_reruns":$rerunsJson,"notes":$notes}"""
+    val out = if (only.isEmpty) base else base + ".partial"
     // total_sec and n_queries lead the line (head-truncation-proof), and
     // the durable path tells a reader where the untruncated copy lives
     val line =

@@ -1,16 +1,20 @@
 package graft
 
 /** Dev tool: run one declared query N times with timing + formatted plan.
-  * Usage: runMain graft.Explain <queryKey> [sfDir] [reps]
+  * Usage: runMain graft.Explain <queryKey> [sfDir] [reps]; with reps = 0
+  * it prints only the plan.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
+    val usage = "usage: Explain <queryKey> [sfDir] [reps]"
+    require(args.length >= 1 && args.length <= 3, usage)
     val key   = args(0)
+    val fn = SparkEntry.queries.getOrElse(key,
+      throw new IllegalArgumentException(s"unknown query '$key'; $usage"))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps  = if (args.length > 2) args(2).toInt else 3
     val spark = Harness.session(Harness.cpus,
       sys.env.get("SPARK_GRAFT_EXTRA_CONF").map(extraConf).getOrElse(Nil))
-    val fn = SparkEntry.queries(key)
     (1 to reps).foreach { i =>
       val t0 = System.nanoTime()
       Harness.consume(fn(spark, sfDir)) // same action Bench times

@@ -20,16 +20,15 @@ object Harness {
 
   /**
    * The engine session on `local[cpus]`: one shuffle partition per core,
-   * UTC, [[graft.functions.GraftExtensions]], UI off and the
-   * [[parallelismFloors]]; `extra` pairs are applied last, so they override
-   * any of those. Logs at WARN with [[quietRddWarnings]].
+   * UTC, UI off and the [[parallelismFloors]]; `extra` pairs are applied
+   * last, so they override any of those. Logs at WARN with
+   * [[quietRddWarnings]].
    */
   def session(cpus: Int, extra: Seq[(String, String)] = Nil): SparkSession = {
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
     (parallelismFloors ++ extra).foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()

@@ -7,6 +7,7 @@ import java.nio.file.{Files, Paths}
   * walks the dumps that exist. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    require(args.length == 2, "usage: Verify <sfDir> <outDir>")
     val Array(sfDir, outDir) = args
     val spark = Harness.session(Harness.cpus)
     new java.io.File(outDir).mkdirs()

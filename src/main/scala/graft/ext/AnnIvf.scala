@@ -1,7 +1,10 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
+
+import graft.functions.{IvfCentroidSet, IvfNearestCells, IvfNearestCellsBc}
 
 /**
  * IVF (inverted-file) approximate nearest neighbors — the data-adaptive
@@ -80,11 +83,11 @@ object AnnIvf {
     * matrix never outgrows the plan. */
   private[ext] def nearestCells(vec: Column, cents: Cents, nprobe: Int): Column =
     if (cents.sizeIs > LiteralCentroidCeiling) nearestCellsBcast(vec, cents, nprobe)
-    else call_function("graft_ivf_cells", vec,
-      typedLit(cents.map(_._1)),
-      typedLit(cents.flatMap(_._2)),
-      typedLit(cents.map(_._3)),
-      lit(cents.head._2.length), lit(nprobe))
+    // primitive-array-backed fields: a boxed Seq would put k·dim Float
+    // objects into every serialized plan copy
+    else column(IvfNearestCells(expression(vec),
+      cents.map(_._1).toArray.toSeq, cents.flatMap(_._2).toArray.toSeq,
+      cents.map(_._3).toArray.toSeq, cents.head._2.length, nprobe))
 
   /** [[nearestCells]]'s broadcast-carrier form, unconditionally: the
     * centroid matrix ships once per executor as a
@@ -92,17 +95,15 @@ object AnnIvf {
     * class init. Exposed (package-private) so the spec can pin
     * bit-equality against the literal path at sub-ceiling k. */
   private[ext] def nearestCellsBcast(vec: Column, cents: Cents, nprobe: Int): Column = {
-    import org.apache.spark.sql.{GraftColumnBridge => ExpressionUtils}
     val dim = cents.head._2.length
     val flat = new Array[Float](cents.length * dim)
     cents.iterator.zipWithIndex.foreach { case ((_, v, _), i) =>
       v.copyToArray(flat, i * dim)
     }
-    val payload = graft.functions.IvfCentroidSet(
+    val payload = IvfCentroidSet(
       cents.map(_._1).toArray, flat, cents.map(_._3).toArray, dim)
     val bc = org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(payload)
-    ExpressionUtils.column(graft.functions.IvfNearestCellsBc(
-      ExpressionUtils.expression(vec), bc, nprobe))
+    column(IvfNearestCellsBc(expression(vec), bc, nprobe))
   }
 
   /** One `struct(dist, cell)` per centroid, fully UNROLLED: every distance

@@ -1,8 +1,11 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+
+import graft.functions.LshBuckets
 
 /**
  * Bucketed approximate nearest neighbors via sign-random-projection LSH
@@ -56,8 +59,8 @@ object AnnLsh {
       df: DataFrame, idCol: String, vecCol: String, dim: Int,
       bitsPerTable: Int, numTables: Int, seed: Long = 42L): DataFrame =
     df.select(col(idCol),
-        posexplode(call_function("graft_lsh_buckets", col(vecCol),
-          lit(bitsPerTable), lit(numTables), lit(dim), lit(seed)))
+        posexplode(column(LshBuckets(expression(col(vecCol)),
+          bitsPerTable, numTables, dim, seed)))
           .as(Seq("table", "bucket")))
 
   /** The probe/score core shared by [[annTopK]] and [[annTopKIndexed]]
@@ -147,8 +150,8 @@ object AnnLsh {
       bitsPerTable: Int = 4, numTables: Int = 32, seed: Long = 42L): DataFrame =
     corpus.select(
       col("vec_id").as("nn_id"),
-      call_function("graft_lsh_buckets", col("embedding"),
-        lit(bitsPerTable), lit(numTables), lit(dim), lit(seed)).as("bkts"),
+      column(LshBuckets(expression(col("embedding")),
+        bitsPerTable, numTables, dim, seed)).as("bkts"),
       col("embedding").as("nn_emb"),
       Similarity.norm(col("embedding")).as("nn_n"))
 

@@ -1,8 +1,11 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.functions.IvfNearestCells
 
 /**
  * Product quantization (PQ) with asymmetric-distance scoring — the
@@ -95,12 +98,10 @@ object AnnPq {
   /** The native nearest-sub-centroid call for subspace `j` of `vec` under
     * `book`: code ids are 0..ksub-1, metric squared-L2. */
   private def subCode(vec: Column, book: Seq[Seq[Float]], j: Int, subDim: Int): Column =
-    call_function("graft_ivf_cells",
-      slice(vec, j * subDim + 1, subDim),
-      typedLit(book.indices.map(_.toLong)),
-      typedLit(book.flatten),
-      typedLit(book.map(jvmNorm)),
-      lit(subDim), lit(1), lit("l2")).getItem(0)
+    // primitive-array-backed fields, as in AnnIvf.nearestCells
+    column(IvfNearestCells(expression(slice(vec, j * subDim + 1, subDim)),
+      book.indices.map(_.toLong).toArray.toSeq, book.flatten.toArray.toSeq,
+      book.map(jvmNorm).toArray.toSeq, subDim, 1, "l2")).getItem(0)
 
   /** All m sub-codes of `vec` as one `array<bigint>` column. */
   private def codesOf(vec: Column, cb: Codebooks): Column =

@@ -1,6 +1,9 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, ScalarSubquery}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 
 /**
@@ -135,13 +138,12 @@ object Contamination {
     // lifetime (the r13 advice), in exactly the repeated-bench sessions
     // the subquery carrier was introduced for.
     val bloomAgg = benchShingles
-      .select(call_function("graft_bloom_agg", xxhash64(col("s")),
-        lit(expectedItems), lit(fpBits)).as("bf"))
-    val mightContain = call_function("graft_might_contain",
-      org.apache.spark.sql.GraftColumnBridge.column(
-        org.apache.spark.sql.catalyst.expressions.ScalarSubquery(
-          bloomAgg.queryExecution.analyzed)),
-      xxhash64(col("s")))
+      .select(column(new BloomFilterAggregate(expression(xxhash64(col("s"))),
+        Literal(expectedItems), Literal(fpBits))
+        .toAggregateExpression()).as("bf"))
+    val mightContain = column(BloomFilterMightContain(
+      ScalarSubquery(bloomAgg.queryExecution.analyzed),
+      expression(xxhash64(col("s")))))
 
     // materialized: the totals aggregate and the pruned verify branch both
     // read it — uncut, each branch is a full redundant corpus text scan,

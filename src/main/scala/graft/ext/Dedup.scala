@@ -1,7 +1,10 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
+
+import graft.functions.{MinHashSignature, WhitespaceTokens, WordShingles}
 
 /**
  * Result of [[Dedup.componentsResult]]: the label table `(id, component)`,
@@ -84,8 +87,7 @@ object Dedup {
     // token array via the native graft_tokens scan (no regex split);
     // graft_shingles' own empty/null-token filter makes the pre-filtered
     // array value-identical to feeding it the raw split (spec-pinned)
-    call_function("graft_shingles",
-      call_function("graft_tokens", text), lit(n))
+    column(WordShingles(WhitespaceTokens(expression(text)), n))
 
   /** HOF formulation of [[shingles]] — kept as the engine-agnostic
     * semantics reference the spec checks the native expression against
@@ -117,7 +119,7 @@ object Dedup {
    * O(|shingles| × k × |s|) (spec-asserted bit-equal).
    */
   def minhashSignature(shingleCol: Column, numHashes: Int): Column =
-    call_function("graft_minhash", shingleCol, lit(numHashes))
+    column(MinHashSignature(expression(shingleCol), numHashes))
 
   /** HOF formulation of [[minhashSignature]] — kept as the engine-agnostic
     * semantics reference the spec checks the native expression against. */

@@ -1,7 +1,10 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
+
+import graft.functions.JaroWinkler
 
 /**
  * Edit-distance record linkage over document heads: find pairs of
@@ -166,8 +169,8 @@ object FuzzyJoin {
       .filter(col("_id_a") < col("_id_b"))
       .select(col("_id_a"), col("_id_b"), col("_ha"), col("_hb"))
       .distinct() // a pair blocked by both passes scores once
-      .withColumn("jw", round(call_function("graft_jaro_winkler",
-        col("_ha"), col("_hb")), 6))
+      .withColumn("jw", round(column(JaroWinkler(
+        expression(col("_ha")), expression(col("_hb")))), 6))
       .filter(col("jw") >= minSim)
       .select(col("_id_a").as(idCol), col("_id_b").as("dup_id"), col("jw"))
   }

@@ -1,8 +1,11 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+
+import graft.functions.TriangleCredits
 
 /**
  * Link analysis over an edge list — graph centrality as a first-class
@@ -271,8 +274,9 @@ object GraphOps {
     // end-to-end (partial map-side aggregation into node-sized partials).
     o.join(adj.select(col("x"), col("_nb").as("_nx")), Seq("x"))
       .join(adj.select(col("x").as("y"), col("_nb").as("_ny")), Seq("y"))
-      .select(explode(call_function("graft_tri_credits",
-        col("x"), col("y"), col("_nx"), col("_ny"))).as("node"))
+      .select(explode(column(TriangleCredits(expression(col("x")),
+        expression(col("y")), expression(col("_nx")), expression(col("_ny")))))
+        .as("node"))
       .groupBy("node").agg(count(lit(1)).as("n_tri"))
   }
 

@@ -1,7 +1,10 @@
 package graft.ext
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
+
+import graft.functions.UnicodeNormalize
 
 /**
  * PII scrubbing for log and text corpora — the anonymization pass that runs
@@ -54,5 +57,5 @@ object Scrub {
    * fuses into the surrounding scan.
    */
   def normalize(text: Column, form: String = "NFC"): Column =
-    call_function("graft_normalize", text, lit(form))
+    column(UnicodeNormalize(expression(text), form))
 }

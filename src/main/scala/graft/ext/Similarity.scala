@@ -1,8 +1,11 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+
+import graft.functions.FloatDotProduct
 
 /**
  * Embedding similarity search over `array<float>` columns, built from
@@ -37,11 +40,9 @@ object Similarity {
     * [[dot]] (ascending-index double accumulation), ~none of its cost:
     * higher-order functions evaluate interpreted and allocate a zipped
     * array per pair, while [[graft.functions.FloatDotProduct]] emits a
-    * tight primitive loop inside whole-stage codegen. Requires the
-    * `graft.functions.GraftExtensions` session extension (all graft entry
-    * points enable it). */
+    * tight primitive loop inside whole-stage codegen. */
   def nativeDot(a: Column, b: Column): Column =
-    call_function("graft_dot", a, b)
+    column(FloatDotProduct(expression(a), expression(b)))
 
   /** Vector norm via the codegen'd dot (bit-identical to `sqrt(dot(a,a))`
     * — FloatDotProductSpec pins the twins — but stays inside whole-stage

@@ -1,7 +1,10 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
+
+import graft.functions.SpanWindowKey
 
 /**
  * Exact substring (duplicate-span) detection — the token-window form of
@@ -59,8 +62,8 @@ object SpanDedup {
       .select(col(idCol), col("_toks"),
         explode(sequence(lit(1L), col("_n") - (spanLen - 1).toLong)).as("pos"))
       .select(col(idCol), col("pos"),
-        call_function("graft_window_key", col("_toks"), col("pos"), lit(spanLen))
-          .as("wkey"))
+        column(SpanWindowKey(expression(col("_toks")), expression(col("pos")),
+          spanLen)).as("wkey"))
   }
 
   /** Built-in-only formulation of the window key — the engine-agnostic

@@ -1,8 +1,13 @@
 package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.functions.{ClippedOverlap, DeflateLength, LangId, MarkerHits,
+  SimHash48, SpanWindowKey, TokenLengthSum, TopBigramCount, TopTokenCount,
+  VocabEncodeBc, WhitespaceTokens, WhitespaceTokensNoFuse}
 
 /**
  * Text-analysis operators for a training-data pipeline (SURVEY.md §2.11 /
@@ -27,7 +32,7 @@ object TextOps {
     * that sat under every text operator in the engine ([[tokensHof]] is
     * the semantics twin the spec asserts full equality against). */
   def tokens(text: Column): Column =
-    call_function("graft_tokens", text)
+    column(WhitespaceTokens(expression(text)))
 
   /** HOF formulation of [[tokens]] — kept as the engine-agnostic
     * semantics reference the spec checks the native expression against. */
@@ -43,7 +48,7 @@ object TextOps {
     * Measured at sf1: q78 37 s inline-fused → 28 s with this, q24
     * unchanged. */
   private def tokensNoFuse(text: Column): Column =
-    call_function("graft_tokens_nf", text)
+    column(WhitespaceTokensNoFuse(expression(text)))
 
   /**
    * Overlapping token-window chunking — the context-window prep step for
@@ -106,7 +111,7 @@ object TextOps {
    * measured 170 µs/row at the r13 sf1 sweep before this lift.)
    */
   def langId(text: Column): Column =
-    coalesce(call_function("graft_langid", text), lit("und"))
+    coalesce(column(LangId(expression(text))), lit("und"))
 
   /** Relational formulation of [[langId]] — the engine-agnostic
     * semantics reference the spec checks the native expression
@@ -138,9 +143,9 @@ object TextOps {
     // pins them against the interpreted HOF twins): the set-probe filter
     // and the aggregate lambda were the last per-row CodegenFallbacks in
     // the quality screen
-    val stopRatio = call_function("graft_marker_hits", toks,
-      typedLit(langMarkers.toMap.apply("en"))).cast("double") / nTok
-    val sumLen = call_function("graft_len_sum", toks)
+    val stopRatio = column(MarkerHits(expression(toks),
+      langMarkers.toMap.apply("en"))).cast("double") / nTok
+    val sumLen = column(TokenLengthSum(expression(toks)))
     val meanLen = sumLen.cast("double") / nTok
     when(size(toks) === 0, lit(0.0d)).otherwise(round(
       least(nTok / 100.0d, lit(1.0d)) * 0.4d
@@ -185,7 +190,7 @@ object TextOps {
     * row instead of the five interpreted HOF trees of
     * [[topBigramCountHof]], its semantics twin (spec-asserted equal). */
   def topBigramCount(text: Column): Column =
-    call_function("graft_top_bigram", tokensNoFuse(text))
+    column(TopBigramCount(expression(tokensNoFuse(text))))
 
   /** HOF formulation of [[topBigramCount]] — kept as the engine-agnostic
     * semantics reference the spec checks the native expression against. */
@@ -201,7 +206,7 @@ object TextOps {
     * [[topTokenCountHof]], its semantics twin (spec-asserted equal,
     * including the empty-array → NULL corner). */
   def topTokenCount(toks: Column): Column =
-    call_function("graft_top_token", toks)
+    column(TopTokenCount(expression(toks)))
 
   /** HOF formulation of [[topTokenCount]] — kept as the engine-agnostic
     * semantics reference the spec checks the native expression against:
@@ -549,7 +554,7 @@ object TextOps {
     Materialize.fan(df.select(col(idCol), col(textCol)))
       .select(col(idCol), tokens(col(textCol)).as("tk"))
       .filter(size(col("tk")) > 0)
-      .select(col(idCol), call_function("graft_simhash", col("tk")).as("simhash"))
+      .select(col(idCol), column(SimHash48(expression(col("tk")))).as("simhash"))
 
   /** Relational formulation of [[simhash]] — explode tokens, one md5 per
     * token, 48 map-side partial sums in one hash aggregate (O(tokens) rows
@@ -672,7 +677,7 @@ object TextOps {
    */
   def compressionRatio(text: Column, level: Int = 6): Column =
     round(
-      call_function("graft_deflate_len", text, lit(level)).cast("double") /
+      column(DeflateLength(expression(text), level)).cast("double") /
         nullif(octet_length(text).cast("double"), lit(0.0)), 6)
 
   /**
@@ -789,11 +794,9 @@ object TextOps {
     * to the literal path at sub-ceiling sizes. */
   private[ext] def bcastIds(
       entries: Map[String, Long]): Column => Column = {
-    import org.apache.spark.sql.{GraftColumnBridge => ExpressionUtils}
     val bc = org.apache.spark.sql.SparkSession.active
       .sparkContext.broadcast(entries)
-    toks => ExpressionUtils.column(graft.functions.VocabEncodeBc(
-      ExpressionUtils.expression(toks), bc))
+    toks => column(VocabEncodeBc(expression(toks), bc))
   }
 
   /** [[encodeWithVocab]]'s shared projection over either id transport. */
@@ -929,8 +932,8 @@ object TextOps {
           .filter(size(col("_tk")) >= gramN)
           .select(col("_tk"), explode(
             sequence(lit(1), size(col("_tk")) - (gramN - 1))).as("_pos"))
-          .select(call_function("graft_window_key",
-            col("_tk"), col("_pos"), lit(gramN)).as("_t"))
+          .select(column(SpanWindowKey(
+            expression(col("_tk")), expression(col("_pos")), gramN)).as("_t"))
           .groupBy(col("_t")).agg(count(lit(1)).as("_r"))
     // ONE corpus pass (guide §7.2, duplicated subtrees): `fof` feeds both
     // sides of the shift self-join and the total, so without a cut the
@@ -1357,8 +1360,8 @@ object TextOps {
         // passing nullable text would see clip flip 0 → NULL (the r13
         // advice; the ratio columns were never affected, their n_a/n_b
         // guards already gate NULL sides)
-        coalesce(call_function("graft_clipped_overlap",
-          col("_ta"), col("_tb"), lit(n)), lit(0L)).as("clip"))
+        coalesce(column(ClippedOverlap(
+          expression(col("_ta")), expression(col("_tb")), n)), lit(0L)).as("clip"))
     val r = col("clip").cast("double") / col("n_a").cast("double")
     val p = col("clip").cast("double") / col("n_b").cast("double")
     scored

@@ -4,7 +4,10 @@ import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
+
+import graft.functions.PrefixDots
 
 /**
  * Embedding-column preprocessing — the projections a vector corpus runs
@@ -360,8 +363,7 @@ object VectorOps {
     // prefix with NULL sim, not zero rows), and posexplode consumes the
     // generator ONCE — no per-prefix re-evaluation of the dot pass.
     val pd = coalesce(
-      call_function("graft_prefix_dots", col("qv"), col("cv"),
-        array(pfx.map(m => lit(m)): _*)),
+      column(PrefixDots(expression(col("qv")), expression(col("cv")), pfx)),
       array_repeat(lit(null).cast("double"), pfx.size))
     val dimsOf = element_at(array(pfx.map(m => lit(m)): _*), col("_i") + 1)
     val qnOf = element_at(array(pfx.map(m => col(s"_qn$m")): _*), col("_i") + 1)

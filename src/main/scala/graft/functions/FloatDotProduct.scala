@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -80,277 +78,4 @@ case class FloatDotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): FloatDotProduct =
     copy(left = newLeft, right = newRight)
-}
-
-/**
- * Session extension registering the engine's native functions — enable
- * with `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
- * (done by every graft entry point and the test harness). Queries call it
- * as `graft_dot(a, b)` / `functions.call_function("graft_dot", a, b)`.
- */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    // arity is checked here, not by indexing into children: an extra
-    // argument would otherwise be SILENTLY discarded (wrong-but-plausible
-    // results for a user who thought they passed an option) and a missing
-    // one would surface as a bare NoSuchElementException
-    ext.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[FloatDotProduct].getCanonicalName, "graft_dot"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => FloatDotProduct(a, b)
-        case _ => throw new IllegalArgumentException(
-          s"graft_dot requires exactly 2 arguments, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSignature].getCanonicalName, "graft_minhash"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, k) if k.foldable && k.dataType == IntegerType =>
-          MinHashSignature(a, k.eval().asInstanceOf[Int])
-        case Seq(_, _) => throw new IllegalArgumentException(
-          "graft_minhash requires a literal integer numHashes as argument 2")
-        case _ => throw new IllegalArgumentException(
-          s"graft_minhash requires exactly 2 arguments, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_lsh_buckets"),
-      new ExpressionInfo(classOf[LshBuckets].getCanonicalName, "graft_lsh_buckets"),
-      (children: Seq[Expression]) => children match {
-        case Seq(v, bits, tables, dim, seed)
-            if Seq(bits, tables, dim).forall(e => e.foldable && e.dataType == IntegerType)
-              && seed.foldable && seed.dataType == LongType =>
-          LshBuckets(v,
-            bits.eval().asInstanceOf[Int], tables.eval().asInstanceOf[Int],
-            dim.eval().asInstanceOf[Int], seed.eval().asInstanceOf[Long])
-        case c if c.size == 5 => throw new IllegalArgumentException(
-          "graft_lsh_buckets requires literal (int bits, int tables, int dim, " +
-            "bigint seed) as arguments 2-5")
-        case _ => throw new IllegalArgumentException(
-          s"graft_lsh_buckets requires exactly 5 arguments, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getCanonicalName, "graft_shingles"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, k) if k.foldable && k.dataType == IntegerType =>
-          WordShingles(a, k.eval().asInstanceOf[Int])
-        case Seq(_, _) => throw new IllegalArgumentException(
-          "graft_shingles requires a literal integer n as argument 2")
-        case _ => throw new IllegalArgumentException(
-          s"graft_shingles requires exactly 2 arguments, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash48].getCanonicalName, "graft_simhash"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => SimHash48(c)
-        case _ => throw new IllegalArgumentException(
-          s"graft_simhash requires exactly 1 argument, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_deflate_len"),
-      new ExpressionInfo(classOf[DeflateLength].getCanonicalName,
-        "graft_deflate_len"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => DeflateLength(c, 6)
-        case Seq(c, l) if l.foldable && l.dataType == IntegerType =>
-          DeflateLength(c, l.eval().asInstanceOf[Int])
-        case Seq(_, _) => throw new IllegalArgumentException(
-          "graft_deflate_len requires a literal integer level as argument 2")
-        case _ => throw new IllegalArgumentException(
-          s"graft_deflate_len requires 1 or 2 arguments, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_normalize"),
-      new ExpressionInfo(classOf[UnicodeNormalize].getCanonicalName,
-        "graft_normalize"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => UnicodeNormalize(c, "NFC")
-        case Seq(c, f) if f.foldable && f.dataType == StringType =>
-          UnicodeNormalize(c, String.valueOf(f.eval()))
-        case Seq(_, _) => throw new IllegalArgumentException(
-          "graft_normalize requires a literal string form as argument 2")
-        case _ => throw new IllegalArgumentException(
-          s"graft_normalize requires 1 or 2 arguments, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getCanonicalName,
-        "graft_jaro_winkler"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => JaroWinkler(a, b)
-        case _ => throw new IllegalArgumentException(
-          s"graft_jaro_winkler requires exactly 2 arguments, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_langid"),
-      new ExpressionInfo(classOf[LangId].getCanonicalName, "graft_langid"),
-      (children: Seq[Expression]) => children match {
-        case Seq(t) => LangId(t)
-        case _ => throw new IllegalArgumentException(
-          s"graft_langid requires exactly 1 argument, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_len_sum"),
-      new ExpressionInfo(classOf[TokenLengthSum].getCanonicalName,
-        "graft_len_sum"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => TokenLengthSum(c)
-        case _ => throw new IllegalArgumentException(
-          s"graft_len_sum requires exactly 1 argument, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_marker_hits"),
-      new ExpressionInfo(classOf[MarkerHits].getCanonicalName,
-        "graft_marker_hits"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, m) if m.foldable &&
-            m.dataType.isInstanceOf[ArrayType] =>
-          val arr = m.eval()
-            .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-          MarkerHits(a, (0 until arr.numElements())
-            .map(i => arr.getUTF8String(i).toString))
-        case Seq(_, _) => throw new IllegalArgumentException(
-          "graft_marker_hits requires a literal array<string> marker " +
-            "list as argument 2")
-        case _ => throw new IllegalArgumentException(
-          s"graft_marker_hits requires exactly 2 arguments, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_tokens"),
-      new ExpressionInfo(classOf[WhitespaceTokens].getCanonicalName,
-        "graft_tokens"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => WhitespaceTokens(c)
-        case _ => throw new IllegalArgumentException(
-          s"graft_tokens requires exactly 1 argument, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_tokens_nf"),
-      new ExpressionInfo(classOf[WhitespaceTokensNoFuse].getCanonicalName,
-        "graft_tokens_nf"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => WhitespaceTokensNoFuse(c)
-        case _ => throw new IllegalArgumentException(
-          s"graft_tokens_nf requires exactly 1 argument, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_top_token"),
-      new ExpressionInfo(classOf[TopTokenCount].getCanonicalName,
-        "graft_top_token"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => TopTokenCount(c)
-        case _ => throw new IllegalArgumentException(
-          s"graft_top_token requires exactly 1 argument, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_clipped_overlap"),
-      new ExpressionInfo(
-        classOf[ClippedOverlap].getCanonicalName, "graft_clipped_overlap"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b) => ClippedOverlap(a, b, 1)
-        case Seq(a, b, n) if n.foldable && n.dataType == IntegerType =>
-          ClippedOverlap(a, b, n.eval().asInstanceOf[Int])
-        case Seq(_, _, _) => throw new IllegalArgumentException(
-          "graft_clipped_overlap requires a literal integer gram order as argument 3")
-        case _ => throw new IllegalArgumentException(
-          s"graft_clipped_overlap requires 2 or 3 arguments, got ${children.size}")
-      }))
-    // Spark's Bloom sketch pair (the machinery behind runtime row-level
-    // filtering) lives in the INTERNAL function registry, not the
-    // resolvable one — expose both sides for the Bloom-pruned
-    // contamination screen. Thin passthroughs: the expressions are
-    // Spark's own.
-    ext.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate]
-          .getCanonicalName, "graft_bloom_agg"),
-      (children: Seq[Expression]) => children match {
-        case Seq(v, items, bits) =>
-          new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-            v, items, bits).toAggregateExpression()
-        case _ => throw new IllegalArgumentException(
-          s"graft_bloom_agg requires exactly 3 arguments, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain]
-          .getCanonicalName, "graft_might_contain"),
-      (children: Seq[Expression]) => children match {
-        case Seq(bf, v) =>
-          org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(bf, v)
-        case _ => throw new IllegalArgumentException(
-          s"graft_might_contain requires exactly 2 arguments, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_ivf_cells"),
-      new ExpressionInfo(classOf[IvfNearestCells].getCanonicalName, "graft_ivf_cells"),
-      (children: Seq[Expression]) => children match {
-        // 6-arg form: cosine. Optional 7th literal string selects the
-        // metric ('cosine' | 'l2' | 'ip' — the PQ paths use 'l2').
-        case v +: cells +: flat +: norms +: dim +: nprobe +: rest
-            if rest.size <= 1
-              && Seq(cells, flat, norms).forall(_.foldable)
-              && Seq(dim, nprobe).forall(e => e.foldable && e.dataType == IntegerType)
-              && rest.forall(e => e.foldable && e.dataType == StringType) =>
-          IvfNearestCells(v,
-            cells.eval().asInstanceOf[ArrayData].toLongArray().toSeq,
-            flat.eval().asInstanceOf[ArrayData].toFloatArray().toSeq,
-            norms.eval().asInstanceOf[ArrayData].toDoubleArray().toSeq,
-            dim.eval().asInstanceOf[Int], nprobe.eval().asInstanceOf[Int],
-            rest.headOption.map(_.eval().toString).getOrElse("cosine"))
-        case c if c.size == 6 || c.size == 7 => throw new IllegalArgumentException(
-          "graft_ivf_cells requires literal (array<bigint> cells, array<float> " +
-            "matrix, array<double> norms, int dim, int nprobe[, string metric]) " +
-            "as arguments 2-7")
-        case _ => throw new IllegalArgumentException(
-          s"graft_ivf_cells requires 6 or 7 arguments, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_top_bigram"),
-      new ExpressionInfo(classOf[TopBigramCount].getCanonicalName, "graft_top_bigram"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => TopBigramCount(c)
-        case _ => throw new IllegalArgumentException(
-          s"graft_top_bigram requires exactly 1 argument, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_tri_credits"),
-      new ExpressionInfo(classOf[TriangleCredits].getCanonicalName,
-        "graft_tri_credits"),
-      (children: Seq[Expression]) => children match {
-        case Seq(x, y, nx, ny) => TriangleCredits(x, y, nx, ny)
-        case _ => throw new IllegalArgumentException(
-          s"graft_tri_credits requires exactly 4 arguments, got ${children.size}")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_prefix_dots"),
-      new ExpressionInfo(classOf[PrefixDots].getCanonicalName,
-        "graft_prefix_dots"),
-      (children: Seq[Expression]) => children match {
-        case Seq(a, b, pfx)
-            if pfx.foldable && (pfx.dataType match {
-              case ArrayType(IntegerType, _) => true
-              case _ => false
-            }) =>
-          PrefixDots(a, b,
-            pfx.eval().asInstanceOf[ArrayData].toIntArray().toSeq)
-        case _ => throw new IllegalArgumentException(
-          "graft_prefix_dots requires (array<float>, array<float>, " +
-            s"literal array<int> prefixes), got ${children.size} argument(s)")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("graft_window_key"),
-      new ExpressionInfo(classOf[SpanWindowKey].getCanonicalName, "graft_window_key"),
-      (children: Seq[Expression]) => children match {
-        case Seq(toks, pos, n) if n.foldable && n.dataType == IntegerType =>
-          SpanWindowKey(toks, pos, n.eval().asInstanceOf[Int])
-        case _ => throw new IllegalArgumentException(
-          "graft_window_key requires (array<string> toks, int|long pos, " +
-            s"literal int n), got ${children.size} argument(s)")
-      }))
-  }
 }

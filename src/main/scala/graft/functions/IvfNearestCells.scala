@@ -29,8 +29,8 @@ import org.apache.spark.sql.types._
  * unrolled form, which AnnIvf keeps as the semantics reference).
  *
  * Three metrics share the one selection loop (see
- * [[IvfNearestCells.metricCodes]]): `cosine` (the default, and the only
- * one the 6-argument SQL form exposes), `l2` (squared euclidean — the PQ
+ * [[IvfNearestCells.metricCodes]]): `cosine` (the default, used by the
+ * IVF paths), `l2` (squared euclidean — the PQ
  * sub-codebook metric), and `ip` (negated inner product).
  *
  * Cosine semantics twin the unrolled form, field for field:

@@ -188,19 +188,6 @@ object StreamHarness {
       // cannot leak the stream's value into whatever runs next
       wanted.foreach(_ => spark.conf.set("spark.sql.shuffle.partitions", prevParts))
     }
-    // Measurement hook (guide §1): per-micro-batch duration breakdown +
-    // state-operator commit times, to stderr only when asked for.
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DIAG")) {
-      q.recentProgress.foreach { p =>
-        val dur = p.durationMs
-        val st = p.stateOperators.map(s =>
-          s"commit=${s.commitTimeMs}ms rows=${s.numRowsTotal} " +
-            s"upd=${s.numRowsUpdated} mem=${s.memoryUsedBytes}").mkString("; ")
-        System.err.println(
-          s"[stream-diag] $name batch=${p.batchId} rows=${p.numInputRows} " +
-            s"durationMs=$dur state{$st}")
-      }
-    }
     val dataBatches = q.recentProgress.count(_.numInputRows > 0)
     require(dataBatches >= minDataBatches,
       s"streaming run degenerated to $dataBatches data micro-batch(es); " +

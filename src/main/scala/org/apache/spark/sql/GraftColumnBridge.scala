@@ -3,13 +3,16 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /**
- * Column ⇄ Expression bridge for graft's expressions that cannot travel
- * through the function registry: [[graft.functions.IvfNearestCellsBc]]
- * (its `Broadcast` handle is a runtime object, not a SQL argument, so
- * `call_function` — the carrier every other graft native expression
- * uses — cannot construct it) and the catalog-free `ScalarSubquery`
- * carrier in [[graft.ext.Contamination]] (built directly on an analyzed
- * plan, so no per-call temp view accumulates in the session catalog).
+ * Column ⇄ Expression bridge: the one way a graft native expression gets
+ * into a plan. A caller builds the case class from typed Scala values —
+ * `column(MarkerHits(expression(toks), markers))` — so arity and
+ * literal-ness are checked by the compiler, and each expression's own
+ * `require`s check the values. The same carrier takes the runtime
+ * objects no SQL argument could hold: the `Broadcast` handles of
+ * [[graft.functions.IvfNearestCellsBc]] and [[graft.functions.VocabEncodeBc]],
+ * and the catalog-free `ScalarSubquery` in [[graft.ext.Contamination]]
+ * (built directly on an analyzed plan, so no per-call temp view
+ * accumulates in the session catalog).
  *
  * Lives in `org.apache.spark.sql` because the canonical helpers
  * (`classic.ExpressionUtils.column/expression`) are `private[sql]` in

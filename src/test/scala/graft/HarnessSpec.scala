@@ -8,13 +8,13 @@ import org.json4s.jackson.JsonMethods
   * `SPARK_GRAFT_EXTRA_CONF` parse. */
 class HarnessSpec extends GraftSpec {
 
-  test("session: local[cpus], one shuffle partition per core, UTC, the " +
-    "engine extensions and both parallelism floors") {
+  test("session: local[cpus], one shuffle partition per core, UTC, no " +
+    "session extensions and both parallelism floors") {
     val conf = spark.conf
     assert(spark.sparkContext.master == "local[4]")
     assert(conf.get("spark.sql.shuffle.partitions") == "4")
     assert(conf.get("spark.sql.session.timeZone") == "UTC")
-    assert(conf.get("spark.sql.extensions") == "graft.functions.GraftExtensions")
+    assert(conf.getOption("spark.sql.extensions").isEmpty)
     assert(conf.get("spark.ui.enabled") == "false")
     Harness.parallelismFloors.foreach { case (k, v) => assert(conf.get(k) == v) }
   }
@@ -47,6 +47,16 @@ class HarnessSpec extends GraftSpec {
     assert(Explain.extraConf("k=v=w") == Seq("k" -> "v=w"))
     assert(Explain.extraConf(" ; ") == Nil)
     assert(Explain.extraConf(" x = 1 ;y=2") == Seq("x" -> "1", "y" -> "2"))
+  }
+
+  test("Verify and Explain reject bad arguments with their usage line") {
+    def usage(main: Array[String] => Unit, name: String, args: String*) = {
+      val e = intercept[IllegalArgumentException](main(args.toArray))
+      assert(e.getMessage.contains(s"usage: $name"), e.getMessage)
+    }
+    usage(Verify.main, "Verify", "x")
+    usage(Explain.main, "Explain")
+    usage(Explain.main, "Explain", "no_such_query")
   }
 
   test("Explain.extraConf: a segment without = names itself") {

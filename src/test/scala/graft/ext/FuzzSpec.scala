@@ -1,6 +1,8 @@
 package graft.ext
 
 import graft.GraftSpec
+import graft.functions.TopBigramCount
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -69,7 +71,7 @@ class FuzzSpec extends GraftSpec {
     }
     val got = all.zipWithIndex.map { case (t, i) => (i, t) }
       .toDF("i", "toks")
-      .select($"i", call_function("graft_top_bigram", $"toks").as("c"))
+      .select($"i", column(TopBigramCount(expression($"toks"))).as("c"))
       .collect().sortBy(_.getInt(0)).map(_.getLong(1)).toSeq
     assert(got == expected)
   }

@@ -1,7 +1,9 @@
 package graft.functions
 
 import graft.GraftSpec
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.functions.{array, col, lit}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -64,20 +66,21 @@ class ClippedOverlapSpec extends GraftSpec {
     }
   }
 
-  test("codegen path matches interpreted eval; registered as a SQL " +
-    "function with optional gram order; NULL array propagates; bad " +
-    "arity/order rejected") {
+  test("codegen path matches interpreted eval; gram order is a " +
+    "parameter; NULL array propagates; bad order rejected") {
     val df = Seq(
       (Seq("a", "b", "a"), Seq("a", "a", "a")),
       (Seq.empty[String], Seq("a")))
       .toDF("x", "y")
-    val viaSql = df.selectExpr("graft_clipped_overlap(x, y) AS c").collect()
-    assert(viaSql(0).getLong(0) == 2L) // min(2,3) for "a"
-    assert(viaSql(1).getLong(0) == 0L)
-    val bigram = df.selectExpr("graft_clipped_overlap(x, y, 2) AS c").collect()
+    def clip(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
+        n: Int) = column(ClippedOverlap(expression(a), expression(b), n))
+    val unigram = df.select(clip(col("x"), col("y"), 1)).collect()
+    assert(unigram(0).getLong(0) == 2L) // min(2,3) for "a"
+    assert(unigram(1).getLong(0) == 0L)
+    val bigram = df.select(clip(col("x"), col("y"), 2)).collect()
     assert(bigram(0).getLong(0) == 0L) // {a b, b a} vs {a a, a a} share none
-    val nulls = spark.sql(
-      "SELECT graft_clipped_overlap(CAST(NULL AS ARRAY<STRING>), array('a'))")
+    val nulls = spark.range(1)
+      .select(clip(lit(null).cast("array<string>"), array(lit("a")), 1))
       .collect()
     assert(nulls(0).isNullAt(0))
     // interpreted path: drive eval() directly
@@ -86,11 +89,7 @@ class ClippedOverlapSpec extends GraftSpec {
       Literal.create(arr("g", "h", "h"), ArrayType(StringType)), 1)
     assert(e.eval(null) == 2L)
     intercept[Exception] {
-      spark.sql("SELECT graft_clipped_overlap(array('a'))").collect()
-    }
-    intercept[Exception] {
-      spark.sql("SELECT graft_clipped_overlap(array('a'), array('a'), 0)")
-        .collect()
+      spark.range(1).select(clip(array(lit("a")), array(lit("a")), 0)).collect()
     }
   }
 }

@@ -4,6 +4,7 @@ import java.util.zip.Deflater
 
 import graft.GraftSpec
 import graft.ext.TextOps
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 class DeflateLengthSpec extends GraftSpec {
@@ -28,7 +29,7 @@ class DeflateLengthSpec extends GraftSpec {
     }
     for (level <- Seq(1, 6, 9)) {
       val got = seeds.toDF("t")
-        .select(call_function("graft_deflate_len", col("t"), lit(level)))
+        .select(column(DeflateLength(expression(col("t")), level)))
         .as[Long].collect().toSeq
       assert(got == seeds.map(refLen(_, level)), s"level $level diverged")
     }
@@ -48,7 +49,7 @@ class DeflateLengthSpec extends GraftSpec {
     assert(refLen(spam, 9) <= refLen(spam, 1))
     val edge = Seq((Some(""), Some("x"), Option.empty[String]))
       .toDF("e", "x", "n")
-      .select(call_function("graft_deflate_len", col("e")).as("le"),
+      .select(column(DeflateLength(expression(col("e")), 6)).as("le"),
         TextOps.compressionRatio(col("e")).as("re"),
         TextOps.compressionRatio(col("x")).as("rx"),
         TextOps.compressionRatio(col("n")).as("rn"))
@@ -59,21 +60,17 @@ class DeflateLengthSpec extends GraftSpec {
     assert(edge.isNullAt(3))
   }
 
-  test("SQL registration: 1-arg defaults to level 6; bad level and " +
-    "arity are rejected") {
-    val viaSql = spark.sql(
-      "SELECT graft_deflate_len('aaaaaaaaaa') AS a, " +
-        "graft_deflate_len('aaaaaaaaaa', 6) AS b").collect().head
-    assert(viaSql.getLong(0) == viaSql.getLong(1))
-    assert(viaSql.getLong(0) == refLen("aaaaaaaaaa", 6))
+  test("a constant operand folds to the library length; a level outside " +
+    "0..9 is rejected") {
+    val folded = spark.range(1)
+      .select(column(DeflateLength(expression(lit("aaaaaaaaaa")), 6)))
+      .as[Long].collect().head
+    assert(folded == refLen("aaaaaaaaaa", 6))
     def messages(t: Throwable): String =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
         .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
     val e1 = intercept[Throwable](
-      spark.sql("SELECT graft_deflate_len('x', 99)").collect())
+      spark.range(1).select(TextOps.compressionRatio(lit("x"), 99)).collect())
     assert(messages(e1).contains("0..9"), messages(e1))
-    val e2 = intercept[Throwable](
-      spark.sql("SELECT graft_deflate_len('x', 6, 'y')").collect())
-    assert(messages(e2).contains("1 or 2 arguments"), messages(e2))
   }
 }

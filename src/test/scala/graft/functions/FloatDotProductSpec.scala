@@ -31,31 +31,15 @@ class FloatDotProductSpec extends GraftSpec {
     assert(r(1).isNullAt(0))
     assert(r(2).isNullAt(0))
 
-    val withNullElem = spark.sql(
-      "SELECT graft_dot(CAST(array(1.0, NULL) AS ARRAY<FLOAT>), " +
-        "CAST(array(1.0, 2.0) AS ARRAY<FLOAT>)) AS d")
-    val row = withNullElem.collect()(0)
-    info(s"null-element row: $row")
-    assert(row.isNullAt(0))
-  }
-
-  test("registered as a SQL function via session extensions") {
-    val r = spark.sql(
-      "SELECT graft_dot(CAST(array(1.0, 2.0, 3.0) AS ARRAY<FLOAT>), " +
-        "CAST(array(4.0, 5.0, 6.0) AS ARRAY<FLOAT>)) AS d")
-    assert(r.collect()(0).getDouble(0) == 32.0)
-  }
-
-  test("native functions reject wrong arity instead of ignoring arguments") {
-    def messages(t: Throwable): String =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-        .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
-    // an extra argument must error, never be silently discarded
-    val e1 = intercept[Throwable](
-      spark.sql("SELECT graft_top_bigram(array('a', 'b'), 5)").collect())
-    assert(messages(e1).contains("exactly 1 argument"), messages(e1))
-    val e2 = intercept[Throwable](
-      spark.sql("SELECT graft_dot(CAST(array(1.0) AS ARRAY<FLOAT>))").collect())
-    assert(messages(e2).contains("exactly 2 arguments"), messages(e2))
+    // literal operands constant-fold, so this row runs the interpreted eval
+    def floats(xs: java.lang.Float*) =
+      array(xs.map(x => lit(x).cast("float")): _*)
+    val folded = spark.range(1).select(
+      Similarity.nativeDot(floats(1.0f, 2.0f, 3.0f), floats(4.0f, 5.0f, 6.0f)),
+      Similarity.nativeDot(floats(1.0f, null), floats(1.0f, 2.0f)))
+    val row = folded.collect()(0)
+    info(s"constant-folded row: $row")
+    assert(row.getDouble(0) == 32.0)
+    assert(row.isNullAt(1))
   }
 }

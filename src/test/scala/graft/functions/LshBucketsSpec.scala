@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.{GraftSpec, Tables}
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 class LshBucketsSpec extends GraftSpec {
@@ -31,8 +32,8 @@ class LshBucketsSpec extends GraftSpec {
     val emb = Tables(spark, "/root/testdata/sf0.01", "embeddings").limit(300)
     val (bits, tables, dim) = (4, 32, 64)
     val mismatches = emb.select(
-        call_function("graft_lsh_buckets", col("embedding"),
-          lit(bits), lit(tables), lit(dim), lit(42L)).as("native"),
+        column(LshBuckets(expression(col("embedding")), bits, tables, dim, 42L))
+          .as("native"),
         hofBuckets(col("embedding"), bits, tables, dim, 42L).as("hof"))
       .filter(not(col("native") <=> col("hof")))
       .count()
@@ -46,8 +47,7 @@ class LshBucketsSpec extends GraftSpec {
       (3L, Some(Seq(1.0f, 2.0f)))     // dim mismatch → every bit 0
     ).toDF("id", "v")
     val r = df.select(col("id"),
-        call_function("graft_lsh_buckets", col("v"),
-          lit(4), lit(2), lit(8), lit(42L)).as("b"))
+        column(LshBuckets(expression(col("v")), 4, 2, 8, 42L)).as("b"))
       .orderBy("id").collect()
     assert(!r(0).isNullAt(1))
     assert(r(1).isNullAt(1))
@@ -57,8 +57,7 @@ class LshBucketsSpec extends GraftSpec {
   test("deterministic across invocations; seed changes buckets") {
     val emb = Tables(spark, "/root/testdata/sf0.01", "embeddings").limit(50)
     def run(seed: Long) = emb.select(col("vec_id"),
-        call_function("graft_lsh_buckets", col("embedding"),
-          lit(4), lit(8), lit(64), lit(seed)).as("b"))
+        column(LshBuckets(expression(col("embedding")), 4, 8, 64, seed)).as("b"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(run(42L) == run(42L))
     assert(run(42L) != run(43L))

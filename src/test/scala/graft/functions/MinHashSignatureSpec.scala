@@ -39,19 +39,7 @@ class MinHashSignatureSpec extends GraftSpec {
     assert(rows(2).isNullAt(1))
     assert(rows(2).getSeq[Any](2) == Seq(null, null, null, null))
     assert(rows(1).getSeq[Any](1) == Seq(null, null, null, null)) // empty array
-  }
-
-  test("registered as a SQL function; literal-arity enforced") {
-    val r = spark.sql("SELECT graft_minhash(array('a', 'b'), 3) AS s").collect()(0)
-    assert(r.getSeq[Long](0).length == 3)
-    def messages(t: Throwable): String =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-        .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
-    val e1 = intercept[Throwable](
-      spark.sql("SELECT graft_minhash(array('a'))").collect())
-    assert(messages(e1).contains("exactly 2 arguments"), messages(e1))
-    val e2 = intercept[Throwable](
-      spark.sql("SELECT graft_minhash(array('a'), 'x')").collect())
-    assert(messages(e2).contains("literal integer"), messages(e2))
+    assert(rows(0).getSeq[Long](1).length == 4)
+    intercept[IllegalArgumentException](Dedup.minhashSignature(col("sh"), 0))
   }
 }

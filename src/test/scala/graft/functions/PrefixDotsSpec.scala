@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.GraftSpec
 import graft.ext.Similarity
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 /** Twin-spec for [[PrefixDots]]: element `i` of the fused one-pass
@@ -22,8 +23,7 @@ class PrefixDotsSpec extends GraftSpec {
     val df = rows.zipWithIndex
       .map { case ((a, b), i) => (i.toLong, a, b) }
       .toDF("id", "a", "b")
-    val fused = call_function("graft_prefix_dots",
-      col("a"), col("b"), array(pfx.map(m => lit(m)): _*))
+    val fused = column(PrefixDots(expression(col("a")), expression(col("b")), pfx))
     val twins = pfx.zipWithIndex.map { case (m, i) =>
       val t = Similarity.nativeDot(slice(col("a"), 1, m), slice(col("b"), 1, m))
       (element_at(fused, i + 1) <=> t).as(s"eq$i")
@@ -83,8 +83,8 @@ class PrefixDotsSpec extends GraftSpec {
       (1L, null.asInstanceOf[Seq[java.lang.Float]], f(1, 2)),
       (2L, f(1, 2), null.asInstanceOf[Seq[java.lang.Float]]))
       .toDF("id", "a", "b")
-    val out = df.select(call_function("graft_prefix_dots",
-      col("a"), col("b"), array(pfx.map(m => lit(m)): _*)).as("pd"))
+    val out = df.select(column(PrefixDots(
+      expression(col("a")), expression(col("b")), pfx)).as("pd"))
     assert(out.collect().forall(_.isNullAt(0)))
   }
 

@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.GraftSpec
 import graft.ext.SpanDedup
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 /** Twin-spec for [[SpanWindowKey]]: the native one-pass window digest
@@ -21,7 +22,7 @@ class SpanWindowKeySpec extends GraftSpec {
       .map { case ((toks, pos), i) => (i.toLong, toks, pos) }
       .toDF("id", "toks", "pos")
     val out = df.select(
-      call_function("graft_window_key", col("toks"), col("pos"), lit(n))
+      column(SpanWindowKey(expression(col("toks")), expression(col("pos")), n))
         .as("native"),
       SpanDedup.windowKeyHof(col("toks"), col("pos"), n).as("twin"))
     val bad = out.filter(!(col("native") <=> col("twin")))
@@ -56,7 +57,7 @@ class SpanWindowKeySpec extends GraftSpec {
       .map { case ((toks, pos), i) => (i.toLong, toks, pos) }
       .toDF("id", "toks", "pos")
     val out = df.select(
-      call_function("graft_window_key", col("toks"), col("pos"), lit(3))
+      column(SpanWindowKey(expression(col("toks")), expression(col("pos")), 3))
         .as("native"),
       SpanDedup.windowKeyHof(col("toks"), col("pos"), 3).as("twin"))
     assert(out.filter(!(col("native") <=> col("twin"))).count() == 0)
@@ -67,8 +68,8 @@ class SpanWindowKeySpec extends GraftSpec {
       (1L, null.asInstanceOf[Seq[String]], java.lang.Long.valueOf(1L)),
       (2L, Seq("a", "b", "c"), null.asInstanceOf[java.lang.Long]))
       .toDF("id", "toks", "pos")
-    val out = df.select(call_function("graft_window_key",
-      col("toks"), col("pos"), lit(2)).as("k"))
+    val out = df.select(column(SpanWindowKey(
+      expression(col("toks")), expression(col("pos")), 2)).as("k"))
     assert(out.collect().forall(_.isNullAt(0)))
   }
 
@@ -76,7 +77,7 @@ class SpanWindowKeySpec extends GraftSpec {
     val toks = Seq("one", "two", "three", "four")
     val df = (1 to 4).map(p => (toks, p)).toDF("toks", "posi")
     val out = df.select(
-      call_function("graft_window_key", col("toks"), col("posi"), lit(2))
+      column(SpanWindowKey(expression(col("toks")), expression(col("posi")), 2))
         .as("native"),
       SpanDedup.windowKeyHof(col("toks"), col("posi"), 2).as("twin"))
     assert(out.filter(!(col("native") <=> col("twin"))).count() == 0)

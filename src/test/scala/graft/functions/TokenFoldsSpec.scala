@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.GraftSpec
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 /** Twin-specs for the [[TokenLengthSum]] / [[MarkerHits]] native folds:
@@ -21,7 +22,7 @@ class TokenFoldsSpec extends GraftSpec {
 
   test("graft_len_sum ≡ aggregate(toks, 0, acc + length(t)) incl. NULL poisoning") {
     val out = soup.select(
-      call_function("graft_len_sum", col("toks")).as("native"),
+      column(TokenLengthSum(expression(col("toks")))).as("native"),
       aggregate(col("toks"), lit(0), (acc, t) => acc + length(t)).as("hof"))
     assert(out.filter(!(col("native") <=> col("hof"))).count() == 0)
   }
@@ -29,8 +30,7 @@ class TokenFoldsSpec extends GraftSpec {
   test("graft_marker_hits ≡ size(filter(toks, array_contains(markers, t)))") {
     val markers = Seq("the", "a", "and", "of")
     val out = soup.select(
-      call_function("graft_marker_hits", col("toks"), typedLit(markers))
-        .as("native"),
+      column(MarkerHits(expression(col("toks")), markers)).as("native"),
       size(filter(col("toks"),
         t => array_contains(typedLit(markers), t))).as("hof"))
     assert(out.filter(!(col("native") <=> col("hof"))).count() == 0)
@@ -40,9 +40,8 @@ class TokenFoldsSpec extends GraftSpec {
     val df = Seq((1L, Some(Seq.empty[String])), (2L, None))
       .toDF("id", "toks")
     val got = df.select(col("id"),
-      call_function("graft_len_sum", col("toks")).as("s"),
-      call_function("graft_marker_hits", col("toks"),
-        typedLit(Seq("x"))).as("h"))
+      column(TokenLengthSum(expression(col("toks")))).as("s"),
+      column(MarkerHits(expression(col("toks")), Seq("x"))).as("h"))
       .collect().map(r => (r.getLong(0),
         if (r.isNullAt(1)) null else r.getInt(1),
         if (r.isNullAt(2)) null else r.getInt(2))).toSet

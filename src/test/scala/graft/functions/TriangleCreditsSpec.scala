@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.GraftSpec
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 /** Twin-spec for [[TriangleCredits]]: on sorted duplicate-free neighbor
@@ -24,8 +25,8 @@ class TriangleCreditsSpec extends GraftSpec {
         .otherwise(array().cast("array<bigint>"))
     }
     val out = df.select(
-      call_function("graft_tri_credits",
-        col("x"), col("y"), col("nx"), col("ny")).as("native"),
+      column(TriangleCredits(expression(col("x")), expression(col("y")),
+        expression(col("nx")), expression(col("ny")))).as("native"),
       twin.as("twin"))
     val bad = out.filter(!(col("native") <=> col("twin")))
     assert(bad.count() == 0, {
@@ -61,8 +62,8 @@ class TriangleCreditsSpec extends GraftSpec {
     val df = Seq((1L, 2L)).toDF("x", "y")
       .withColumn("nx", lit(null).cast("array<bigint>"))
       .withColumn("ny", array(lit(1L)))
-    val out = df.select(call_function("graft_tri_credits",
-      col("x"), col("y"), col("nx"), col("ny")).as("c"))
+    val out = df.select(column(TriangleCredits(expression(col("x")),
+      expression(col("y")), expression(col("nx")), expression(col("ny")))).as("c"))
     assert(out.collect().forall(_.isNullAt(0)))
   }
 }

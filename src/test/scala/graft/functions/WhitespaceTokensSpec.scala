@@ -2,6 +2,7 @@ package graft.functions
 
 import graft.GraftSpec
 import graft.ext.TextOps
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 /** Twin-spec for [[WhitespaceTokens]]: the native byte-scan tokenizer
@@ -78,8 +79,8 @@ class WhitespaceTokensSpec extends GraftSpec {
     val df = Seq("  The  quick\tbrown fox ", "", "one two", null)
       .toDF("text")
     val viaTokens = graft.ext.Dedup.shingles(col("text"), 2)
-    val viaRawSplit = call_function("graft_shingles",
-      split(lower(col("text")), "\\s+"), lit(2))
+    val viaRawSplit = column(WordShingles(
+      expression(split(lower(col("text")), "\\s+")), 2))
     assert(df.filter(!(viaTokens <=> viaRawSplit)).count() == 0)
   }
 }
