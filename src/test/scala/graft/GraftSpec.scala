@@ -1,6 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.testbus.BusDrain
@@ -16,17 +17,23 @@ abstract class GraftSpec extends AnyFunSuite {
 
   /** `body`'s result and the number of Spark jobs it started. */
   protected def countingJobs[T](body: => T): (T, Int) = {
+    val (r, jobs) = startedJobs(body)
+    (r, jobs.size)
+  }
+
+  /** `body`'s result and the start events of the Spark jobs it started. */
+  protected def startedJobs[T](body: => T): (T, Seq[SparkListenerJobStart]) = {
     val sc = spark.sparkContext
-    val jobs = new AtomicInteger
+    val jobs = new ConcurrentLinkedQueue[SparkListenerJobStart]
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
     }
     BusDrain(sc)
     sc.addSparkListener(listener)
     try {
       val r = body
       BusDrain(sc)
-      (r, jobs.get)
+      (r, jobs.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 }

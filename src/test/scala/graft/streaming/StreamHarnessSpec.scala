@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{GraftSpec, Tables}
+import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.functions._
 
 /**
@@ -14,7 +15,10 @@ import org.apache.spark.sql.functions._
  *  - shard assignment must be total — a partial assignment (dropped
  *    rows) throws at fixture-build time, never silently thins the data;
  *  - streaming dropDuplicates emits a key seen in an early batch exactly
- *    once even when it recurs in later batches (the state property).
+ *    once even when it recurs in later batches (the state property);
+ *  - every micro-batch job runs with the local checkpoint manager, the
+ *    session's own keys come back as they were, and no checkpoint
+ *    directory outlives its drain.
  */
 class StreamHarnessSpec extends GraftSpec {
   import spark.implicits._
@@ -23,6 +27,22 @@ class StreamHarnessSpec extends GraftSpec {
 
   private def freshDir(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft_shs_$tag").toString
+
+  private val managerKey = StreamHarness.checkpointManagerKey
+
+  /** The session's own (explicitly set) value of `key`. */
+  private def sessionValue(key: String): Option[String] =
+    spark.conf.getAll.get(key)
+
+  /** This JVM's drain checkpoint directories now in the temp dir. */
+  private def checkpointDirs(): Set[String] = {
+    val prefix = s"graft_ckpt_${ProcessHandle.current().pid()}_"
+    Option(new java.io.File(sys.props("java.io.tmpdir")).list())
+      .getOrElse(Array.empty[String]).filter(_.startsWith(prefix)).toSet
+  }
+
+  private def queryId(j: SparkListenerJobStart) =
+    Option(j.properties).flatMap(p => Option(p.getProperty("sql.streaming.queryId")))
 
   test("shard writes one mod-time-ordered file per shard and the drain " +
       "runs exactly one data micro-batch per file") {
@@ -49,12 +69,84 @@ class StreamHarnessSpec extends GraftSpec {
     val dir = freshDir("tooth")
     val df = (1 to 20).map(i => (i.toLong, "x")).toDF("id", "k")
     StreamHarness.shard(df, pmod(col("id"), lit(2L)), 2, dir)
+    val ckptsBefore = checkpointDirs()
+    val partsBefore = sessionValue("spark.sql.shuffle.partitions")
+    assert(sessionValue(managerKey).isEmpty)
     val ex = intercept[IllegalArgumentException] {
-      StreamHarness.drain(spark, dir, "complete", minDataBatches = 6) {
+      StreamHarness.drain(spark, dir, "complete", minDataBatches = 6,
+          statePartitions = Some(2)) {
         src => src.groupBy(col("k")).agg(count(lit(1)).as("cnt"))
       }
     }
     assert(ex.getMessage.contains("degenerated"))
+    assert(checkpointDirs() == ckptsBefore,
+      "a failed drain must delete its checkpoint directory")
+    assert(sessionValue(managerKey).isEmpty)
+    assert(sessionValue("spark.sql.shuffle.partitions") == partsBefore)
+  }
+
+  test("every micro-batch job runs with the FileSystem checkpoint " +
+      "manager, and the session's own value of the key is unchanged " +
+      "after the drain, whether it was unset or set") {
+    val df = (1 to 40).map(i => (i.toLong, s"k${i % 3}")).toDF("id", "k")
+    val want = df.groupBy(col("k")).agg(count(lit(1)).as("cnt"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    def drainJobs(): Seq[SparkListenerJobStart] = {
+      val dir = freshDir("manager")
+      StreamHarness.shard(df, pmod(col("id"), lit(3L)), 3, dir)
+      val (got, jobs) = startedJobs {
+        StreamHarness.drain(spark, dir, "complete", minDataBatches = 3) {
+          src => src.groupBy(col("k")).agg(count(lit(1)).as("cnt"))
+        }.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      }
+      assert(got == want)
+      jobs.filter(queryId(_).isDefined)
+    }
+    def assertLocalManager(jobs: Seq[SparkListenerJobStart]): Unit = {
+      assert(jobs.nonEmpty, "the drain ran no micro-batch job")
+      assert(jobs.forall(_.properties.getProperty(managerKey) ==
+        StreamHarness.localCheckpointManager),
+        jobs.map(_.properties.getProperty(managerKey)).distinct.toString)
+    }
+    assert(sessionValue(managerKey).isEmpty)
+    assertLocalManager(drainJobs())
+    assert(sessionValue(managerKey).isEmpty, "an unset key must stay unset")
+    val callers = "org.apache.spark.sql.execution.streaming.checkpointing." +
+      "FileContextBasedCheckpointFileManager"
+    spark.conf.set(managerKey, callers)
+    try {
+      assertLocalManager(drainJobs())
+      assert(sessionValue(managerKey).contains(callers))
+    } finally spark.conf.unset(managerKey)
+  }
+
+  test("the drain reads its source schema from the shard marker: no " +
+      "footer-inference job before the first micro-batch, and the same " +
+      "schema the footers give") {
+    val dir = freshDir("schema")
+    val df = spark.range(24).selectExpr(
+      "id", "CAST(id AS STRING) AS s", "id / 3.0D AS d",
+      "CAST(id AS DECIMAL(38, 12)) AS dec",
+      "TIMESTAMP'2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS ts",
+      "TIMESTAMP_NTZ'2024-01-01 00:00:00' AS ntz", "DATE'2024-01-01' AS day",
+      "array(CAST(id AS STRING), NULL) AS arr", "map('k', CAST(id AS INT)) AS m",
+      "named_struct('a', CAST(id AS INT), 'b', 'x') AS st",
+      "id % 2 = 0 AS flag", "CAST('ab' AS BINARY) AS bin")
+    StreamHarness.shard(df, pmod(col("id"), lit(3L)), 3, dir)
+    val (inferred, inferJobs) = countingJobs(spark.read.parquet(dir).schema)
+    assert(inferJobs == 1, "footer inference is the one job the marker saves")
+    var streamed: org.apache.spark.sql.types.StructType = null
+    val (rows, jobs) = startedJobs {
+      StreamHarness.drain(spark, dir, "append", minDataBatches = 3) { src =>
+        streamed = src.schema
+        src
+      }.collect().length
+    }
+    assert(rows == 24)
+    assert(streamed == inferred)
+    assert(jobs.count(queryId(_).isDefined) > 0)
+    assert(jobs.forall(queryId(_).isDefined),
+      "the drain must start no job outside its micro-batches")
   }
 
   test("shard totality: an assignment that drops rows (nulls or " +
