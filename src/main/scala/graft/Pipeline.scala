@@ -30,16 +30,20 @@ import graft.sinks.Sink
  * copy+delete archive becomes an atomic `FileSystem.rename`; staging uses
  * dynamic partition overwrite so a day re-run is idempotent.
  *
- * Passes: the raw text is scanned once, by the staging write, which also
- * observes the line and reject counts (`Dataset.observe`, no job of its
- * own); the input-file list is the scan's file listing. The staged day is
- * then scanned once, by the per-user sink write: it reads only the day's
+ * Passes: the raw text is scanned once, by the staging write, which parses
+ * each line in one native byte scan, observes the line and reject counts
+ * (`Dataset.observe`, no job of its own) and writes the day without a
+ * shuffle ([[graft.stage.Staging.stageDay]]: the scan's partitions
+ * coalesced to as many files as the text's size calls for, one for a day
+ * under `spark.sql.files.maxPartitionBytes`); the input-file list and the
+ * text's size come from the scan's file listing. The staged day is then
+ * scanned once, by the per-user sink write: it reads only the day's
  * directory with the declared schema (no inference job) and observes the
  * totals row over the per-user groups, which is appended from the driver
- * as a one-row local table. A day costs five Spark jobs — the staging
- * write's date shuffle and write, the per-user aggregate's shuffle and
- * write, the totals append — and at small volume the job count, not the
- * data, sets the run's wall time, so each extra action shows.
+ * as a one-row local table. A day costs four Spark jobs — the staging
+ * write, the per-user aggregate's shuffle and write, the totals append —
+ * and at small volume the job count, not the data, sets the run's wall
+ * time, so each extra action shows.
  *
  * Scale: nothing here collects data rows to the driver — the only
  * driver-side values are the input-file listing (metadata, one string per
@@ -86,10 +90,12 @@ object Pipeline {
     // are exactly the files the staging write parsed
     val inputFiles = raw.inputFiles.toSeq.sorted
 
-    // one pass over the text: parse, count lines and rejects, stage
+    // one pass over the text: parse, count lines and rejects, stage, in
+    // as many files as the text's size (from the listing) calls for
     val counts = Observation()
-    Staging.stage(
-      ClfParser.parse(raw, Some(counts)).withColumn("date", lit(date)), stagingPath)
+    Staging.stageDay(
+      ClfParser.parse(raw, Some(counts)).withColumn("date", lit(date)), stagingPath,
+      raw.queryExecution.optimizedPlan.stats.sizeInBytes)
     val observed = counts.get
     val parsedRows = observed(ClfParser.LinesMetric).asInstanceOf[Long]
     catalogTable.foreach { t =>

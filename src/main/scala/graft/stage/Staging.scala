@@ -29,21 +29,43 @@ object Staging {
   def withDate(df: DataFrame, tsCol: String = "time"): DataFrame =
     df.withColumn("date", date_format(col(tsCol), "yyyy-MM-dd"))
 
-  /** Stage to Snappy Parquet partitioned by `date`. Dynamic partition
-    * overwrite: only the date partitions present in `df` are replaced, so a
-    * daily ingest re-run is idempotent without clobbering earlier days.
-    * Rows are shuffled onto their date before the write so each partition
-    * directory gets one well-sized file instead of one sliver per task —
-    * without this, T tasks × D days produce T×D small files, the classic
-    * small-files failure at scale. */
+  /** Stage to Snappy Parquet partitioned by `date`, for a frame holding
+    * any number of dates (set-ups that stage a history, backfills). Dynamic
+    * partition overwrite: only the date partitions present in `df` are
+    * replaced, so a daily ingest re-run is idempotent without clobbering
+    * earlier days. Rows are shuffled onto their date before the write so
+    * each partition directory gets one well-sized file instead of one
+    * sliver per task — without this, T tasks × D days produce T×D small
+    * files, the classic small-files failure at scale. A frame known to
+    * hold one date takes [[stageDay]] instead, which needs no shuffle. */
   def stage(df: DataFrame, path: String): Unit =
-    df.repartition(col("date"))
-      .write
+    dateWriter(df.repartition(col("date"))).parquet(path)
+
+  /**
+   * [[stage]] for a frame that holds ONE `date` (a pipeline run stamps a
+   * literal ingest date): no shuffle. The date shuffle would send the
+   * whole day to one reducer, so it bought one file at the price of a
+   * second job; here the scan's own partitions are coalesced to
+   * `k = max(1, ceil(inputBytes / spark.sql.files.maxPartitionBytes))`
+   * and written straight out, so scan, parse and write run in one job and
+   * the day gets `k` files, one per `maxPartitionBytes` of input (a 10k-
+   * or 1M-line day of ~110-byte lines is one file). `inputBytes` is
+   * the size of what `df` was read from, known at planning time (the
+   * text relation's size statistic, summed by the scan's own listing).
+   * Same layout, dynamic overwrite and compression as [[stage]].
+   */
+  def stageDay(df: DataFrame, path: String, inputBytes: BigInt): Unit = {
+    val split = BigInt(df.sparkSession.sessionState.conf.filesMaxPartitionBytes)
+    val k = ((inputBytes + split - 1) / split).max(1).min(Int.MaxValue).toInt
+    dateWriter(df.coalesce(k)).parquet(path)
+  }
+
+  private def dateWriter(df: DataFrame) =
+    df.write
       .mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .option("compression", "snappy")
       .partitionBy("date")
-      .parquet(path)
 
   /**
    * Partition-pruned read of a single day. Only the day's `date=`

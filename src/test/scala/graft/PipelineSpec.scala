@@ -1,7 +1,15 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.testbus.BusDrain
 import graft.sinks.ParquetSink
 
 /** Golden end-to-end test: fixture CLF files through the full pipeline,
@@ -107,17 +115,70 @@ class PipelineSpec extends GraftSpec {
   }
 
   test("one run over the fixture stays within its Spark job budget") {
-    // the staging write (its scan observes the counts; the date shuffle
-    // and the write), the per-user sink write (its shuffle and the write,
+    // the staging write (one job: its scan observes the counts, parses
+    // and writes), the per-user sink write (its shuffle and the write,
     // which observes the totals) and the driver-side totals append; a
-    // stray count(), a re-added orderBy or a second totals aggregate
-    // goes over
+    // stray count(), a re-added orderBy, a second totals aggregate or a
+    // date shuffle in the stage goes over
     val root = withInbox("2015-11-13.log" -> lines1, "2015-11-13b.log" -> lines2)
     val (report, jobs) = countingJobs(Pipeline.run(spark, s"$root/inbox",
       s"$root/staging", "2015-11-13", new ParquetSink(s"$root/results"),
       Some(s"$root/processed")))
     assert(report.parsedRows == 5)
-    assert(jobs <= 5, s"$jobs jobs")
+    assert(jobs <= 4, s"$jobs jobs")
+  }
+
+  /** Runs the fixture day into a fresh root; returns the root, the staging
+    * write's executed plan and the day's part files. */
+  private def stagedFixture(): (String, SparkPlan, Seq[java.nio.file.Path]) = {
+    val root = withInbox("2015-11-13.log" -> lines1, "2015-11-13b.log" -> lines2)
+    val writes = new ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.executedPlan.foreach {
+          case w: DataWritingCommandExec => w.cmd match {
+            case c: InsertIntoHadoopFsRelationCommand
+                if c.outputPath.toString.endsWith("/staging") => writes.add(w)
+            case _ =>
+          }
+          case _ =>
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Pipeline.run(spark, s"$root/inbox", s"$root/staging", "2015-11-13",
+        new ParquetSink(s"$root/results"))
+      BusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size == 1)
+    val parts = Files.list(Paths.get(root, "staging", "date=2015-11-13")).iterator.asScala
+      .filter(_.getFileName.toString.startsWith("part-")).toSeq
+    (root, writes.peek, parts)
+  }
+
+  private def stagedRows(root: String) =
+    graft.stage.Staging.readDay(spark, s"$root/staging", "2015-11-13").collect()
+      .map(_.toSeq).groupBy(identity).map { case (r, rs) => r -> rs.length }
+
+  test("the day stages without a shuffle: one file, or k files below the split size") {
+    val (root, write, parts) = stagedFixture()
+    assert(write.find(_.isInstanceOf[Exchange]).isEmpty &&
+      !write.toString.contains("Exchange"), write.toString)
+    assert(parts.length == 1, parts)
+
+    // a split size below the day's text bytes: k = ceil(bytes / split) > 1
+    // coalesced scan partitions, each its own file, and the same rows
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getAll.get(key)
+    val (lowRoot, lowWrite, lowParts) =
+      try { spark.conf.set(key, "64"); stagedFixture() }
+      finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(spark.conf.getAll.get(key) == prior)
+    assert(!lowWrite.toString.contains("Exchange"), lowWrite.toString)
+    assert(lowParts.length > 1, lowParts)
+    assert(stagedRows(lowRoot) == stagedRows(root))
+    assert(stagedRows(root).values.sum == 5)
   }
 
   test("days staged after the catalog table exists are visible through it") {

@@ -13,6 +13,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.GraftSpec
+import graft.clf.ClfParser
 import graft.functions._
 
 /** Each production wrapper must put its own native expression into the
@@ -98,7 +99,10 @@ class NativeWrapperSpec extends GraftSpec {
       classOf[SpanWindowKey]),
     ("TextOps.bcastIds", () => docs.select(
       TextOps.bcastIds(Map("cat" -> 0L))(TextOps.tokens(text))),
-      classOf[VocabEncodeBc]))
+      classOf[VocabEncodeBc]),
+    ("ClfParser.parse", () => ClfParser.parse(Seq(
+      """10.0.0.1 - 7 [13/Nov/2015:11:45:42 +0000] "GET /a HTTP/1.0" 200 1 "-" "ua"""")
+      .toDF("value")), classOf[ClfLine]))
 
   /** Whether `cls` occurs in the analyzed plan `build` returns or in that
     * of any action it runs. Actions are reported on the asynchronous
