@@ -2476,8 +2476,7 @@ object SparkEntry {
     // halves, per-half moment partials (n, Σv, Σv² decimal folds)
     // merged losslessly, then the SAME closed-form tail + BH step-up
     // as q189 — shares q189's oracle verbatim, so the law is
-    // hash-certified, and StreamingWelch's per-batch appends are this
-    // exact fold.
+    // hash-certified.
     "q200_welch_merge" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val a = StatsTests.welchPartials(
@@ -2670,8 +2669,8 @@ object SparkEntry {
     // X3+/S — PCA over MERGED moment partials (the q207 law applied to
     // the spectrum face): parity halves' (i, j, s) frames fold, the
     // driver tail decomposes the fold — certified by q206's eigenpair
-    // residual oracle against THIS dump. A standing StreamingMoments
-    // index yields the corpus component with zero corpus re-scan.
+    // residual oracle against THIS dump. A standing moment index yields
+    // the corpus component with zero corpus re-scan.
     "q212_pca_merge" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
       val a = Probe.momentPartials(
@@ -2742,7 +2741,6 @@ object SparkEntry {
     // partials (the q184 Aggregator buffer as an (i, j, s) frame)
     // folded losslessly, then the SAME driver solve — certified by
     // q184's A·w = b residual oracle run against THIS dump.
-    // StreamingMoments' per-batch appends are this exact fold.
     "q207_probe_merge" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
       val y = when(col("label") === 0, 1.0)
@@ -3525,9 +3523,7 @@ object SparkEntry {
 
     // X2+ — deterministic corpus shuffle: a salted content hash IS the
     // epoch's permutation; the head-20 here plans as TakeOrdered (per-
-    // partition top-k + driver merge, never a global sort), and the
-    // full-corpus path is shuffledLayout's range-sorted write
-    // (SamplingSpec: path-order streaming replays the permutation).
+    // partition top-k + driver merge, never a global sort).
     "q64_corpus_shuffle" -> ((s, d) => {
       val w = org.apache.spark.sql.expressions.Window.orderBy(col("shuffle_key"))
       t(s, d, "documents")
@@ -3629,7 +3625,7 @@ object SparkEntry {
         .orderBy(col("user_id").asc_nulls_last)),
 
     // W+/A2+ — BATCH tumbling event-time buckets: the batch twin of the
-    // streaming windowedCounts (§2.10), same epoch-aligned window(). One
+    // streamed q368 windows (§2.10), same epoch-aligned window(). One
     // shuffle on (bucket, type); bucket rendered as a string so both
     // engines compare the same value (q16's date-string precedent).
     "q71_time_buckets" -> ((s, d) =>
@@ -3715,7 +3711,7 @@ object SparkEntry {
     // shape the screen is tuned for: from a columnar scan the band explode
     // reads only `sig` and the verify join only `sh`; an inline index plan
     // would instead re-inline the minhash expression into every band
-    // (projection collapse — the candidatePairs pathology). Same screen
+    // (projection collapse). Same screen
     // core as q62 → identical semantics, same oracle.
     "q75_indexed_dedup" -> ((s, d) => {
       val docs = t(s, d, "documents")
@@ -5147,8 +5143,7 @@ object SparkEntry {
     // X3+ — hard-negative mining for contrastive training: per anchor,
     // the top-3 most-similar DIFFERENT-label vectors. Exact form under
     // the q108 broadcast-probe contract (vec_id < 200 bounds the eval
-    // sample); the corpus-scale path is hardNegativesAnn over an IVF
-    // neighbor frame (EvalSpec pins the shared-core equivalence law).
+    // sample).
     "q187_hard_negatives" -> ((s, d) =>
       Eval.hardNegatives(
         t(s, d, "embeddings").filter(col("vec_id") < 200), k = 3)
@@ -5157,8 +5152,8 @@ object SparkEntry {
     // X+/S/§2.10 — the KM curve's merge law as a query: spans built on
     // the event-id-parity halves fold by per-user min/max into EXACTLY
     // the whole-corpus spans (the oracle computes the whole-corpus curve
-    // directly — equality is the law). Same algebra StreamingSurvival
-    // rides; horizon 24 h to keep the result distinct from q180.
+    // directly — equality is the law). Horizon 24 h to keep the result
+    // distinct from q180.
     "q186_survival_merge" -> ((s, d) => {
       val ev = t(s, d, "events")
       Survival.kaplanMeierFromSpans(

@@ -1334,8 +1334,7 @@ object StatsTests {
    * [[mergeWelchMoments]] of the slices' partials, exactly — decimal
    * sums are associative and commutative, so the merge is lossless and
    * a standing screen never re-scans history (q200 proves the law
-   * against q189's oracle; [[graft.streaming.StreamingWelch]] is the
-   * streamed face).
+   * against q189's oracle).
    */
   def welchPartials(
       df: DataFrame, groupCol: Column, valueCol: Column): DataFrame =

@@ -60,9 +60,7 @@ object Trend {
    * equal the column-wise sums of any partition's partials
    * ([[mergeMoments]]), exactly — the terms are decimals, so the fold
    * order never matters. This is what makes the trend a standing index:
-   * a stream appends per-batch partials and folds at load
-   * ([[graft.streaming.StreamingTrend]]), batch re-fits never rescan
-   * history.
+   * per-batch partials fold at load, and re-fits never rescan history.
    */
   def momentPartials(
       df: DataFrame, groupCol: String, x: Column, y: Column): DataFrame =

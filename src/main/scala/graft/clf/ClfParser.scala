@@ -83,13 +83,6 @@ object ClfParser {
   def rejects(raw: DataFrame): DataFrame =
     raw.filter(!col("value").rlike(clfRegex))
 
-  /** [[parse]] with the typed surface: a `Dataset[LogLine]` with
-    * compile-time field access, for callers that prefer case-class safety
-    * over dynamic `Row`s (SURVEY.md §1.1). Same plan — encoders bind to
-    * the identical columns, nothing is materialized. */
-  def parseTyped(raw: DataFrame): org.apache.spark.sql.Dataset[LogLine] =
-    parse(raw).as[LogLine](org.apache.spark.sql.Encoders.product[LogLine])
-
   /**
    * Render the canonical columns back into a CLF line (parse⁻¹ for
    * non-null fields; used by round-trip property tests and the q05/q07/q08

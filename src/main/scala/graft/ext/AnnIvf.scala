@@ -55,7 +55,7 @@ object AnnIvf {
 
   /** Codegen'd vector norm — [[Similarity.norm]]; duplicated uses
     * collapse via codegen subexpression elimination. */
-  private def vNorm(vec: Column): Column = Similarity.norm(vec)
+  private[ext] def vNorm(vec: Column): Column = Similarity.norm(vec)
 
   /** Above this k the centroid matrix rides as a `Broadcast` variable
     * ([[graft.functions.IvfNearestCellsBc]]) instead of plan-resident
@@ -75,10 +75,10 @@ object AnnIvf {
     * sizes data, never generated code — the lift for the unrolled form's
     * k-ceiling (thousands of literal `graft_dot` terms blow past
     * Janino/JIT method limits and fall back to interpreted evaluation).
-    * [[nearestCellsUnrolled]] is kept as the engine-level semantics
-    * reference; AnnIvfSpec pins the two bit-equal at k=16 and k=256 and
-    * the executed plan CodegenFallback-free at k=256. Above
-    * [[LiteralCentroidCeiling]] the same kernel runs behind the broadcast
+    * The unrolled form is kept in the test tree (`AnnIvfTwins`) as the
+    * engine-level semantics reference; AnnIvfSpec pins the two bit-equal
+    * at k=16 and k=256 and the executed plan CodegenFallback-free at
+    * k=256. Above [[LiteralCentroidCeiling]] the same kernel runs behind the broadcast
     * carrier ([[nearestCellsBcast]] — spec-pinned bit-equal), so the
     * matrix never outgrows the plan. */
   private[ext] def nearestCells(vec: Column, cents: Cents, nprobe: Int): Column =
@@ -106,65 +106,6 @@ object AnnIvf {
     column(IvfNearestCellsBc(expression(vec), bc, nprobe))
   }
 
-  /** One `struct(dist, cell)` per centroid, fully UNROLLED: every distance
-    * a separate codegen'd `graft_dot` against an `array<float>` literal.
-    * Retired from the production path by [[nearestCells]] (one term per
-    * centroid caps k — see its doc); kept, with [[cellOfUnrolled]] /
-    * [[nearestCellsUnrolled]], as the built-ins-only semantics reference
-    * the spec checks the native expression against (the
-    * [[TextOps.topBigramCountHof]] pattern). The higher-order-function
-    * formulation (`transform` over an array literal) is NOT used even
-    * here — HOFs evaluate via CodegenFallback, which drags the whole
-    * per-row argmin subtree into interpreted mode (measured 30s vs 1.3s
-    * on q33). */
-  private def distStructs(vec: Column, vn: Column, cents: Cents): Seq[Column] =
-    cents.map { case (cell, v, n) =>
-      // undefined distance (zero-norm side → nullif'd denominator, or an
-      // indeterminate dot → NULL) coalesces to +Infinity: sorts last,
-      // same rule as the native expression — and a bare Divide would
-      // THROW under ANSI mode the moment a zero norm appeared
-      struct(
-        coalesce(
-          lit(1.0) - Similarity.nativeDot(vec, typedLit(v))
-            / nullif(vn * lit(n), lit(0.0)),
-          lit(Double.PositiveInfinity)).as("dist"),
-        lit(cell).as("cell"))
-    }
-
-  /** Unrolled-form nearest cell: argmin via a codegen'd `least` over the
-    * `struct(dist, cell)` terms — ties to the lowest cell id, the same
-    * ordering as a struct-min aggregate. Dev-only reference for
-    * [[cellOf]]'s native path. */
-  private[ext] def cellOfUnrolled(vec: Column, cents: Cents): Column = {
-    val ds = distStructs(vec, vNorm(vec), cents)
-    if (ds.isEmpty) lit(null).cast("long")
-    else (if (ds.sizeIs > 1) least(ds: _*) else ds.head).getField("cell")
-  }
-
-  /** Unrolled-form probe cells: per-row sort of the k struct distances,
-    * sliced to `nprobe`, projected to cell ids — dev-only reference for
-    * [[nearestCells]] (the `transform` HOF is acceptable here only
-    * because this never runs in a production plan). */
-  private[ext] def nearestCellsUnrolled(vec: Column, cents: Cents, nprobe: Int): Column =
-    transform(
-      slice(sort_array(array(distStructs(vec, vNorm(vec), cents): _*)), 1, nprobe),
-      s => s.getField("cell"))
-
-  /** Dev-only: the native probe-cell selection as a frame, for spec
-    * comparison against [[nearestCellsUnrolled]]. */
-  private[graft] def probeCellsNative(
-      queries: DataFrame, centroids: DataFrame, nprobe: Int): DataFrame =
-    queries.select(col("vec_id"),
-      nearestCells(col("embedding"), collectCents(centroids), nprobe).as("cells"))
-
-  /** Dev-only: [[assignCells]] through the unrolled reference path. */
-  private[graft] def assignCellsUnrolled(corpus: DataFrame, centroids: DataFrame): DataFrame = {
-    val cents = collectCents(centroids)
-    val assigned = corpus.select(col("vec_id"),
-      cellOfUnrolled(col("embedding"), cents).as("cell"))
-    if (cents.isEmpty) assigned.filter(lit(false)) else assigned
-  }
-
   /** Nearest cell: element 0 of the native 1-probe [[nearestCells]] —
     * zero shuffle, zero join, one expression node at any k. An EMPTY
     * centroid set yields NULL cell — callers' downstream equi-joins and
@@ -172,13 +113,26 @@ object AnnIvf {
     * crossJoin formulation this replaced, instead of a plan-build throw.
     * A NULL vector also yields NULL cell (its nearest cell is undefined,
     * so the row degrades out of the cell equi-join) — the one DELIBERATE
-    * divergence from the unrolled reference, which would assign a null
+    * divergence from the unrolled twin, which would assign a null
     * vector to the lowest cell id and let it ride into candidate scoring
     * with NULL sims; FuzzSpec pins the twins equal everywhere else
     * (zero norms, NaN, length mismatch, null elements, ties). */
   private[ext] def cellOf(vec: Column, cents: Cents): Column =
     if (cents.isEmpty) lit(null).cast("long")
     else nearestCells(vec, cents, 1).getItem(0)
+
+  /**
+   * Corpus-size-aware IVF cell count: `max(16, ⌈√n⌉)` — the standard
+   * inverted-file sizing rule (the FAISS guideline is 4√n–16√n cells;
+   * √n is its conservative floor). WHY this matters for the SELF-join
+   * ([[knnJoin]]): candidate pairs are `n · nprobe · n/k`, so a FIXED
+   * k makes the self-join quadratic in the corpus (measured: 10× rows
+   * → 103× wall at k=16), while k = √n caps it at the IVF-canonical
+   * `nprobe · n^1.5`. Query-set probes (`|Q| ≪ n`) stay linear in n
+   * either way. Callers with a tuned cell budget pass their own k.
+   */
+  def suggestedCells(n: Long): Int =
+    math.max(16L, math.ceil(math.sqrt(n.toDouble)).toLong).toInt
 
   /**
    * Train `k` coarse centroids with `iters` Lloyd iterations.
@@ -199,19 +153,6 @@ object AnnIvf {
    * practice — which bounds k·dim independently of n), not a bigger
    * driver.
    */
-  /**
-   * Corpus-size-aware IVF cell count: `max(16, ⌈√n⌉)` — the standard
-   * inverted-file sizing rule (the FAISS guideline is 4√n–16√n cells;
-   * √n is its conservative floor). WHY this matters for the SELF-join
-   * ([[knnJoin]]): candidate pairs are `n · nprobe · n/k`, so a FIXED
-   * k makes the self-join quadratic in the corpus (measured: 10× rows
-   * → 103× wall at k=16), while k = √n caps it at the IVF-canonical
-   * `nprobe · n^1.5`. Query-set probes (`|Q| ≪ n`) stay linear in n
-   * either way. Callers with a tuned cell budget pass their own k.
-   */
-  def suggestedCells(n: Long): Int =
-    math.max(16L, math.ceil(math.sqrt(n.toDouble)).toLong).toInt
-
   def trainCentroids(
       corpus: DataFrame, k: Int, iters: Int = 3, seed: Long = 42L): DataFrame = {
     val spark = corpus.sparkSession
@@ -248,29 +189,14 @@ object AnnIvf {
     * argmin (narrow, BELOW the posexplode Generate: `select(cellOf,
     * posexplode)` in one projection would re-run the k dots once per
     * exploded element, dim×) → per-(cell, dim) partial mean. ONE builder
-    * shared by the training loop and [[iterPlanProbe]], so the
-    * plan-audited shape IS the executed shape. */
-  private def iterPlan(base: DataFrame, cents: Cents): DataFrame =
+    * shared by the training loop and PlanAuditSpec, so the plan-audited
+    * shape IS the executed shape. */
+  private[ext] def iterPlan(base: DataFrame, cents: Cents): DataFrame =
     base
       .select(cellOf(col("embedding"), cents).as("cell"), col("embedding"))
       .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
       .groupBy("cell", "pos")
       .agg(avg(col("v").cast("double")).as("m"))
-
-  /** Dev-only: [[iterPlan]] on collected centroids, for PlanAuditSpec. */
-  private[graft] def iterPlanProbe(corpus: DataFrame, centroids: DataFrame): DataFrame =
-    iterPlan(corpus.select(col("vec_id"), col("embedding")),
-      collectCents(centroids))
-
-  /** Nearest-centroid cell per corpus vector: a narrow per-row argmin over
-    * the literal centroid array — no shuffle, no join. Empty centroid set
-    * → empty output (every id's nearest cell is undefined). */
-  def assignCells(corpus: DataFrame, centroids: DataFrame): DataFrame = {
-    val cents = collectCents(centroids)
-    val assigned = corpus.select(col("vec_id"),
-      cellOf(col("embedding"), cents).as("cell"))
-    if (cents.isEmpty) assigned.filter(lit(false)) else assigned
-  }
 
   /** The empty result in the declared output shape — returned when there
     * are no centroids (empty training corpus), rather than building probe
@@ -379,8 +305,7 @@ object AnnIvf {
    * over corpus ∪ batch (spec-asserted). The index is tied to its
    * centroid generation — after retraining, rebuild (cell ids and
    * assignments are meaningless across generations). Empty centroid set
-   * → empty index (every vector's nearest cell is undefined), matching
-   * [[assignCells]].
+   * → empty index (every vector's nearest cell is undefined).
    */
   def buildIvfIndex(corpus: DataFrame, centroids: DataFrame): DataFrame = {
     val cents = collectCents(centroids)
@@ -395,11 +320,7 @@ object AnnIvf {
    * and norms; the corpus side is a bare columnar scan of the persisted
    * inverted file. Must be probed with the SAME `centroids` that built
    * the index (cell ids from different generations are incomparable).
-   * Pass a [[stageIvfCells]] catalog table as `index` and the candidate
-   * join reads the corpus side pre-bucketed on exactly its join key —
-   * only the query side shuffles (spec-asserted: one cell-keyed Exchange
-   * with broadcast disabled). Same probe/score core as [[annTopK]], so
-   * the two can never drift.
+   * Same probe/score core as [[annTopK]], so the two can never drift.
    */
   def annTopKIndexed(
       queries: DataFrame, index: DataFrame, centroids: DataFrame,
@@ -408,48 +329,6 @@ object AnnIvf {
     if (cents.isEmpty) return emptyTopK(queries)
     topKFromCells(queries, index.select("cell", "nn_id", "nn_emb", "nn_n"),
       cents, kNeighbors, nprobe, excludeSelf)
-  }
-
-  /**
-   * Persist the inverted file as a catalog table BUCKETED on `cell` —
-   * the candidate join's exact key — so every [[annTopKIndexed]] probe
-   * reads the corpus side co-located and shuffle-free (the same
-   * write-once shuffle elimination as [[Dedup.stageDedupBuckets]],
-   * applied to the ANN index). `append = true` adds a new batch's index
-   * rows to the existing table (Spark verifies the bucket spec matches).
-   * `numBuckets` is fixed at creation — size it for the settled corpus
-   * so one bucket's vectors fit an executor's scan budget; re-stage to
-   * change it.
-   */
-  def stageIvfCells(
-      index: DataFrame, table: String, numBuckets: Int,
-      append: Boolean = false): Unit =
-    index.select("cell", "nn_id", "nn_emb", "nn_n")
-      .write.mode(if (append) "append" else "overwrite")
-      .format("parquet")
-      .bucketBy(numBuckets, "cell")
-      // sorted within buckets: a fresh stage also skips the corpus-side
-      // sort if the join plans sort-merge; appends add files per bucket,
-      // after which Spark correctly re-sorts — re-stage to restore it
-      .sortBy("cell")
-      .saveAsTable(table)
-
-  /** The [[Dedup.maintainDedupIndex]] loop for the IVF side: compact the
-    * [[buildIvfIndex]] parquet dir's append-accreted small files and,
-    * when `bucketTable` is set, re-stage the [[stageIvfCells]] table
-    * whole from the compacted index (restoring the fresh-stage
-    * single-file-per-bucket sort-elision). Probe results unchanged by
-    * construction; same swap contract as
-    * [[graft.stage.Staging.compactDir]]. */
-  def maintainIvfIndex(
-      spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      bucketTable: Option[String] = None, numBuckets: Int = 256,
-      targetFileBytes: Long = 128L * 1024 * 1024)
-      : Option[graft.stage.Staging.CompactionStat] = {
-    val stat = graft.stage.Staging.compactDir(spark, indexPath, targetFileBytes)
-    bucketTable.foreach(t =>
-      stageIvfCells(spark.read.parquet(indexPath), t, numBuckets))
-    stat
   }
 
   /**
@@ -467,16 +346,4 @@ object AnnIvf {
       corpus: DataFrame, centroids: DataFrame,
       kNeighbors: Int, nprobe: Int = 4): DataFrame =
     annTopK(corpus, corpus, centroids, kNeighbors, nprobe, excludeSelf = true)
-
-  /** [[knnJoin]] from the persisted inverted file alone — the query side
-    * is derived FROM the index (`nn_id, nn_emb` back to `vec_id,
-    * embedding`), so a corpus-wide neighbor refresh never rescans the raw
-    * corpus table. Probe norms are recomputed on the (narrow, codegen'd)
-    * query projection; the corpus side reads its precomputed `nn_n`. */
-  def knnJoinIndexed(
-      index: DataFrame, centroids: DataFrame,
-      kNeighbors: Int, nprobe: Int = 4): DataFrame =
-    annTopKIndexed(
-      index.select(col("nn_id").as("vec_id"), col("nn_emb").as("embedding")),
-      index, centroids, kNeighbors, nprobe, excludeSelf = true)
 }

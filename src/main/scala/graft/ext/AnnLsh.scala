@@ -33,12 +33,6 @@ import graft.functions.LshBuckets
  */
 object AnnLsh {
 
-  /** Deterministic ±1 hyperplane matrix (numPlanes × dim) — the
-    * [[graft.functions.LshBuckets]] LCG matrix reshaped for inspection. */
-  private[ext] def planeMatrix(numPlanes: Int, dim: Int, seed: Long): Seq[Seq[Double]] =
-    graft.functions.LshBuckets.planeRows(numPlanes, dim, seed)
-      .map(_.toDouble).toSeq.grouped(dim).toSeq
-
   /**
    * One `(id, table, bucket)` row per hash table; bucket packs the table's
    * `bitsPerTable` sign bits into a long.
@@ -162,49 +156,15 @@ object AnnLsh {
    * norms; the corpus side is a bare columnar scan of the persisted
    * index. Must be probed with the SAME `(dim, bitsPerTable, numTables,
    * seed)` that built the index. Same probe/score core as [[annTopK]],
-   * so the two can never drift.
-   *
-   * `corpusBuckets` (optional) removes the last per-call corpus cost: by
-   * default the candidate stage posexplodes `bkts` into `numTables` rows
-   * per vector and SHUFFLES them on `(table, bucket)` every call. Pass
-   * the [[stageLshBuckets]] catalog table instead and the candidate join
-   * reads the corpus side pre-bucketed on exactly its join key — only
-   * the query side shuffles (spec-asserted: one bucket-keyed Exchange,
-   * broadcast off). Must be staged from the SAME index generation.
+   * so the two can never drift. The candidate stage posexplodes `bkts`
+   * into `numTables` rows per vector and shuffles them on
+   * `(table, bucket)`.
    */
   def annTopKIndexed(
       queries: DataFrame, index: DataFrame, k: Int, dim: Int,
-      bitsPerTable: Int = 4, numTables: Int = 32, seed: Long = 42L,
-      corpusBuckets: Option[DataFrame] = None): DataFrame =
+      bitsPerTable: Int = 4, numTables: Int = 32, seed: Long = 42L): DataFrame =
     topKCore(queries,
-      corpusBuckets.getOrElse(
-        index.select(col("nn_id"),
-          posexplode(col("bkts")).as(Seq("table", "bucket")))),
+      index.select(col("nn_id"), posexplode(col("bkts")).as(Seq("table", "bucket"))),
       index.select("nn_id", "nn_emb", "nn_n"),
       k, dim, bitsPerTable, numTables, seed)
-
-  /**
-   * Persist the index's exploded bucket table `(table, bucket, nn_id)` as
-   * a catalog table BUCKETED on `(table, bucket)` — the candidate join's
-   * exact key — so every [[annTopKIndexed]] probe reads the corpus side
-   * co-located and shuffle-free (the same write-once shuffle elimination
-   * as [[Dedup.stageDedupBuckets]], applied to the LSH tables). `append =
-   * true` adds a new batch's bucket rows to the existing table (Spark
-   * verifies the bucket spec matches). `numBuckets` is fixed at creation
-   * — size it for the settled corpus; re-stage to change it.
-   */
-  def stageLshBuckets(
-      index: DataFrame, table: String, numBuckets: Int,
-      append: Boolean = false): Unit =
-    index
-      .select(col("nn_id"), posexplode(col("bkts")).as(Seq("table", "bucket")))
-      .select("table", "bucket", "nn_id")
-      .write.mode(if (append) "append" else "overwrite")
-      .format("parquet")
-      .bucketBy(numBuckets, "table", "bucket")
-      // sorted within buckets: a fresh stage also skips the corpus-side
-      // sort if the join plans sort-merge; appends add files per bucket,
-      // after which Spark correctly re-sorts — re-stage to restore it
-      .sortBy("table", "bucket")
-      .saveAsTable(table)
 }

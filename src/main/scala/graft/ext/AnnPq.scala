@@ -291,23 +291,6 @@ object AnnPq {
    * sims remain EXACT cosine (the re-rank contract); IVF probing and PQ
    * scoring decide only which candidates surface.
    */
-  /** Persist a [[buildIvfPqIndex]] frame as a catalog table BUCKETED on
-    * `cell` — the probe join's exact key — so [[ivfPqTopK]] reads the
-    * code side pre-partitioned and only the (small) probe side shuffles:
-    * the [[AnnIvf.stageIvfCells]] contract over m-byte codes instead of
-    * raw embeddings. Appends add files per bucket (Spark re-sorts
-    * correctly); re-stage periodically to restore the fresh-stage
-    * single-file sort elision. */
-  def stageIvfPqCells(
-      index: DataFrame, table: String, numBuckets: Int,
-      append: Boolean = false): Unit =
-    index.select("cell", "nn_id", "codes", "nn_n")
-      .write.mode(if (append) "append" else "overwrite")
-      .format("parquet")
-      .bucketBy(numBuckets, "cell")
-      .sortBy("cell")
-      .saveAsTable(table)
-
   def ivfPqTopK(
       queries: DataFrame, index: DataFrame, corpus: DataFrame,
       centroids: DataFrame, cb: Codebooks,

@@ -94,10 +94,7 @@ object Boilerplate {
    * corpus generation, persist as parquet, and cut any number of
    * batches against it with [[stripBoilerplateIndexed]] (the standing-
    * index symmetry every screen family here has: a daily cut should not
-   * re-explode the whole corpus's lines). Batches that are DOC-DISJOINT
-   * (the ingest contract — a document is counted where it first lands)
-   * merge additively via [[mergeBoilerplateIndexes]]; BoilerplateSpec
-   * pins the append law `index(a) ⊕ index(b) ≡ index(a ∪ b)`.
+   * re-explode the whole corpus's lines).
    */
   def buildBoilerplateIndex(
       docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
@@ -108,19 +105,6 @@ object Boilerplate {
       .distinct()
       .groupBy(col("_grp"), col("_key"))
       .agg(count(lit(1)).as("_df"))
-
-  /** The additive fold under [[mergeBoilerplateIndexes]] and the
-    * streaming loader's stripe merge — one definition of "sum the
-    * per-batch counts" so the two can't drift. */
-  private[graft] def foldIndexes(stripes: DataFrame): DataFrame =
-    stripes.groupBy(col("_grp"), col("_key"))
-      .agg(sum(col("_df")).as("_df"))
-
-  /** Additive merge of doc-disjoint batch indexes (unionAll + sum — a
-    * document appearing in BOTH inputs would double-count; dedup ids
-    * upstream if the feed can re-deliver). */
-  def mergeBoilerplateIndexes(a: DataFrame, b: DataFrame): DataFrame =
-    foldIndexes(a.unionByName(b))
 
   /** [[stripBoilerplate]] against a precomputed
     * [[buildBoilerplateIndex]] table: the batch pays only its own line

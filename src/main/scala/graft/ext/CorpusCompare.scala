@@ -37,8 +37,7 @@ object CorpusCompare {
   /** Exact term counts of a corpus — the ADDITIVE state every divergence
     * view derives from: counts of a union of corpus splits are the
     * column-wise sums of each split's counts, so this is a mergeable
-    * partial ([[graft.streaming.StreamingDrift]] appends these per
-    * batch; q161 declares the merge law). Returns `(term, n)`. */
+    * partial (q161 declares the merge law). Returns `(term, n)`. */
   def termCounts(df: DataFrame, textCol: String = "text"): DataFrame =
     df.select(explode(TextOps.tokens(col(textCol))).as("term"))
       .groupBy("term").agg(count(lit(1)).as("n"))
@@ -110,10 +109,9 @@ object CorpusCompare {
         round((col("_kp").cast("double") + col("_kq").cast("double"))
           / 2.0, 6).as("js"))
 
-  /** [[jsDivergence]] over precomputed/merged count frames — the view a
-    * standing drift monitor reads: the reference corpus's counts are
-    * computed once, the live side's counts fold from streamed partials
-    * ([[mergeCounts]]), and no text is re-tokenized. */
+  /** [[jsDivergence]] over precomputed/merged count frames: each side's
+    * counts are computed once or folded from partials ([[mergeCounts]]),
+    * and no text is re-tokenized. */
   def jsDivergenceFromCounts(
       countsA: DataFrame, countsB: DataFrame,
       alpha: Double = 0.5): DataFrame = {
@@ -121,46 +119,6 @@ object CorpusCompare {
     summarize(termFrameFromCounts(
       countsA.withColumnRenamed("n", "cp"),
       countsB.withColumnRenamed("n", "cq"), alpha))
-  }
-
-  /** Two-sample χ² homogeneity over precomputed count frames — the
-    * significance-scaled companion to [[jsDivergenceFromCounts]] (JS
-    * says HOW FAR, χ² says whether the gap outruns sampling noise at
-    * these corpus sizes). Densified by construction: the full-outer
-    * term join keeps zero cells, and the fold is
-    * [[graft.analytics.StatsTests.chiSquared]] over the long-format
-    * cells. Returns its `(n, n_rows, n_cols, dof, chi2)` row
-    * (n_rows = 2 sides, n_cols = union vocabulary). */
-  def chiSquaredFromCounts(
-      countsA: DataFrame, countsB: DataFrame): DataFrame = {
-    val cells = countsA
-      .select(lit("a").as("_side"), col("term"), col("n"))
-      .unionByName(countsB
-        .select(lit("b").as("_side"), col("term"), col("n")))
-      .filter(col("n") > 0)
-      // StatsTests.chiSquared counts raw ROWS; here the cells arrive
-      // pre-counted, so its margins→densify→fold algebra is replicated
-      // over the weighted cells (vocabulary-sized throughout)
-      .groupBy(col("_side"), col("term")).agg(sum(col("n")).as("o"))
-    val rowTot = cells.groupBy("_side").agg(sum(col("o")).as("rt"))
-    val colTot = cells.groupBy("term").agg(sum(col("o")).as("ct"))
-    val tot = cells.agg(sum(col("o")).as("n"),
-      countDistinct(col("_side")).as("n_rows"),
-      countDistinct(col("term")).as("n_cols"))
-    val e = col("rt").cast("double") * col("ct").cast("double") /
-      col("n").cast("double")
-    rowTot.crossJoin(colTot)
-      .join(cells, Seq("_side", "term"), "left")
-      .withColumn("o", coalesce(col("o"), lit(0L)))
-      .crossJoin(broadcast(tot))
-      .select(col("n"), col("n_rows"), col("n_cols"),
-        round((col("o").cast("double") - e) *
-          (col("o").cast("double") - e) / e, 12).cast(dec).as("_t"))
-      .groupBy(col("n"), col("n_rows"), col("n_cols"))
-      .agg(round(sum(col("_t")).cast("double"), 6).as("chi2"))
-      .select(col("n"), col("n_rows"), col("n_cols"),
-        ((col("n_rows") - 1) * (col("n_cols") - 1)).as("dof"),
-        col("chi2"))
   }
 
   /**

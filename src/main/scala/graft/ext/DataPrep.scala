@@ -88,9 +88,7 @@ object DataPrep {
    * quality + repetition filters. Every operation is a stateless per-row
    * codegen'd expression — no shuffle, no watermark, no aggregation — so
    * the SAME call works on a batch DataFrame, on a streaming DataFrame,
-   * or inside a `foreachBatch` ahead of
-   * [[graft.streaming.StreamingDedup.processBatch]] (the streaming
-   * corpus-prep composition; StreamingPrepSpec drives it end-to-end).
+   * or inside a `foreachBatch`.
    */
   def screen(docs: DataFrame, textCol: String, config: Config = Config()): DataFrame = {
     val text: Column = col(textCol)

@@ -89,26 +89,6 @@ object Dedup {
     // array value-identical to feeding it the raw split (spec-pinned)
     column(WordShingles(WhitespaceTokens(expression(text)), n))
 
-  /** HOF formulation of [[shingles]] — kept as the engine-agnostic
-    * semantics reference the spec checks the native expression against
-    * (the [[minhashSignatureHof]] twin discipline). The interpreted
-    * filter→zip→transform→filter→distinct chain was the per-row hot
-    * path of the whole near-dup family until r17 swapped in the
-    * codegen'd `graft_shingles` (full-array-equality spec-pinned). */
-  private[graft] def shinglesHof(text: Column, n: Int = 3): Column = {
-    val toks = filter(split(lower(text), "\\s+"), t => length(t) > 0)
-    val shifted = (0 until n).map { k =>
-      if (k == 0) toks
-      else slice(toks, lit(k + 1), greatest(size(toks) - k, lit(0)))
-    }
-    val z = arrays_zip(shifted: _*)
-    array_distinct(filter(
-      transform(z, x =>
-        when((0 until n).map(k => x.getField(k.toString).isNotNull).reduce(_ && _),
-          concat_ws(" ", (0 until n).map(k => x.getField(k.toString)): _*))),
-      s => s.isNotNull))
-  }
-
   /**
    * MinHash signature: element i = min over shingles of `xxhash64(shingle, i)`.
    * `numHashes` independent hash functions via the seed column — one array
@@ -120,12 +100,6 @@ object Dedup {
    */
   def minhashSignature(shingleCol: Column, numHashes: Int): Column =
     column(MinHashSignature(expression(shingleCol), numHashes))
-
-  /** HOF formulation of [[minhashSignature]] — kept as the engine-agnostic
-    * semantics reference the spec checks the native expression against. */
-  private[graft] def minhashSignatureHof(shingleCol: Column, numHashes: Int): Column =
-    transform(sequence(lit(0), lit(numHashes - 1)), i =>
-      array_min(transform(shingleCol, s => xxhash64(s, i))))
 
   /**
    * LSH banding: one `(id, band, bucket)` row per band, where `bucket`
@@ -144,30 +118,6 @@ object Dedup {
               .as("bucket")))).as("bb"))
       .select(col(idCol), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
 
-  /**
-   * Candidate pairs (a_id < b_id) from a bucket-equi self-join — the
-   * co-located alternative to an all-pairs cross join. `distinct` collapses
-   * pairs that collide in several bands. NOTE: no exact-dup collapse here —
-   * this is the raw LSH stage; [[nearDuplicatePairs]] wraps it with the
-   * skew guard.
-   */
-  def candidatePairs(
-      df: DataFrame, idCol: String, shingleCol: String,
-      bands: Int = 16, rowsPerBand: Int = 2): DataFrame = {
-    // Materialize the signatures and CUT the lineage BEFORE the band
-    // explode: projection collapse otherwise inlines the full
-    // |shingles|×|hashes| signature expression into the per-band transform
-    // and the self-join recomputes it once per band per side (measured
-    // 200s+ instead of ~1s at sf0.1). The signature table is one array of
-    // `bands×rowsPerBand` longs per doc — tiny relative to the corpus, the
-    // textbook recompute-vs-store win.
-    val sig = Materialize.cut(
-      df.filter(size(col(shingleCol)) > 0)
-        .select(col(idCol),
-          minhashSignature(col(shingleCol), bands * rowsPerBand).as("sig")))
-    pairsFromSig(sig, idCol, bands, rowsPerBand)
-  }
-
   /** Bucket-join candidate pairs from an already-materialized signature
     * table (the explode and self-join only touch attributes, so no further
     * checkpointing is needed). */
@@ -185,8 +135,8 @@ object Dedup {
   /** Exact Jaccard of two shingle-set columns: |a ∩ b| / |a ∪ b| as an
     * integer-derived double (bit-reproducible). Guard `size(array_union)`
     * > 0 before comparing — THE near-dup verify predicate, shared by the
-    * batch pipeline below and the streaming rep-store verify
-    * ([[graft.streaming.StreamingDedup]]) so the two can never drift. */
+    * batch pipeline and the incremental screen below so the two can never
+    * drift. */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") /
       size(array_union(a, b)).cast("double")
@@ -402,24 +352,6 @@ object Dedup {
   }
 
   /**
-   * Near-dup dedup: drop every doc that has a verified near-duplicate with
-   * a smaller id (canonical survivor = least id of each duplicate group).
-   * One-hop semantics, not transitive closure — a chain A~B~C with A≁C
-   * whose middle doc carries the largest id keeps both endpoints; at a
-   * ≥0.8 threshold chains are rare and this avoids an iterative pass. For
-   * low-threshold dedup use [[dedupTransitive]], which collapses each
-   * connected component to its least id.
-   */
-  def dedup(
-      df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8, n: Int = 3,
-      bands: Int = 16, rowsPerBand: Int = 2): DataFrame = {
-    val dupIds = nearDuplicatePairs(df, idCol, textCol, threshold, n, bands, rowsPerBand)
-      .select(col("b_id").as(idCol)).distinct()
-    df.join(dupIds, Seq(idCol), "left_anti")
-  }
-
-  /**
    * Connected components of the undirected pair graph `(a_id, b_id)` by
    * iterative min-label propagation: every node starts labeled with its own
    * id; each round replaces a node's label with the minimum over itself and
@@ -541,10 +473,10 @@ object Dedup {
   }
 
   /**
-   * Transitive near-dup dedup: [[dedup]]'s one-hop drop rule replaced by
-   * connected components, so a chain A~B~C with A≁C keeps exactly one
-   * survivor (the least id of the component) instead of both endpoints.
-   * The right tool below ~0.8 thresholds, where chains are common; costs
+   * Transitive near-dup dedup: drop every doc that has a verified
+   * near-duplicate, keeping one survivor per connected component of the
+   * pair graph (its least id), so a chain A~B~C with A≁C keeps exactly
+   * one survivor. Chains are common below ~0.8 thresholds; costs
    * [[components]]' bounded label-propagation rounds on top of the pair
    * pipeline. Throws (via [[components]]) rather than silently
    * under-dedup if the pair graph has a chain deeper than `maxIters`.
@@ -610,7 +542,7 @@ object Dedup {
    *
    * Semantics are one-sided on purpose: the corpus is settled (nothing
    * there is ever dropped), and batch-INTERNAL duplicates are out of
-   * scope — run [[dedup]]/[[dedupTransitive]] on the batch first; the
+   * scope — run [[dedupTransitive]] on the batch first; the
    * composition is associative because this filter depends only on
    * (batch text, corpus texts).
    *
@@ -668,8 +600,6 @@ object Dedup {
    * val r = Dedup.dedupIncrementalIndexed(todaysBatch, index, "id", "text", 0.6)
    * r.accepted.write.…           // new corpus rows
    * r.indexAppend.write.mode("append").parquet(indexPath) // index keeps up
-   * // periodically (appends accrete one small file per batch):
-   * Dedup.maintainDedupIndex(spark, indexPath, Some(bucketTable), 4096)
    * }}}
    *
    * `index ∪ indexAppend` is EXACTLY `buildDedupIndex(corpus ∪ accepted)`
@@ -683,89 +613,18 @@ object Dedup {
    *
    * The index must have been built with the SAME `n`/`bands`/
    * `rowsPerBand` passed here — signatures from different parameters are
-   * incomparable (bucket hashes span different signature slices). An
-   * index persisted before the boundary-empty shingle fix must be run
-   * through [[repairPreFixShingles]] once and rewritten.
-   *
-   * `corpusBuckets` (optional) removes the last per-call corpus cost: by
-   * default the candidate stage re-explodes the index into `bands` rows
-   * per signature and SHUFFLES them on `(band, bucket)` every call — at a
-   * billion-text corpus that is ~10^10 tiny rows through the wire per
-   * daily batch. Pass the [[stageDedupBuckets]] catalog table instead and
-   * the join reads the corpus side pre-bucketed on exactly the join key:
-   * only the (small) batch side shuffles, the corpus side is a bare
-   * columnar scan (spec-asserted: one Exchange in the candidate join,
-   * batch side only). Must be built from the SAME index generation —
-   * stage it when the index is built, append when the index appends.
+   * incomparable (bucket hashes span different signature slices). The
+   * candidate stage re-explodes the index into `bands` rows per signature
+   * and shuffles them on `(band, bucket)` every call.
    */
   def dedupIncrementalIndexed(
       batch: DataFrame, index: DataFrame, idCol: String, textCol: String,
       threshold: Double, n: Int = 3,
-      bands: Int = 16, rowsPerBand: Int = 2,
-      corpusBuckets: Option[DataFrame] = None): IncrementalDedupResult =
+      bands: Int = 16, rowsPerBand: Int = 2): IncrementalDedupResult =
     screen(batch, idCol, textCol, threshold, n, bands, rowsPerBand,
       corpusHashes = index.select("ghash"),
       cSh  = index.filter(size(col("sh")) > 0).select("ghash", "sh"),
-      cSig = index.filter(col("sig").isNotNull).select("ghash", "sig"),
-      corpusBuckets = corpusBuckets)
-
-  /**
-   * Persist the index's exploded band-bucket table `(ghash, band, bucket)`
-   * as a catalog table BUCKETED on `(band, bucket)` — the candidate
-   * join's exact key — so every incremental screen reads the corpus side
-   * co-located and shuffle-free ([[stageBucketed]]'s write-once argument
-   * applied to the dedup index; the same bucket-table layout Hive-era
-   * LSH pipelines used). `append = true` adds a new batch's bucket rows
-   * to the existing table (Spark verifies the bucket spec matches).
-   * Size `numBuckets` for the SETTLED corpus — it is fixed at creation,
-   * so at 100 TB pick enough buckets that one bucket's rows fit an
-   * executor's scan budget (e.g. 4096); re-stage to change it.
-   */
-  def stageDedupBuckets(
-      index: DataFrame, table: String, numBuckets: Int,
-      bands: Int = 16, rowsPerBand: Int = 2, append: Boolean = false): Unit =
-    bandBuckets(index.filter(col("sig").isNotNull), "ghash", "sig",
-        bands, rowsPerBand)
-      .write.mode(if (append) "append" else "overwrite")
-      .format("parquet")
-      .bucketBy(numBuckets, "band", "bucket")
-      // sorted within buckets: while a bucket holds one file (a fresh
-      // stage), a sort-merge candidate join skips the corpus-side SORT as
-      // well as its shuffle; appends add files per bucket, after which
-      // Spark correctly re-sorts — [[maintainDedupIndex]] re-stages
-      // periodically to restore it
-      .sortBy("band", "bucket")
-      .saveAsTable(table)
-
-  /**
-   * Standing maintenance for a persisted [[buildDedupIndex]] parquet dir
-   * and (optionally) its [[stageDedupBuckets]] catalog table — the loop
-   * the daily append docs promise but previously left to the operator: N
-   * `indexAppend` cycles accrete one small parquet file per batch (at
-   * 100 TB the footer/open/listing overhead dominates the index scan)
-   * and each `stageDedupBuckets(append = true)` adds files per bucket,
-   * losing the fresh-stage single-file sort-elision. One call compacts
-   * the index dir in place ([[graft.stage.Staging.compactDir]] — same
-   * absence-window / `.bak`-recovery / one-maintainer contract) and,
-   * when `bucketTable` is set, re-stages the bucket table WHOLE from the
-   * compacted index, restoring both properties. Screen results are
-   * unchanged by construction — compaction only moves rows between
-   * files, and the re-staged table holds exactly the index's band
-   * buckets (DedupSpec runs 3 append cycles + maintenance and asserts
-   * byte-identical screens and a bounded file count). Run it on the
-   * schedule small files accrete on — e.g. weekly against daily appends.
-   */
-  def maintainDedupIndex(
-      spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      bucketTable: Option[String] = None, numBuckets: Int = 256,
-      bands: Int = 16, rowsPerBand: Int = 2,
-      targetFileBytes: Long = 128L * 1024 * 1024)
-      : Option[graft.stage.Staging.CompactionStat] = {
-    val stat = graft.stage.Staging.compactDir(spark, indexPath, targetFileBytes)
-    bucketTable.foreach(t => stageDedupBuckets(
-      spark.read.parquet(indexPath), t, numBuckets, bands, rowsPerBand))
-    stat
-  }
+      cSig = index.filter(col("sig").isNotNull).select("ghash", "sig"))
 
   /**
    * Derive the incremental-dedup index of a corpus: one row per DISTINCT
@@ -790,56 +649,6 @@ object Dedup {
         minhashSignature(col("sh"), bands * rowsPerBand)))
 
   /**
-   * Repair `sh`/`sig` columns persisted BEFORE [[shingles]] dropped
-   * boundary-empty tokens: the old shingler kept the empty token a
-   * leading/trailing whitespace run produces, so a stored set may hold
-   * phantom windows (visible as a leading or trailing space in the joined
-   * n-gram) that no longer exist under current semantics — they depress
-   * Jaccard against freshly-shingled text, so a near-dup re-delivery of a
-   * whitespace-padded doc would evade the screen. Stale rows are repaired
-   * in place: phantom windows are dropped (the survivors are byte-equal
-   * to current [[shingles]] output — boundary empties only ever removed
-   * whole windows, never changed surviving ones), and `sig` is re-signed
-   * from the repaired set, NULL when it empties (the text is below the
-   * n-token floor under current semantics). Clean rows — everything
-   * written post-fix — pass through bit-unchanged, so the repair is
-   * idempotent and safe to leave in a load path; columns other than
-   * `sh`/`sig` ride along. Run once over a persisted [[buildDedupIndex]]
-   * parquet and rewrite it (then re-stage any [[stageDedupBuckets]] table
-   * from the repaired index — its buckets hash the old signatures); the
-   * streaming rep store applies this automatically on every store load.
-   */
-  /** True where a persisted `sh` set still holds a pre-fix phantom
-    * window — exactly the rows [[repairPreFixShingles]] would rewrite (or
-    * drop, when the repaired set empties). A cheap single-column
-    * predicate for "does this store/index still need the one-time repair
-    * PERSISTED": the streaming store uses it to force a swap when a
-    * batch would otherwise skip the write and leave stale rows on disk. */
-  def hasPreFixShingles(n: Int = 3): Column =
-    exists(col("sh"), s =>
-      !(size(filter(split(s, " "), t => length(t) > 0)) === n))
-
-  def repairPreFixShingles(
-      df: DataFrame, n: Int = 3,
-      bands: Int = 16, rowsPerBand: Int = 2): DataFrame = {
-    // a current-semantics shingle re-splits into exactly n non-empty
-    // tokens (tokens themselves never contain whitespace)
-    def full(s: Column): Column =
-      size(filter(split(s, " "), t => length(t) > 0)) === n
-    val stale = hasPreFixShingles(n)
-    val repaired = when(stale, filter(col("sh"), s => full(s)))
-      .otherwise(col("sh"))
-    // one withColumns: BOTH replacements read the ORIGINAL sh — a second
-    // chained withColumn would re-evaluate `stale` against the repaired
-    // set (always clean) and keep the old signature
-    df.withColumns(Map(
-      "sh" -> repaired,
-      "sig" -> when(stale, when(size(repaired) > 0,
-          minhashSignature(repaired, bands * rowsPerBand)))
-        .otherwise(col("sig"))))
-  }
-
-  /**
    * The shared screen core both incremental overloads run, so the two
    * can never drift. Corpus side arrives as three tables: `corpusHashes`
    * `(ghash)` for the exact stage, `cSh` `(ghash, sh)` (non-empty
@@ -850,8 +659,7 @@ object Dedup {
   private def screen(
       batch: DataFrame, idCol: String, textCol: String, threshold: Double,
       n: Int, bands: Int, rowsPerBand: Int,
-      corpusHashes: DataFrame, cSh: DataFrame, cSig: DataFrame,
-      corpusBuckets: Option[DataFrame] = None): IncrementalDedupResult = {
+      corpusHashes: DataFrame, cSh: DataFrame, cSig: DataFrame): IncrementalDedupResult = {
     val bm = Materialize.cut(memberships(batch, idCol, textCol)) // (ghash, id)
 
     // exact stage: batch groups whose content the corpus already holds
@@ -870,11 +678,7 @@ object Dedup {
 
     val bBk = bandBuckets(bSig, "ghash", "sig", bands, rowsPerBand)
       .select(col("ghash").as("b_gh"), col("band"), col("bucket"))
-    // corpus buckets from the pre-bucketed catalog table when given
-    // (renaming is a projection — it keeps the table's bucket layout on
-    // (band, bucket)); otherwise re-exploded from the signature table
-    val cBk = corpusBuckets
-      .getOrElse(bandBuckets(cSig, "ghash", "sig", bands, rowsPerBand))
+    val cBk = bandBuckets(cSig, "ghash", "sig", bands, rowsPerBand)
       .select(col("ghash").as("c_gh"), col("band"), col("bucket"))
     val dropped = nearDropped(bSh, bBk, cSh, cBk, threshold)
 
@@ -904,11 +708,7 @@ object Dedup {
   /** The candidate-generation join of the incremental screen, split out so
     * its physical shape is plan-auditable in isolation: batch buckets
     * `(b_gh, band, bucket)` equi-joined to corpus buckets
-    * `(c_gh, band, bucket)` on the band key. When the corpus side is a
-    * [[stageDedupBuckets]] catalog table, its scan satisfies the join's
-    * partitioning requirement outright and only the batch side gets an
-    * Exchange — the corpus is never shuffled (DedupSpec pins exactly one
-    * hash Exchange below the join with broadcast disabled). */
+    * `(c_gh, band, bucket)` on the band key. */
   private[graft] def candidateGhPairs(bBk: DataFrame, cBk: DataFrame): DataFrame =
     bBk.join(cBk, Seq("band", "bucket"))
       .select("b_gh", "c_gh").distinct()
@@ -1001,11 +801,10 @@ object Dedup {
   /**
    * The standing state of [[dedupParagraphs]]: one row per distinct
    * paragraph hash with its first occurrence —
-   * `(h, first_id, first_pos)`. ADDITIVE under
-   * [[mergeParagraphIndexes]] (min associates), so a persisted index
-   * maintains per crawl instead of re-splitting history — the CCNet
-   * production shape: each new shard dedups against all prior shards'
-   * paragraph hashes.
+   * `(h, first_id, first_pos)`. A persisted index screens each new
+   * shard ([[dedupParagraphsIndexed]]) instead of re-splitting history —
+   * the CCNet production shape: each new shard dedups against all prior
+   * shards' paragraph hashes.
    */
   def buildParagraphIndex(
       docs: DataFrame,
@@ -1016,16 +815,6 @@ object Dedup {
       .groupBy(col("h"))
       .agg(min(struct(col(idCol).as("first_id"), col("pos").as("first_pos")))
         .as("f"))
-      .select(col("h"), col("f.first_id").as("first_id"),
-        col("f.first_pos").as("first_pos"))
-
-  /** `merge ≡ from-scratch` for the paragraph index: min over
-    * `(first_id, first_pos)` associates, so disjoint shards' indexes
-    * fold to the full corpus's (the [[TextOps.mergeTermFrequencies]]
-    * law applied to first occurrences). */
-  def mergeParagraphIndexes(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b).groupBy(col("h"))
-      .agg(min(struct(col("first_id"), col("first_pos"))).as("f"))
       .select(col("h"), col("f.first_id").as("first_id"),
         col("f.first_pos").as("first_pos"))
 

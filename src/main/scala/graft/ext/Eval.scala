@@ -81,9 +81,8 @@ object Eval {
   /**
    * Corpus-scale kNN label agreement: the [[knnClassify]] vote fed by a
    * precomputed ANN neighbor frame (`(q_id, nn_id, sim, rank)` — the
-   * [[AnnIvf.knnJoin]] / [[AnnIvf.knnJoinIndexed]] shape, `excludeSelf`
-   * already applied) instead of the all-pairs scan. This is how the
-   * probe runs on the FULL corpus: candidate generation is the IVF cell
+   * [[AnnIvf.knnJoin]] shape, `excludeSelf` already applied) instead of
+   * the all-pairs scan. This is how the probe runs on the FULL corpus: candidate generation is the IVF cell
    * equi-join (bounded per cell, never all-pairs), and the vote itself
    * is two shuffled label joins plus the shared [[majorityVote]].
    *
@@ -123,14 +122,8 @@ object Eval {
    * sims round to 6 dp before ranking (the [[knnClassify]] float rule),
    * ranks tie-break by neighbor id.
    *
-   * This exact form carries the same broadcast-probe eval contract as
-   * [[knnClassify]] (anchor side sample-sized); at corpus scale feed an
-   * ANN neighbor frame to [[hardNegativesAnn]] instead — candidate
-   * generation stays the bounded IVF cell join, never all-pairs. Build
-   * that frame with `kNeighbors` comfortably above `k`: cross-label
-   * filtering consumes same-label candidates, so a frame of exactly
-   * `k` neighbors yields fewer than `k` hard negatives near cluster
-   * cores (the recall/`kNeighbors` trade the EvalSpec law pins).
+   * It carries the same broadcast-probe eval contract as
+   * [[knnClassify]] (anchor side sample-sized).
    */
   def hardNegatives(
       emb: DataFrame,
@@ -154,28 +147,7 @@ object Eval {
             / nullif(col("q_n") * col("nn_n"), lit(0.0)), 6)), k)
   }
 
-  /** Corpus-scale [[hardNegatives]]: the same cross-label re-rank fed by
-    * a precomputed ANN neighbor frame (`(q_id, nn_id, sim, rank)`, the
-    * [[AnnIvf.knnJoin]] shape) joined against `labels` on both sides —
-    * one shared ranking core, so the exact and ANN-fed paths can never
-    * drift. */
-  def hardNegativesAnn(
-      neighbors: DataFrame, labels: DataFrame,
-      idCol: String = "vec_id", labelCol: String = "label",
-      k: Int = 5): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    val lab = labels.filter(col(labelCol).isNotNull)
-      .select(col(idCol), col(labelCol))
-    rankCrossLabel(
-      neighbors
-        .join(lab.select(col(idCol).as("nn_id"),
-          col(labelCol).as("nn_label")), "nn_id")
-        .join(lab.select(col(idCol).as("q_id"),
-          col(labelCol).as("q_label")), "q_id")
-        .drop("rank"), k)
-  }
-
-  /** Shared hard-negative core: keep cross-label pairs, re-rank by
+  /** The hard-negative core: keep cross-label pairs, re-rank by
     * `(sim desc, nn_id)` per anchor, cut at `k`. */
   private def rankCrossLabel(pairs: DataFrame, k: Int): DataFrame = {
     val byRank = Window.partitionBy(col("q_id"))

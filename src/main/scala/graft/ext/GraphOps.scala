@@ -44,9 +44,8 @@ object GraphOps {
    * Shape at scale: each iteration is ONE shuffled equi-join of the
    * rank frame against the edge list on `src` plus a hash aggregate on
    * `dst` — the canonical distributed PageRank step. The edge list is
-   * scanned per iteration; for many iterations persist `edges`/`deg`
-   * (or write them through [[graft.stage.Staging.stageBucketed]] on
-   * `src` to pin the join side to one Exchange). The dangling aggregate
+   * scanned per iteration; for many iterations persist `edges`/`deg`.
+   * The dangling aggregate
    * and node count are scalar/1-row frames (metadata-sized). Rank state
    * is node-sized, never edge-sized. `iters` is capped so plan lineage
    * stays bounded — at depth beyond the cap, checkpoint between calls.

@@ -52,9 +52,6 @@ object Materialize {
   private val counter = new AtomicLong(0)
   private val spillPaths = scala.collection.mutable.ArrayBuffer[String]()
   private val cutRddIds = scala.collection.mutable.ArrayBuffer[Int]()
-  // active per-thread scope (see [[scoped]]); null outside any scope
-  private val scopeIds = new ThreadLocal[scala.collection.mutable.ArrayBuffer[Int]]()
-  private val scopeSpills = new ThreadLocal[scala.collection.mutable.ArrayBuffer[String]]()
 
   /** Materialize `df` and cut its lineage (see class doc for mode choice). */
   def cut(df: DataFrame): DataFrame = {
@@ -65,7 +62,6 @@ object Materialize {
           s"_cut${counter.incrementAndGet()}"
         df.write.mode("overwrite").parquet(path)
         spillPaths.synchronized { spillPaths += path }
-        Option(scopeSpills.get()).foreach(_ += path)
         spark.read.parquet(path)
       case _ =>
         // record exactly the RDD this cut pins: eager localCheckpoint wraps
@@ -80,42 +76,7 @@ object Materialize {
           case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
         }
         cutRddIds.synchronized { cutRddIds ++= ids }
-        Option(scopeIds.get()).foreach(_ ++= ids)
         out
-    }
-  }
-
-  /**
-   * Run `f` in a cut scope and release ONLY the cuts `f` made on this
-   * thread when it completes — the release discipline for callers that
-   * share the session with concurrent work (e.g. a `foreachBatch` stage
-   * running next to other streams or batch jobs), where the whole-session
-   * [[release]] would unpersist someone else's in-flight checkpoints.
-   * Scopes nest: an inner scope releases only its own cuts and the outer
-   * scope's tracking resumes when it exits. Cuts made by `f` on OTHER
-   * threads (Spark actions are synchronous, so this does not happen in
-   * practice) stay tracked for the session-wide release.
-   */
-  def scoped[T](spark: SparkSession)(f: => T): T = {
-    val ids = scala.collection.mutable.ArrayBuffer[Int]()
-    val spills = scala.collection.mutable.ArrayBuffer[String]()
-    val prevIds = scopeIds.get()
-    val prevSpills = scopeSpills.get()
-    scopeIds.set(ids)
-    scopeSpills.set(spills)
-    try f
-    finally {
-      if (prevIds == null) scopeIds.remove() else scopeIds.set(prevIds)
-      if (prevSpills == null) scopeSpills.remove() else scopeSpills.set(prevSpills)
-      cutRddIds.synchronized { cutRddIds --= ids }
-      spillPaths.synchronized { spillPaths --= spills }
-      val live = spark.sparkContext.getPersistentRDDs
-      ids.foreach(id => live.get(id).foreach(_.unpersist(blocking = true)))
-      spills.foreach { p =>
-        val path = new Path(p)
-        path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(path, true)
-      }
     }
   }
 

@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
  * (DPR's in-batch + hard negatives, Sentence-BERT mining).
  *
  * Input is a precomputed neighbor frame (`(q_id, nn_id, sim, rank)` —
- * [[AnnIvf.knnJoin]] / [[AnnIvf.knnJoinIndexed]], self-pairs already
- * excluded), so mining cost is label joins + one query-partitioned
- * re-rank, never a similarity scan of its own: at corpus scale the ANN
+ * [[AnnIvf.knnJoin]], self-pairs already excluded), so mining cost is
+ * label joins + one query-partitioned re-rank, never a similarity scan of
+ * its own: at corpus scale the ANN
  * frame is the bounded cell equi-join, and this composes downstream of
  * it exactly like [[Eval.knnClassifyAnn]] (same frame can feed both).
  *
@@ -59,87 +59,6 @@ object Mining {
         (col("kind") === "pos" && col("pair_rank") <= kPos) ||
         (col("kind") === "neg" && col("pair_rank") <= kNeg))
       .select(col("q_id"), col("nn_id"), col("kind"), col("pair_rank"))
-  }
-
-  /**
-   * Maximal-marginal-relevance re-ranking (Carbonell & Goldstein 1998)
-   * of a candidate frame: greedily pick, per query, the candidate
-   * maximizing `λ·sim(q,c) − (1−λ)·max_{s∈S} cos(c,s)` — relevance
-   * traded against redundancy with what is already selected. The
-   * diversification step every retrieval stack runs between ANN top-N
-   * and the final top-k (near-duplicate hits crowd out coverage).
-   *
-   * Input is `(q_id, nn_id, sim, embedding)` — an ANN/brute-force
-   * neighbor frame JOINED back to its vectors; rows with a NULL sim or
-   * embedding drop. The greedy scan is inherently sequential per query,
-   * so it runs as `flatMapGroups` over `q_id`: each group holds only
-   * that query's candidate top-N (bounded by the feeding frame's k —
-   * document N, never the corpus), groups are distributed across
-   * executors, and the first pick is pure relevance (empty-set penalty
-   * 0). Determinism: candidates order by (sim DESC, nn_id ASC), score
-   * ties break to the smaller nn_id; pairwise cosine is the
-   * [[Similarity]] array-order left-fold (zero-norm pairs penalize 0).
-   * Returns `(q_id, nn_id, mmr_rank, score)`, `mmr_rank` 1-based.
-   *
-   * Not SQL-expressible (greedy recursion over the selected set), so
-   * spec-verified against a driver-side reference — the [[BpeTrain]]
-   * precedent.
-   */
-  def mmrDiversify(
-      candidates: DataFrame, lambda: Double, k: Int): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(lambda >= 0.0 && lambda <= 1.0,
-      s"lambda must be in [0,1], got $lambda")
-    val spark = candidates.sparkSession
-    import spark.implicits._
-    candidates
-      .filter(col("sim").isNotNull && col("embedding").isNotNull)
-      .select(col("q_id").cast("long"), col("nn_id").cast("long"),
-        col("sim").cast("double"), col("embedding"))
-      .as[(Long, Long, Double, Array[Float])]
-      .groupByKey(_._1)
-      .flatMapGroups { (q, it) =>
-        val cands = it.toArray.sortBy(c => (-c._3, c._2))
-        val n = cands.length
-        def dot(a: Array[Float], b: Array[Float]): Double = {
-          var s = 0.0; var i = 0
-          val m = math.min(a.length, b.length)
-          while (i < m) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-          s
-        }
-        val norms = cands.map(c => math.sqrt(dot(c._4, c._4)))
-        def cos(i: Int, j: Int): Double =
-          if (norms(i) == 0.0 || norms(j) == 0.0) 0.0
-          else dot(cands(i)._4, cands(j)._4) / (norms(i) * norms(j))
-        val selected = new scala.collection.mutable.ArrayBuffer[Int]()
-        val chosen = new Array[Boolean](n)
-        val out = new scala.collection.mutable.ArrayBuffer[
-          (Long, Long, Int, Double)]()
-        var rank = 1
-        while (rank <= math.min(k, n)) {
-          var best = -1; var bestScore = Double.NegativeInfinity
-          var i = 0
-          while (i < n) {
-            if (!chosen(i)) {
-              var pen = 0.0
-              selected.foreach(j => pen = math.max(pen, cos(i, j)))
-              val score = lambda * cands(i)._3 - (1.0 - lambda) * pen
-              // strict > : on ties the earlier candidate (higher sim,
-              // then smaller nn_id) wins — deterministic
-              if (score > bestScore) { best = i; bestScore = score }
-            }
-            i += 1
-          }
-          chosen(best) = true
-          selected += best
-          out += ((q, cands(best)._2, rank,
-            BigDecimal(bestScore)
-              .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
-          rank += 1
-        }
-        out.iterator
-      }
-      .toDF("q_id", "nn_id", "mmr_rank", "score")
   }
 
   /**

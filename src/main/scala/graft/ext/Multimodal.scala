@@ -19,8 +19,7 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType}
  * degrading to NULL rather than task failure. A heavier codec (JPEG,
  * FLAC — JVM lib or native via JNI/FFM, Arrow record batches if
  * out-of-process) slots into the same [[Multimodal.decodeWith]] core by
- * swapping the per-batch function. [[StubDecoder]] remains the
- * plumbing-only test double.
+ * swapping the per-batch function.
  */
 trait BinaryDecoder {
   /** Fixed feature-vector width every decoded row must have. */
@@ -108,16 +107,6 @@ final class BmpDecoder(batchSize: Int = 64) extends BinaryDecoder {
     }
 }
 
-/** The environment-honest [[BinaryDecoder]]: deterministic pseudo-features
-  * from the payload hash ([[Multimodal.decodeStub]]) — a pure codegen'd
-  * expression, so the plumbing a real codec would ride (schema, per-row
-  * evaluation, no shuffle) is exercised for real while the feature values
-  * are clearly fake. */
-final class StubDecoder(val dims: Int = 4) extends BinaryDecoder {
-  def decode(df: DataFrame, payloadCol: String, outCol: String): DataFrame =
-    df.withColumn(outCol, Multimodal.decodeStub(col(payloadCol), dims))
-}
-
 /**
  * Multimodal column handling: images / audio / video ride through the
  * engine as opaque `BinaryType` payloads plus typed metadata, and every
@@ -130,9 +119,7 @@ final class StubDecoder(val dims: Int = 4) extends BinaryDecoder {
  * run actual byte-level parsing through the production `mapPartitions`
  * batch shape ([[decodeWith]]). Formats that need a heavyweight library
  * (JPEG, FLAC, video) are not buildable in this environment; they slot
- * into the same core with a different per-batch function, and
- * [[decodeStub]] remains the plumbing-only stand-in for specs that only
- * care about the seam.
+ * into the same core with a different per-batch function.
  *
  * Scale: the metadata operators are per-row expressions (no shuffle);
  * decode is a per-row mapPartitions pass (no shuffle, memory bounded by
@@ -285,15 +272,4 @@ object Multimodal {
       sequence(lit(0),
         greatest(ceil(length(payload).cast("double") / frameSize).cast("int") - 1, lit(0))),
       i => payload.substr(i * frameSize + 1, lit(frameSize)))
-
-  /**
-   * STUB decoder expression: deterministic pseudo-feature vector derived
-   * from the payload hash — a placeholder for a real image/audio feature
-   * extractor (clearly fake values in [0,1); stable across runs and
-   * engines that share xxhash64). [[StubDecoder]] wraps this as the
-   * test implementation of the [[BinaryDecoder]] seam.
-   */
-  def decodeStub(payload: Column, dims: Int = 4): Column =
-    transform(sequence(lit(0), lit(dims - 1)), i =>
-      pmod(xxhash64(payload, i), lit(1000L)).cast("double") / 1000.0d)
 }

@@ -73,8 +73,8 @@ object Pca {
   /**
    * [[decomposition]] from a (possibly merged) [[Probe.momentPartials]]
    * frame — identical output by the q207 merge law, so a standing
-   * moment index ([[graft.streaming.StreamingMoments]]) yields the
-   * corpus component without re-touching a single vector.
+   * moment index yields the corpus component without re-touching a
+   * single vector (q212).
    */
   def decompositionFromMoments(
       moments: DataFrame,

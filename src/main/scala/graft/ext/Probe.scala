@@ -33,8 +33,8 @@ import org.apache.spark.sql.types.DecimalType
  * not last-ulp float. `Math.addExact` guards the scaled-long range
  * (per-cell |Σ terms| < 9.2·10⁶ — comfortable for unit-scale
  * embeddings; overflow fails loudly rather than wrapping). The
- * explode+hash-aggregate formulation is retained as
- * [[momentSumsExploded]] purely as a spec cross-check.
+ * explode+hash-aggregate formulation is kept in the test tree
+ * (`ProbeTwins`) purely as a spec cross-check.
  * Scoring is a zero-shuffle in-order fold against plan-literal weights
  * (the [[Similarity.dot]] fold-order contract an oracle's
  * `list_aggregate` reproduces bit-for-bit).
@@ -47,10 +47,10 @@ import org.apache.spark.sql.types.DecimalType
  */
 object Probe {
 
-  private val dec = DecimalType(38, 12)
+  private[ext] val dec = DecimalType(38, 12)
 
   /** Features + trailing 1.0 intercept slot, as doubles. */
-  private def aug(vecCol: Column): Column =
+  private[ext] def aug(vecCol: Column): Column =
     concat(transform(vecCol, _.cast("double")), array(lit(1.0)))
 
   /**
@@ -182,8 +182,7 @@ object Probe {
    * upper-triangle cells (j = −1 tags the Σxᵢ·y moment vector), with
    * `s` the 12-dp scaled sum carried as DECIMAL(38,0) so ANY union of
    * partials folds exactly ([[mergeMoments]] — integer sums are
-   * associative and commutative, the q154/q200 standing-state law;
-   * [[graft.streaming.StreamingMoments]] is the streamed face). An
+   * associative and commutative, the q154/q200 standing-state law). An
    * empty slice contributes an all-zero partial — merge-neutral by
    * construction.
    */
@@ -583,31 +582,6 @@ object Probe {
   }
 
   /**
-   * The previous explode+hash-aggregate formulation of the moment sums
-   * (upper-triangle terms keyed `(i, j)`, moment vector tagged j = −1,
-   * DECIMAL(38,12) folds) — retained ONLY as the independent spec
-   * cross-check for [[MomentAgg]]; the fit itself never calls it.
-   */
-  private[ext] def momentSumsExploded(
-      df: DataFrame, vecCol: String, y: Column, dim: Int): DataFrame = {
-    val d1 = dim + 1
-    val rows = df
-      .filter(col(vecCol).isNotNull && y.isNotNull &&
-        size(col(vecCol)) === dim)
-      .select(aug(col(vecCol)).as("_v"), y.cast("double").as("_y"))
-    val aTerms = flatten(transform(col("_v"), (xi, i) =>
-      transform(slice(col("_v"), i + lit(1), lit(d1) - i), (xj, k) =>
-        struct(i.cast("int").as("i"), (i + k).cast("int").as("j"),
-          round(xi * xj, 12).cast(dec).as("t")))))
-    val bTerms = transform(col("_v"), (xi, i) =>
-      struct(i.cast("int").as("i"), lit(-1).as("j"),
-        round(xi * col("_y"), 12).cast(dec).as("t")))
-    rows.select(explode(concat(aTerms, bTerms)).as("_e"))
-      .groupBy(col("_e.i").as("i"), col("_e.j").as("j"))
-      .agg(sum(col("_e.t")).as("s"))
-  }
-
-  /**
    * Fit ridge weights. Returns `dim + 1` doubles — feature weights then
    * the intercept (index `dim`), each rounded to 9 dp. `lambda` is added
    * to the FEATURE diagonal only (regularizing the intercept would bias
@@ -624,27 +598,9 @@ object Probe {
     finishFit(a, b, dim, lambda)
   }
 
-  /** Explode-path twin of [[fitRidge]] — spec cross-check only. */
-  private[ext] def fitRidgeExploded(
-      df: DataFrame, vecCol: String, y: Column, dim: Int,
-      lambda: Double = 1e-3): Array[Double] = {
-    val d1 = dim + 1
-    val a = Array.ofDim[Double](d1, d1)
-    val b = new Array[Double](d1)
-    var seen = 0L
-    momentSumsExploded(df, vecCol, y, dim).collect().foreach { r =>
-      val i = r.getInt(0); val j = r.getInt(1)
-      val s = r.getDecimal(2).doubleValue()
-      if (j < 0) b(i) = s
-      else { a(i)(j) = s; a(j)(i) = s; seen += 1 }
-    }
-    require(seen > 0, "no rows matched (empty input or wrong dim)")
-    finishFit(a, b, dim, lambda)
-  }
-
-  /** Shared tail of both fit paths: feature-diagonal ridge, pivoted
+  /** Shared tail of every fit path: feature-diagonal ridge, pivoted
     * solve, 9-dp weight rounding. */
-  private def finishFit(
+  private[ext] def finishFit(
       a: Array[Array[Double]], b: Array[Double], dim: Int,
       lambda: Double): Array[Double] = {
     var i = 0

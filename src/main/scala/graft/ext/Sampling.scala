@@ -18,16 +18,6 @@ import org.apache.spark.sql.functions._
 object Sampling {
 
   /**
-   * Content-hash Bernoulli sample: keep rows whose lowercase md5 hex of
-   * `key` sorts below `hexCeil` (e.g. "2a" keeps ≈ 42/256 of rows).
-   * Pure filter — no shuffle, no state, trivially pushdown-friendly; the
-   * sharding-safe replacement for `sample()` when the sample must be
-   * stable across reruns and engines.
-   */
-  def hashSample(df: DataFrame, key: Column, hexCeil: String): DataFrame =
-    df.filter(md5(key.cast("binary")) < lit(hexCeil))
-
-  /**
    * Stratified quota by stable hash order: the `k` rows of each stratum
    * whose content hash sorts first (ties broken by `idCol`), with the rank
    * in column `rk` — "give me exactly k docs per language, reproducibly".
@@ -41,9 +31,7 @@ object Sampling {
    * survivors (≤ `buckets × k` rows per stratum, a bounded set) enter
    * the per-stratum window that assigns the final rank. EXACTLY the
    * single-window result: any row in a stratum's true top-k is
-   * necessarily in its own bucket's top-k (spec-asserted equality) — the
-   * exact-by-construction form of the "pre-thin with [[hashSample]]"
-   * advice this doc used to give, which only held probabilistically.
+   * necessarily in its own bucket's top-k (spec-asserted equality).
    */
   def stratifiedTake(
       df: DataFrame, stratumCol: String, key: Column, idCol: String,
@@ -223,9 +211,9 @@ object Sampling {
    * Deterministic weighted sample WITHOUT replacement — Efraimidis &
    * Spitsas (2006) exponential-keys: each row gets `key = u^(1/w)` for
    * a content-derived uniform `u` (so the "randomness" is a pure
-   * function of `salt` + id — reproducible across engines and reruns,
-   * the [[hashSample]] philosophy), and the sample is the top-`k` rows
-   * by key. P(row ∈ sample) is the textbook weighted-without-
+   * function of `salt` + id — reproducible across engines and reruns),
+   * and the sample is the top-`k` rows by key. P(row ∈ sample) is the
+   * textbook weighted-without-
    * replacement probability; raising a row's weight (same salt) can
    * only raise its key — monotone, spec-pinned.
    *
@@ -319,21 +307,6 @@ object Sampling {
     * change the salt, get an independent epoch order. */
   def shuffleKey(key: Column, salt: String): Column =
     md5(concat_ws("", lit(salt), key.cast("string")).cast("binary"))
-
-  /**
-   * Deterministic global shuffle as a LAYOUT: range-partition + sort the
-   * corpus by [[shuffleKey]] and write, so training readers stream the
-   * files in path order and see a reproducible random permutation with
-   * no single-reducer bottleneck — the sort is a distributed range sort,
-   * never one partition holding a global row_number. The epoch-reshuffle
-   * answer at 100 TB: one linear rewrite per salt.
-   */
-  def shuffledLayout(
-      df: DataFrame, path: String, numFiles: Int, key: Column,
-      salt: String): Unit =
-    graft.stage.Staging.stageRangeSorted(
-      df.withColumn("shuffle_key", shuffleKey(key, salt)),
-      path, numFiles, Seq("shuffle_key"))
 
   /**
    * Temporal train/test split with an EMBARGO gap — the

@@ -15,30 +15,16 @@ import org.apache.spark.sql.functions._
  * the two dedup families cannot disagree about what a "group" is); the
  * least id per component survives.
  *
- * Two candidate generators, one survivor rule:
- *  - [[dedupExact]]: per-block exact all-pairs ([[
- *    Similarity.nearDupPairsBlocked]]) — complete within blocks; right
- *    when a natural blocking key exists (language, shard, near-cluster)
- *    or the corpus is small enough to run one block. Oracle-exact.
- *  - [[dedupAnn]]: edges from the IVF kNN self-join ([[AnnIvf.knnJoin]] —
- *    nprobe×cell-bounded, never all-pairs) — the 10⁹-row path; recall
- *    bounded by the probe budget like every IVF screen, so a missed edge
- *    can only UNDER-merge (a duplicate survives; nothing valid is lost).
+ * Candidates are per-block exact all-pairs
+ * ([[Similarity.nearDupPairsBlocked]]): complete within blocks, right when
+ * a natural blocking key exists (language, shard, near-cluster) or the
+ * corpus is small enough to run one block. Oracle-exact.
  *
  * Scale: the closure runs on the PAIR graph, which near-dup thresholds
  * keep sparse; components is the bounded-iteration propagation whose
  * convergence telemetry q37 already tracks.
  */
 object SemDedup {
-
-  private def survivorsFromPairs(
-      corpus: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val losers = Dedup.components(
-        pairs.select(col("a_id"), col("b_id")))
-      .filter(col("component") < col("id"))
-      .select(col("id").as(idCol))
-    corpus.join(losers, Seq(idCol), "left_anti")
-  }
 
   /** Exact semantic dedup within blocks: every pair in a block with
     * cosine ≥ `threshold` is an edge; survivors are the least id of each
@@ -47,20 +33,12 @@ object SemDedup {
     * vectors have NULL cosine to everything and always survive. */
   def dedupExact(
       corpus: DataFrame, idCol: String, vecCol: String, blockCol: String,
-      threshold: Double): DataFrame =
-    survivorsFromPairs(corpus, idCol,
-      Similarity.nearDupPairsBlocked(corpus, idCol, vecCol, blockCol, threshold))
-
-  /** ANN semantic dedup: edges are kNN-join neighbors at cosine ≥
-    * `threshold` (corpus column contract of [[AnnIvf.knnJoin]]:
-    * `vec_id`/`embedding`). Recall follows the probe budget — missed
-    * edges under-merge, never over-drop. */
-  def dedupAnn(
-      corpus: DataFrame, centroids: DataFrame, threshold: Double,
-      kNeighbors: Int = 5, nprobe: Int = 4): DataFrame =
-    survivorsFromPairs(corpus, "vec_id",
-      AnnIvf.knnJoin(corpus, centroids, kNeighbors, nprobe)
-        .filter(col("sim") >= threshold)
-        .filter(col("q_id") < col("nn_id"))
-        .select(col("q_id").as("a_id"), col("nn_id").as("b_id")))
+      threshold: Double): DataFrame = {
+    val losers = Dedup.components(
+        Similarity.nearDupPairsBlocked(corpus, idCol, vecCol, blockCol, threshold)
+          .select(col("a_id"), col("b_id")))
+      .filter(col("component") < col("id"))
+      .select(col("id").as(idCol))
+    corpus.join(losers, Seq(idCol), "left_anti")
+  }
 }

@@ -66,12 +66,6 @@ object SpanDedup {
           spanLen)).as("wkey"))
   }
 
-  /** Built-in-only formulation of the window key — the engine-agnostic
-    * semantics reference [[graft.functions.SpanWindowKeySpec]] pins the
-    * native expression against (the graft_shingles twin discipline). */
-  private[graft] def windowKeyHof(toks: Column, pos: Column, spanLen: Int): Column =
-    unhex(md5(concat_ws(" ", slice(toks, pos.cast("int"), lit(spanLen)))))
-
   /** Window keys occurring in at least `minDocs` distinct documents, with
     * their document frequency: `(wkey, span_docs)`. */
   def duplicatedSpans(windows: DataFrame, idCol: String, minDocs: Int): DataFrame =

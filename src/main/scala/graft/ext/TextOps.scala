@@ -29,15 +29,10 @@ object TextOps {
     * ([[graft.functions.WhitespaceTokens]]): one lowercase (the same
     * `UTF8String.toLowerCase` kernel the `lower` built-in calls) + one
     * byte scan, replacing the regex split + interpreted `filter` lambda
-    * that sat under every text operator in the engine ([[tokensHof]] is
-    * the semantics twin the spec asserts full equality against). */
+    * that sat under every text operator in the engine (the HOF twin
+    * `TextOpsTwins.tokensHof` is asserted fully equal). */
   def tokens(text: Column): Column =
     column(WhitespaceTokens(expression(text)))
-
-  /** HOF formulation of [[tokens]] — kept as the engine-agnostic
-    * semantics reference the spec checks the native expression against. */
-  private[graft] def tokensHof(text: Column): Column =
-    filter(split(lower(text), "\\s+"), t => length(t) > 0)
 
   /** [[tokens]] behind a deliberate CodegenFallback
     * ([[graft.functions.WhitespaceTokensNoFuse]] — same kernel, same
@@ -98,32 +93,18 @@ object TextOps {
   private[ext] val langMarkers: Seq[(String, Seq[String])] =
     graft.functions.LangId.markers
 
-  private def markerHits(toks: Column, markers: Seq[String]): Column =
-    size(filter(toks, t => array_contains(typedLit(markers), t)))
-
   /**
    * Heuristic language ID: count marker-word occurrences per language,
    * pick the max (ties → alphabetically first code); no hits → "und".
    * One codegen'd pass per row via `graft_langid`
    * ([[graft.functions.LangId]]) — zero shuffle, zero HOFs. (The
-   * declarative twin below re-ran its interpreted tokenize+count
-   * pipeline ~10× per row through the argmax `when` chain: q23
-   * measured 170 µs/row at the r13 sf1 sweep before this lift.)
+   * relational twin `TextOpsTwins.langIdRelational` re-ran its
+   * interpreted tokenize+count pipeline ~10× per row through the argmax
+   * `when` chain: q23 measured 170 µs/row at the r13 sf1 sweep before
+   * this lift.)
    */
   def langId(text: Column): Column =
     coalesce(column(LangId(expression(text))), lit("und"))
-
-  /** Relational formulation of [[langId]] — the engine-agnostic
-    * semantics reference the spec checks the native expression
-    * against; also the shape the DuckDB oracle mirrors. */
-  private[graft] def langIdRelational(text: Column): Column = {
-    val toks   = tokens(text)
-    val scores = langMarkers.map { case (code, ms) => code -> markerHits(toks, ms) }
-    val best   = greatest(scores.map(_._2): _*)
-    scores.foldRight(lit("und"): Column) { case ((code, s), acc) =>
-      when(best > 0 && s === best, lit(code)).otherwise(acc)
-    }
-  }
 
   // ---- quality scoring ----
 
@@ -156,46 +137,16 @@ object TextOps {
 
   // ---- repetition / duplication quality signals ----
 
-  /** All word bigrams of the token array in order, repeats kept — the
-    * frequency-bearing variant of [[Dedup.shingles]] (which distincts). */
-  private[ext] def bigramsAll(toks: Column): Column = {
-    val z = arrays_zip(toks, slice(toks, lit(2), greatest(size(toks) - 1, lit(0))))
-    transform(
-      filter(z, x => x.getField("0").isNotNull && x.getField("1").isNotNull),
-      x => concat_ws(" ", x.getField("0"), x.getField("1")))
-  }
-
-  /** Occurrence count of the most frequent element of a string array,
-    * computed per row: sort, then scan runs inside one `aggregate` HOF.
-    * O(k log k) per row and ZERO shuffle — the mode-by-groupBy formulation
-    * would explode 100 TB of corpus into a corpus-sized shuffle to answer
-    * a per-document question. Empty array → 0. */
-  private[ext] def topRunCount(arr: Column): Column =
-    aggregate(
-      array_sort(arr),
-      struct(lit("").as("prev"), lit(0L).as("run"), lit(0L).as("best")),
-      (acc, x) => {
-        val run = when(x === acc.getField("prev"), acc.getField("run") + 1L)
-          .otherwise(lit(1L))
-        struct(x.as("prev"), run.as("run"),
-          greatest(acc.getField("best"), run).as("best"))
-      },
-      acc => acc.getField("best"))
-
   /** Count of the most frequent word bigram — the repeated-phrase signal
     * (a high value marks boilerplate/spam the way Gopher's top-n-gram
     * fraction does; Rae et al. 2021, arXiv:2112.11446 §A1.1). Backed by
     * the codegen'd `graft_top_bigram` expression
     * ([[graft.functions.TopBigramCount]]): one O(n) hash-count pass per
     * row instead of the five interpreted HOF trees of
-    * [[topBigramCountHof]], its semantics twin (spec-asserted equal). */
+    * `TextOpsTwins.topBigramCountHof`, its semantics twin (spec-asserted
+    * equal). */
   def topBigramCount(text: Column): Column =
     column(TopBigramCount(expression(tokensNoFuse(text))))
-
-  /** HOF formulation of [[topBigramCount]] — kept as the engine-agnostic
-    * semantics reference the spec checks the native expression against. */
-  private[ext] def topBigramCountHof(text: Column): Column =
-    topRunCount(bigramsAll(tokens(text)))
 
   /** Occurrence count of the most frequent single token — the
     * top-token-dominance signal of the q345/q349 funnel (Gopher's
@@ -203,17 +154,10 @@ object TextOps {
     * codegen'd `graft_top_token` expression
     * ([[graft.functions.TopTokenCount]]): one O(n) hash-count pass per
     * row instead of the O(distinct·n) interpreted re-filter of
-    * [[topTokenCountHof]], its semantics twin (spec-asserted equal,
+    * `TextOpsTwins.topTokenCountHof`, its semantics twin (spec-asserted equal,
     * including the empty-array → NULL corner). */
   def topTokenCount(toks: Column): Column =
     column(TopTokenCount(expression(toks)))
-
-  /** HOF formulation of [[topTokenCount]] — kept as the engine-agnostic
-    * semantics reference the spec checks the native expression against:
-    * for every distinct token, re-filter the array and count, then max. */
-  private[graft] def topTokenCountHof(toks: Column): Column =
-    array_max(transform(array_distinct(toks),
-      w => size(filter(toks, x => x === w))))
 
   /** Fraction of words that are repeats of an earlier word:
     * (n - n_distinct) / n, 0 for empty docs. Integer-derived double with a
@@ -548,34 +492,14 @@ object TextOps {
    * the sign of Σ_tokens (±1). One narrow pass via the codegen'd
    * `graft_simhash` expression ([[graft.functions.SimHash48]]) — zero
    * shuffle, one raw-digest md5 per token. Tokenless docs are dropped,
-   * matching the relational twin below (explode emits no row for them).
+   * matching the relational twin `TextOpsTwins.simhashRelational`
+   * (explode emits no row for them).
    */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame =
     Materialize.fan(df.select(col(idCol), col(textCol)))
       .select(col(idCol), tokens(col(textCol)).as("tk"))
       .filter(size(col("tk")) > 0)
       .select(col(idCol), column(SimHash48(expression(col("tk")))).as("simhash"))
-
-  /** Relational formulation of [[simhash]] — explode tokens, one md5 per
-    * token, 48 map-side partial sums in one hash aggregate (O(tokens) rows
-    * through a partial agg, not O(tokens × 48)). Kept as the
-    * engine-agnostic semantics reference the spec checks the native
-    * expression against; also the shape the DuckDB oracle mirrors. */
-  private[graft] def simhashRelational(
-      df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tok = df.select(col(idCol), explode(tokens(col(textCol))).as("t"))
-      .withColumn("h", md5(col("t")))
-    val sums: Seq[Column] = (0 until simhashBits).map { j =>
-      val digit = instr(lit("0123456789abcdef"), substring(col("h"), j / 4 + 1, 1)) - 1
-      val bit   = shiftright(digit, j % 4).bitwiseAND(lit(1))
-      sum(when(bit === 1, 1).otherwise(-1)).as(s"s$j")
-    }
-    val packed = (0 until simhashBits).reverse
-      .foldLeft(lit(0L): Column)((acc, j) =>
-        acc * 2 + when(col(s"s$j") > 0, 1L).otherwise(0L))
-    tok.groupBy(col(idCol)).agg(sums.head, sums.tail: _*)
-      .select(col(idCol), packed.as("simhash"))
-  }
 
   /**
    * SimHash near-dup pairs with Hamming distance ≤ maxHamming, found by
@@ -1285,21 +1209,6 @@ object TextOps {
         f1D * (f1D - 1.0) /
           (lit(2.0) * (col("f2").cast("double") + 1.0)), 6).as("chao1"))
   }
-
-  /** All order-`n` token windows joined by single spaces, repeats kept
-    * — [[bigramsAll]] generalized (n = 1 is the token list itself).
-    * DEV-ONLY semantics reference since r13: the production clip path
-    * is the native [[graft.functions.ClippedOverlap]] (these HOF
-    * chains are CodegenFallback — re-evaluated per USE and invisible
-    * to codegen subexpression elimination; the q274 find). Kept, like
-    * [[AnnIvf.nearestCellsUnrolled]], as the built-ins-only twin the
-    * native expression's spec documents its key convention against. */
-  private[ext] def ngramsAll(toks: Column, n: Int): Column =
-    if (n == 1) toks
-    // guard BEFORE sequence: sequence(0, -1) descends, it is not empty
-    else when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(transform(sequence(lit(0), size(toks) - n),
-        i => array_join(slice(toks, i + lit(1), lit(n)), " ")))
 
   /**
    * ROUGE-N between text pairs (Lin 2004) — the MULTISET overlap

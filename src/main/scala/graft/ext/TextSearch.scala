@@ -150,22 +150,13 @@ object TextSearch {
    * index scan shrunk by the term predicate instead of a full
    * re-tokenization. Same scoring core as [[bm25TopK]], so the two can
    * never drift; `idCol` names the output id column (the index stores a
-   * fixed `id`).
-   *
-   * `postings` (optional) upgrades the term lookup to a true index
-   * probe: by default the postings stripe is filtered out of the flat
-   * index scan (a pushed-down `term IN (...)` — already skipping
-   * row-groups via footer min/max when the parquet was written sorted).
-   * Pass the [[stageLexicalPostings]] catalog table and the scan prunes
-   * to the query terms' hash BUCKETS — only |terms| buckets of the
-   * corpus are even opened (spec-asserted via `SelectedBucketsCount`),
-   * the inverted-index point-lookup. Must be staged from the SAME index
-   * generation.
+   * fixed `id`). The postings stripe is filtered out of the flat index
+   * scan by a pushed-down `term IN (...)`, which skips row-groups via
+   * footer min/max when the parquet was written sorted.
    */
   def bm25TopKIndexed(
       index: DataFrame, query: String, k: Int,
-      k1: Double = 1.2, b: Double = 0.75, idCol: String = "id",
-      postings: Option[DataFrame] = None): DataFrame = {
+      k1: Double = 1.2, b: Double = 0.75, idCol: String = "id"): DataFrame = {
     val terms = queryTerms(query)
     require(k > 0, s"k must be positive, got $k")
     // corpus stats from the doc-length stripe (IsNull pushed to the scan)
@@ -177,56 +168,11 @@ object TextSearch {
         lit(0L).as("matched"), lit(0.0d).as("score"), lit(0L).as("rank"))
     }
     val avgdl = statsRow.getLong(1).toDouble / n
-    val tfdl = postings.getOrElse(index.filter(col("term").isNotNull))
+    val tfdl = index.filter(col("term").isNotNull)
       .filter(col("term").isin(terms: _*))
       .select(col("id"), col("term"), col("tf"), col("dl"))
     rankCore(tfdl, "id", n, avgdl, k, k1, b)
       .withColumnRenamed("id", idCol)
-  }
-
-  /**
-   * Persist the index's postings stripe `(term, id, tf, dl)` as a
-   * catalog table BUCKETED and sorted on `term` — the probe's exact
-   * lookup key — so every [[bm25TopKIndexed]] call opens only the query
-   * terms' buckets (Spark prunes buckets for `term IN (...)`
-   * predicates; the same write-once access-path purchase as
-   * [[Dedup.stageDedupBuckets]], here buying scan pruning rather than
-   * shuffle elision — the probe has no corpus-side join to co-locate).
-   * `append = true` adds a new batch's postings (Spark verifies the
-   * bucket spec matches). `numBuckets` is fixed at creation — size it so
-   * one term's bucket is a bounded read at the settled corpus size;
-   * re-stage to change it.
-   */
-  def stageLexicalPostings(
-      index: DataFrame, table: String, numBuckets: Int,
-      append: Boolean = false): Unit =
-    index.filter(col("term").isNotNull)
-      .select("term", "id", "tf", "dl")
-      .write.mode(if (append) "append" else "overwrite")
-      .format("parquet")
-      .bucketBy(numBuckets, "term")
-      // sorted within buckets: fresh-stage files are term-runs, so even
-      // within a selected bucket the row-group min/max skips non-matching
-      // terms; appends add files per bucket — re-stage to restore it
-      .sortBy("term")
-      .saveAsTable(table)
-
-  /** The [[Dedup.maintainDedupIndex]] loop for the lexical side: compact
-    * the [[buildLexicalIndex]] parquet dir's append-accreted small files
-    * and, when `postingsTable` is set, re-stage the
-    * [[stageLexicalPostings]] table whole from the compacted index
-    * (restoring the fresh-stage sorted-run skipping). Probe results
-    * unchanged by construction; same swap contract as
-    * [[graft.stage.Staging.compactDir]]. */
-  def maintainLexicalIndex(
-      spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      postingsTable: Option[String] = None, numBuckets: Int = 64,
-      targetFileBytes: Long = 128L * 1024 * 1024)
-      : Option[graft.stage.Staging.CompactionStat] = {
-    val stat = graft.stage.Staging.compactDir(spark, indexPath, targetFileBytes)
-    postingsTable.foreach(t =>
-      stageLexicalPostings(spark.read.parquet(indexPath), t, numBuckets))
-    stat
   }
 
   /**

@@ -341,7 +341,7 @@ object VectorOps {
     val pfx = prefixes.distinct.sorted
     // prefix norms are PER-SIDE quantities: computed once per query row
     // and once per corpus row here, instead of once per (pair, prefix)
-    // inside Similarity.cosine — same expression tree on the same slice,
+    // inside a per-pair cosine — same expression tree on the same slice,
     // so every double is bit-identical, but the norm FLOPs drop from
     // |q|·|corpus|·Σm to (|q|+|corpus|)·Σm (guide §1.2 per-task work)
     val queries = emb.filter(queryPred)

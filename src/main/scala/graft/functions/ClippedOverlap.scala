@@ -30,8 +30,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * materialized — and the surrounding stage stays fused in whole-stage
  * codegen: no HOF, no explode, no shuffle, no join.
  *
- * Gram semantics are pinned bit-equal to the declarative twin
- * `ngramsAll(toks, n)` + per-gram min (spec-fuzzed): a window's key is
+ * Gram semantics are pinned bit-equal to a brute-force reference
+ * (spec-fuzzed): a window's key is
  * its tokens joined by a single space with NULL tokens SKIPPED (the
  * `array_join` convention), and a side shorter than `n` tokens has no
  * grams. Either ARRAY null → NULL (BinaryExpression null-intolerance).

@@ -40,7 +40,7 @@ import org.apache.spark.sql.types._
  * exactly-zero denominator (zero-norm vector or centroid) — evaluates as
  * `+Infinity`, so undefined sorts LAST and a zero-norm centroid can never
  * capture the corpus. This is the `nullif`-guarded convention of
- * [[graft.ext.Similarity.cosine]] made total: a bare `Divide` would
+ * the `Similarity` scoring sites made total: a bare `Divide` would
  * THROW under ANSI mode (Spark 4's default) the first time a zero norm
  * appeared at scale. NaN distances (NaN elements) sort after +Infinity
  * (Spark's double total order = `java.lang.Double.compare`); ties break

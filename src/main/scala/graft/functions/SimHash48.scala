@@ -11,9 +11,9 @@ import org.apache.spark.sql.types._
  * pass — bit j of a token is bit (j % 4) of hex digit (j / 4) of the
  * token's md5, the document bit j is the sign of Σ_tokens (±1), and the
  * packed long carries bit j at position j. Bit-identical to the relational
- * twin ([[graft.ext.TextOps.simhashRelational]], spec-asserted), which
- * computes the same thing as explode → per-token md5 → 48 partial sums in
- * a hash aggregate.
+ * twin (`TextOpsTwins.simhashRelational` in the test tree, spec-asserted),
+ * which computes the same thing as explode → per-token md5 → 48 partial
+ * sums in a hash aggregate.
  *
  * Why a custom Expression (same SURVEY.md §4 case as [[FloatDotProduct]]):
  * the relational form is correct and scale-safe, but it pays a full

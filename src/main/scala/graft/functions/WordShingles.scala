@@ -9,10 +9,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Native Catalyst expression: DISTINCT word n-gram shingles of a token
- * array — exactly the value of [[graft.ext.Dedup.shinglesHof]]'s built-in
- * formulation (drop empty/null tokens, join each n-window with a single
- * space, `array_distinct` in first-occurrence order; the spec asserts
- * full array equality, order included), so swapping it into
+ * array — exactly the value of the built-in formulation
+ * `DedupTwins.shinglesHof` in the test tree (drop empty/null tokens,
+ * join each n-window with a single space, `array_distinct` in
+ * first-occurrence order; the spec asserts full array equality, order
+ * included), so swapping it into
  * [[graft.ext.Dedup.shingles]] changes no shingle set, signature, bucket,
  * pair or score anywhere.
  *

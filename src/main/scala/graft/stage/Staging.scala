@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /**
  * Partitioned columnar staging layer: Snappy Parquet partitioned by ingest
@@ -110,27 +110,6 @@ object Staging {
     * Spark orders them). */
   def stagedSchema: StructType =
     StructType.fromDDL(s"$cleansedDdl, date STRING")
-
-  /**
-   * Stage as a BUCKETED catalog table: rows are hash-partitioned into
-   * `numBuckets` files per partition by `bucketCol` at write time, so
-   * later equi-joins and aggregations on that column read co-located
-   * data and skip their shuffle entirely — the write-once answer to the
-   * biggest recurring cost of a 100 TB fact table joined on the same key
-   * every day. Catalyst proves it: a join of two tables bucketed the
-   * same way on the join key plans with NO Exchange on either side
-   * (StagingSpec asserts exactly that). Bucket counts must match across
-   * tables meant to join; `sortBy` within buckets lets the join skip its
-   * sort as well when both sides agree.
-   */
-  def stageBucketed(
-      df: DataFrame, table: String, bucketCol: String,
-      numBuckets: Int): Unit =
-    df.write.mode("overwrite")
-      .format("parquet")
-      .bucketBy(numBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .saveAsTable(table)
 
   /**
    * Stage with a RANGE-SORTED layout: rows are range-partitioned on
@@ -241,58 +220,6 @@ object Staging {
   }
 
   /**
-   * Copy-on-write UPSERT into a [[stage]]d layout: merge `updates` into
-   * the partitions they touch — and ONLY those partitions — keeping the
-   * latest version of each key ([[latestByKey]] semantics over
-   * existing ∪ updates). Untouched partitions keep their exact bytes:
-   * the existing side reads with a partition-value IN-filter (pruned at
-   * planning time) and the write uses dynamic partition overwrite, so a
-   * one-day correction to a 10-year table costs one day's rewrite, not
-   * ten years'. The touched-partition list is a collected metadata
-   * scalar (distinct partition values of the update batch), the same
-   * driver-side scale as any partition listing.
-   *
-   * Requires every key to live in exactly one partition value (true for
-   * ingest-date-keyed layouts); a key that MOVES partitions would leave
-   * its old row behind — that needs a full-table merge by design.
-   * NULL partition values in `updates` THROW: `isin` pruning can never
-   * match NULL, so the existing `__HIVE_DEFAULT_PARTITION__` rows would
-   * be excluded from the merge while dynamic overwrite still replaced
-   * that directory with updates-only rows — silent data loss. Assign a
-   * real partition value before upserting (the documented contract is an
-   * ingest-date key, which is never NULL).
-   *
-   * Concurrency contract — ONE maintainer per table: the
-   * read-merge-overwrite sequence is not transactional, so two
-   * concurrent upserts to the same partition (or an upsert racing
-   * [[compact]]) can lose one writer's rows. Serialize all maintenance
-   * of a staged path behind a single scheduler slot, the same
-   * assumption every non-transactional COW layout makes.
-   */
-  def upsertPartitions(
-      spark: SparkSession, path: String, updates: DataFrame,
-      keyCols: Seq[String], orderCols: Seq[String],
-      partitionCol: String = "date"): Unit = {
-    val touched = updates.select(col(partitionCol)).distinct()
-      .collect().map(_.get(0)).toSeq
-    require(!touched.contains(null),
-      s"upsertPartitions: updates contain NULL '$partitionCol' values; " +
-        "NULL cannot be isin-pruned, so the merge would silently drop the " +
-        "existing NULL-partition rows. Assign a real partition value first.")
-    if (touched.isEmpty) return
-    val existing = spark.read.parquet(path)
-      .filter(col(partitionCol).isin(touched: _*))
-      .select(updates.columns.toIndexedSeq.map(col): _*) // align column order for union
-    latestByKey(existing.unionAll(updates), keyCols, orderCols)
-      .repartition(col(partitionCol))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .option("compression", "snappy")
-      .partitionBy(partitionCol)
-      .parquet(path)
-  }
-
-  /**
    * Snapshot diff — the change feed between two versions of a keyed
    * table: one row per key that was `insert`ed, `delete`d, or whose
    * `valueCols` changed (`update`); unchanged keys are absent. One
@@ -323,110 +250,6 @@ object Staging {
           .when(changed, lit("update")))
       .filter(col("change").isNotNull)
       .select(keyCols.map(col) :+ col("change"): _*)
-  }
-
-  /** Per-partition compaction outcome: file count before/after and the
-    * partition's total bytes. Partitions below the trigger are absent. */
-  final case class CompactionStat(
-      partition: String, filesBefore: Int, filesAfter: Int, bytes: Long)
-
-  /**
-   * Small-file compaction for a [[stage]]d (single-column-partitioned)
-   * layout: rewrite every partition whose parquet file count exceeds
-   * what `targetFileBytes` calls for, coalescing to
-   * `ceil(bytes / targetFileBytes)` files. Continuous ingest — a
-   * streaming sink draining micro-batches, or many small daily
-   * re-loads — accretes slivers; at 100 TB the resulting
-   * open/footer/seek overhead and NameNode/listing pressure dominate
-   * scan cost, so compaction is standing maintenance, not cleanup.
-   *
-   * Mechanics per hot partition: read only that partition directory,
-   * `repartition(n)`, write to a sibling temp dir, then swap via two
-   * FileSystem renames (original → `.bak`, tmp → original) and drop the
-   * backup. Readers never see a MIXED directory (each rename is atomic
-   * on HDFS-like filesystems), but the swap as a whole is NOT atomic:
-   * between the two renames the partition directory is briefly ABSENT,
-   * so a concurrent reader in that window sees the partition as empty,
-   * and a crash there leaves the table without it until the `.bak` is
-   * manually renamed back (the backup always holds the complete old
-   * data — recovery is one rename, never data loss). Run compaction in
-   * a maintenance window if readers cannot tolerate the gap. Row
-   * content is byte-preserved (same schema, same values; StagingSpec
-   * asserts set-equality and that cool partitions keep their exact
-   * files). The per-partition loop is driver-side METADATA iteration
-   * (one listing per partition — the same scale as any
-   * table-maintenance job), while every byte of data moves through
-   * executors.
-   *
-   * Concurrency contract — ONE maintainer per table, shared with
-   * [[upsertPartitions]]: a compaction racing another compaction or an
-   * upsert on the same partition can observe a half-swapped directory
-   * or resurrect pre-upsert rows from its already-read snapshot.
-   * Serialize all maintenance of a staged path behind a single
-   * scheduler slot.
-   */
-  def compact(
-      spark: SparkSession, path: String,
-      targetFileBytes: Long = 128L * 1024 * 1024,
-      partitionCol: String = "date"): Seq[CompactionStat] = {
-    require(targetFileBytes > 0L, s"targetFileBytes must be > 0")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts = fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$partitionCol="))
-    parts.flatMap(p => compactOneDir(spark, fs, p.getPath, targetFileBytes))
-  }
-
-  /**
-   * [[compact]] for a FLAT (unpartitioned) parquet directory — the layout
-   * of the persisted dedup/ANN index dirs ([[graft.ext.Dedup
-   * .buildDedupIndex]] / [[graft.ext.AnnIvf.buildIvfIndex]] /
-   * [[graft.ext.AnnLsh.buildLshIndex]] parquet), whose daily
-   * `indexAppend` writes accrete one small file per batch. Same swap
-   * mechanics, same absence-window / `.bak`-recovery / one-maintainer
-   * contract as [[compact]], applied to the directory itself: the temp
-   * and backup dirs are dot-prefixed SIBLINGS of `path`. Returns None
-   * when the directory is already at or under the target file count.
-   */
-  def compactDir(
-      spark: SparkSession, path: String,
-      targetFileBytes: Long = 128L * 1024 * 1024): Option[CompactionStat] = {
-    require(targetFileBytes > 0L, s"targetFileBytes must be > 0")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    compactOneDir(spark, fs, root, targetFileBytes)
-  }
-
-  /** The shared per-directory rewrite-and-swap core of [[compact]] /
-    * [[compactDir]]: coalesce to `ceil(bytes / targetFileBytes)` parquet
-    * files via a sibling temp dir and two renames. */
-  private def compactOneDir(
-      spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path,
-      targetFileBytes: Long): Option[CompactionStat] = {
-    val files = fs.listStatus(dir).toSeq
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val bytes = files.map(_.getLen).sum
-    val want = math.max(1L, (bytes + targetFileBytes - 1) / targetFileBytes).toInt
-    if (files.size <= want) None
-    else {
-      val tmp = new org.apache.hadoop.fs.Path(
-        dir.getParent, s".${dir.getName}.compact-tmp")
-      val bak = new org.apache.hadoop.fs.Path(
-        dir.getParent, s".${dir.getName}.compact-bak")
-      fs.delete(tmp, true); fs.delete(bak, true)
-      spark.read.parquet(dir.toString)
-        .repartition(want)
-        .write.mode("overwrite")
-        .option("compression", "snappy")
-        .parquet(tmp.toString)
-      require(fs.rename(dir, bak), s"compact: could not back up $dir")
-      require(fs.rename(tmp, dir), s"compact: could not promote $tmp")
-      fs.delete(bak, true)
-      val after = fs.listStatus(dir).count(f =>
-        f.isFile && f.getPath.getName.endsWith(".parquet"))
-      Some(CompactionStat(dir.getName, files.size, after, bytes))
-    }
   }
 
   /**
@@ -506,101 +329,6 @@ object Staging {
    * Ids must be integral (the bucket derivation is integer division,
    * truncating toward zero in both engines).
    */
-  /** [[exportManifest]] over a [[stage]]d layout: one manifest row per
-    * partition value. The frame is partition-dimension-sized (days of a
-    * date-partitioned table — metadata, not data), which is what lets
-    * the maintenance receipts below collect and compare it driver-side. */
-  def manifestOf(
-      spark: SparkSession, path: String, idCol: String, content: Column,
-      partitionCol: String = "date",
-      rowsPerBucket: Long = 1L << 16): DataFrame =
-    exportManifest(spark.read.parquet(path), partitionCol, idCol, content,
-      rowsPerBucket)
-      // partition inference may type the directory value (DateType for
-      // date=...); the receipt's shard key is its STRING form, so receipts
-      // compare stably across readers and engines
-      .withColumn("shard", col("shard").cast("string"))
-
-  private def collectManifest(m: DataFrame): Map[String, (Long, String)] =
-    m.collect().map(r => String.valueOf(r.get(0)) ->
-      ((r.getLong(1), r.getString(2)))).toMap
-
-  /** Fail-fast comparison core of the maintenance receipts. `touched`
-    * partitions are EXPECTED to change; any other drift (a lost row, a
-    * mutated value, a partition that appeared or vanished) throws with
-    * the offending partitions named. Package-visible for direct spec
-    * coverage of the failure paths. */
-  private[stage] def requireUnchanged(
-      before: Map[String, (Long, String)], after: Map[String, (Long, String)],
-      op: String, touched: Set[String] = Set.empty): Unit = {
-    val drifted = (before.keySet ++ after.keySet).filterNot(touched)
-      .filter(p => before.get(p) != after.get(p))
-    require(drifted.isEmpty,
-      s"$op receipt: partitions changed outside the declared write set: " +
-        drifted.toSeq.sorted.mkString(", "))
-  }
-
-  /**
-   * [[compact]] under a manifest receipt: the partition manifests are
-   * computed before and after the rewrite and must be IDENTICAL —
-   * compaction changes file layout, never rows, and this makes that
-   * claim checked instead of asserted. The engine's own integrity
-   * primitive composed with its own maintenance op: a receipt failure
-   * aborts loudly AFTER the swap (the `.bak` recovery story in
-   * [[compact]] still applies to a crash mid-swap; a receipt mismatch
-   * means a corrupted rewrite and names the partitions). Costs one
-   * extra full-content read per side — run it where a 100-TB handoff
-   * would anyway demand the proof, skip plain [[compact]] where not.
-   */
-  def compactWithReceipt(
-      spark: SparkSession, path: String, idCol: String, content: Column,
-      targetFileBytes: Long = 128L * 1024 * 1024,
-      partitionCol: String = "date"): Seq[CompactionStat] = {
-    val before = collectManifest(
-      manifestOf(spark, path, idCol, content, partitionCol))
-    val stats = compact(spark, path, targetFileBytes, partitionCol)
-    val after = collectManifest(
-      manifestOf(spark, path, idCol, content, partitionCol))
-    requireUnchanged(before, after, "compact")
-    stats
-  }
-
-  /**
-   * [[upsertPartitions]] under a manifest receipt: only the partitions
-   * present in `updates` may change — every other partition's row count
-   * and checksum must survive the merge bit-for-bit (the failure this
-   * catches is the dynamic-overwrite misconfiguration or path typo that
-   * silently clobbers a partition the write never declared). Returns
-   * the touched partitions' new manifest rows — the receipt a
-   * downstream consumer stores next to the delta.
-   */
-  def upsertPartitionsWithReceipt(
-      spark: SparkSession, path: String, updates: DataFrame,
-      keyCols: Seq[String], orderCols: Seq[String],
-      idCol: String, content: Column,
-      partitionCol: String = "date"): DataFrame = {
-    val before = collectManifest(
-      manifestOf(spark, path, idCol, content, partitionCol))
-    upsertPartitions(spark, path, updates, keyCols, orderCols, partitionCol)
-    val after = collectManifest(
-      manifestOf(spark, path, idCol, content, partitionCol))
-    val touched = updates.select(col(partitionCol)).distinct()
-      .collect().map(r => String.valueOf(r.get(0))).toSet
-    requireUnchanged(before, after, "upsertPartitions", touched)
-    // return the rows the check VERIFIED — not a lazy plan over the
-    // path, which would re-hash the table a third time and could read
-    // state a later writer changed after this receipt was issued
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      after.view.filterKeys(touched).toSeq.sortBy(_._1)
-        .map { case (s, (n, c)) => org.apache.spark.sql.Row(s, n, c) }
-        .asJava,
-      StructType(Seq(
-        StructField("shard", StringType),
-        StructField("n_rows", LongType),
-        StructField("checksum", StringType))))
-  }
-
   def exportManifest(
       df: DataFrame, shardCol: String, idCol: String,
       content: Column, rowsPerBucket: Long = 1L << 16): DataFrame = {

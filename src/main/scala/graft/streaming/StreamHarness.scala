@@ -59,8 +59,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
  * rename that refuses to overwrite, which guards a checkpoint against a
  * second writer; a drain's checkpoint is a fresh local directory with one
  * writer, and a local `rename` is atomic, so it buys nothing here. The
- * choice is local to [[drain]]: a caller-owned checkpoint
- * ([[StreamingIngest]]) may live on HDFS or S3 and keeps Spark's default.
+ * choice is local to [[drain]]: a caller-owned checkpoint may live on
+ * HDFS or S3 and keeps Spark's default.
  */
 object StreamHarness {
 

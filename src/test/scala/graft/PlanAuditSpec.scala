@@ -128,7 +128,7 @@ class PlanAuditSpec extends GraftSpec {
     val cent = graft.ext.AnnIvf.trainCentroids(emb, k = 4, iters = 0)
     // sparkPlan, not executedPlan: collect() does not descend into the
     // AdaptiveSparkPlanExec wrapper
-    val exec = graft.ext.AnnIvf.iterPlanProbe(emb, cent)
+    val exec = graft.ext.AnnIvfTwins.iterPlanProbe(emb, cent)
       .queryExecution.sparkPlan
     def find(p: SparkPlan): Seq[GenerateExec] =
       p.collect { case g: GenerateExec => g }

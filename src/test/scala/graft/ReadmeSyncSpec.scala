@@ -36,6 +36,28 @@ class ReadmeSyncSpec extends GraftSpec {
       s"native expressions with no README mention: ${missing.toSeq.sorted}")
   }
 
+  test("every module and spec the README names exists") {
+    // `graft.<pkg>.<Name>` and `<pkg>.<Name>` resolve against the types
+    // declared in src/main (a type need not have a file of its own:
+    // `JdbcSink` lives in Sinks.scala); `<Name>Spec` against the spec
+    // classes in src/test
+    val types = SourceScan.sources("src/main/scala")
+      .flatMap { case (_, code) => SourceScan.declaredTypes(code) }.toSet
+    val specs = SourceScan.sources("src/test/scala")
+      .flatMap { case (_, code) => SourceScan.declaredTypes(code) }
+      .filter(_.endsWith("Spec")).toSet
+    assert(types.contains("SparkEntry") && specs.contains("ReadmeSyncSpec"),
+      "source scan came up empty — wrong cwd?")
+    val modules =
+      "\\b(?:graft|ext|analytics|streaming|stage|clf|sinks|functions)\\.([A-Z]\\w*)".r
+        .findAllMatchIn(readme).map(_.group(1)).toSet
+    val namedSpecs = "\\b([A-Z]\\w*Spec)\\b".r.findAllMatchIn(readme).map(_.group(1)).toSet
+    assert(modules.diff(types).isEmpty,
+      s"README names modules no src/main type declares: ${modules.diff(types).toSeq.sorted}")
+    assert(namedSpecs.diff(specs).isEmpty,
+      s"README names specs src/test does not declare: ${namedSpecs.diff(specs).toSeq.sorted}")
+  }
+
   test("README carries no hand-written totals that can drift") {
     val drifty = Seq(
       "\\d+ declared queries".r,

@@ -210,6 +210,22 @@ class LogAnalyticsSpec extends GraftSpec {
       ("2024-01-08", 0L, 1L), ("2024-01-08", 1L, 1L)))
   }
 
+  test("cohortRetention merge law: parity halves' user-week frames fold " +
+    "to the whole-data matrix (q239)") {
+    val events = Seq(
+      (1L, 1L, "2024-01-02 10:00:00"), (2L, 1L, "2024-01-16 10:00:00"),
+      (3L, 2L, "2024-01-08 10:00:00"), (4L, 2L, "2024-01-10 10:00:00"),
+      (5L, 2L, "2024-01-15 10:00:00"), (6L, 3L, "2024-01-09 10:00:00"))
+      .toDF("event_id", "user_id", "s")
+      .withColumn("ts", to_timestamp(col("s"))).drop("s")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val merged = LogAnalytics.cohortRetentionFromWeeks(LogAnalytics.mergeWeeks(
+      LogAnalytics.userWeeks(events.filter(col("event_id") % 2 === 0)),
+      LogAnalytics.userWeeks(events.filter(col("event_id") % 2 =!= 0))))
+    assert(rows(merged) == rows(LogAnalytics.cohortRetention(events)))
+    assert(rows(merged).size == 4)
+  }
+
   test("transitions: adjacent pairs per user in (ts, id) order; first " +
     "events and NULL users contribute nothing") {
     def ev(id: Long, u: Option[Long], s: String, t: String) = (id, u, s, t)

@@ -77,6 +77,23 @@ class TimeSeriesSpec extends GraftSpec {
       got)
   }
 
+  test("rollingDistinctUsers merge law: parity halves' user-day frames " +
+    "fold to the whole-data series (q263)") {
+    import org.apache.spark.sql.functions.{col, timestamp_seconds}
+    val ev = Seq((1L, 1L, 0L), (2L, 1L, 100L), (3L, 2L, 86400L),
+      (4L, 2L, 2L * 86400L), (5L, 1L, 8L * 86400L))
+      .toDF("event_id", "user_id", "ep")
+      .withColumn("ts", timestamp_seconds(col("ep"))).drop("ep")
+    def half(parity: Int) = TimeSeries.userDays(
+      ev.filter(col("event_id") % 2 === parity), "user_id", "ts")
+    val merged = TimeSeries.rollingFromUserDays(
+        TimeSeries.mergeUserDays(half(0), half(1)), windowDays = 7)
+      .collect().toSet
+    assert(merged == TimeSeries.rollingDistinctUsers(ev, "user_id", "ts",
+      windowDays = 7).collect().toSet)
+    assert(merged.size == 4)
+  }
+
   test("rollingDistinctUsersHll: the sketch form equals the exact form " +
     "on the fixture AND on real events (exact mode at this " +
     "cardinality)") {

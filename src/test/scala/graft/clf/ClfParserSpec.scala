@@ -52,6 +52,42 @@ class ClfParserSpec extends GraftSpec {
       == "2015-11-14T05:29:59Z")
   }
 
+  test("the parse is invariant under the session time zone: America/New_York " +
+    "gives the same instants and rejects as UTC") {
+    // the fixtures' canonical stamps are computed by hand; case-variant
+    // months go to the formatter fallback, which reads the session zone.
+    // Stamps on New York's DST switch days (a 02:30 that does not exist
+    // locally, a 01:30 that exists twice) must keep their written offset.
+    val lines = fixtures ++ Seq(
+      """10.0.0.4 - 7 [08/mar/2015:02:30:00 -0500] "GET /a HTTP/1.1" 200 1 "-" "ua"""",
+      """10.0.0.5 - 8 [01/NOV/2015:01:30:00 -0400] "GET /b HTTP/1.1" 200 2 "-" "ua"""",
+      """10.0.0.6 - 9 [01/Nov/2015:01:30:00 -0500] "GET /c HTTP/1.1" 200 3 "-" "ua"""",
+      """10.0.0.7 - 10 [08/Mar/2015:02:30:00 +0000] "GET /d HTTP/1.1" 200 4 "-" "ua"""")
+    def run(zone: String): (Seq[Option[java.time.Instant]], Any) = {
+      val key = "spark.sql.session.timeZone"
+      val prior = spark.conf.getAll.get(key)
+      try {
+        spark.conf.set(key, zone)
+        val counts = org.apache.spark.sql.Observation()
+        val times = ClfParser.parse(lines.toDF("value"), Some(counts))
+          .select("time").collect().toSeq
+          .map(r => Option(r.getAs[java.sql.Timestamp](0)).map(_.toInstant))
+        (times, counts.get(ClfParser.RejectsMetric))
+      } finally {
+        prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+        assert(spark.conf.getAll.get(key) == prior)
+      }
+    }
+    val (utcTimes, utcRejects) = run("UTC")
+    val (nyTimes, nyRejects) = run("America/New_York")
+    assert(nyTimes == utcTimes)
+    assert(nyRejects == utcRejects && utcRejects == 1L)
+    assert(utcTimes.count(_.isDefined) == lines.size - 1, utcTimes)
+    assert(utcTimes.drop(4) == Seq("2015-03-08T07:30:00Z", "2015-11-01T05:30:00Z",
+      "2015-11-01T06:30:00Z", "2015-03-08T02:30:00Z")
+      .map(t => Some(java.time.Instant.parse(t))))
+  }
+
   test("spaces inside quoted fields and resource survive; quotes unescape") {
     val r = parsed(2)
     assert(r.getAs[String]("request_resource") == "/img/a b.png")
@@ -140,21 +176,6 @@ class ClfParserSpec extends GraftSpec {
     assert(r.getAs[String]("request_resource") == "/x/y?z=1")
     assert(r.getAs[Long]("status_code") == 301L)
     assert(r.getAs[Long]("size") == 42L)
-  }
-
-  test("parseTyped: typed Dataset[LogLine] with None for '-' and malformed") {
-    import spark.implicits._
-    val raw = Seq(
-      """10.0.0.1 - 7 [13/Nov/2015:11:45:42 +0000] "GET /a HTTP/1.0" 200 - "-" "ua"""",
-      "not a log line"
-    ).toDF("value")
-    val rows = ClfParser.parseTyped(raw).collect()
-    assert(rows(0).user_id.contains(7L))
-    assert(rows(0).size.isEmpty)          // '-' → None
-    assert(rows(0).referer.isEmpty)
-    assert(rows(0).request_resource.contains("/a"))
-    assert(rows(1).ip_address.isEmpty)    // malformed → all-None
-    assert(rows(1).time.isEmpty)
   }
 
   test("an out-of-range number is NULL on a matched line, not a job failure") {

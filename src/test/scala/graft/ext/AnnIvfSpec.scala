@@ -22,7 +22,8 @@ class AnnIvfSpec extends GraftSpec {
   test("every corpus vector lands in exactly one cell") {
     val emb = Tables(spark, sfDir, "embeddings")
     val centroids = AnnIvf.trainCentroids(emb, k = 8, iters = 1)
-    val cells = AnnIvf.assignCells(emb, centroids)
+    val cells = AnnIvf.buildIvfIndex(emb, centroids)
+      .select(col("nn_id").as("vec_id"), col("cell"))
     assert(cells.count() == emb.count())
     assert(cells.select("vec_id").distinct().count() == emb.count())
     // cell ids are the seed vectors' vec_ids — at most k distinct values
@@ -120,62 +121,22 @@ class AnnIvfSpec extends GraftSpec {
     }
   }
 
-  test("cell-bucketed index table: same result, corpus side never shuffles") {
-    val emb = Tables(spark, sfDir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 8)
-    val centroids = AnnIvf.trainCentroids(emb, k = 16, iters = 2)
-    try {
-      AnnIvf.stageIvfCells(AnnIvf.buildIvfIndex(emb, centroids),
-        "graft_ivf_cells", numBuckets = 4)
-      val index = spark.table("graft_ivf_cells")
-      val self = AnnIvf.annTopK(queries, emb, centroids,
-        kNeighbors = 5, nprobe = 10).collect().toSeq
-      assert(AnnIvf.annTopKIndexed(queries, index, centroids,
-        kNeighbors = 5, nprobe = 10).collect().toSeq == self)
-
-      // plan shape with broadcast off: ONE cell-keyed Exchange — the probe
-      // (query) side — while the bucketed corpus scan satisfies the
-      // candidate join's partitioning itself. The window's q_id Exchange
-      // is downstream and out of scope for the cell count.
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val p = AnnIvf.annTopKIndexed(queries, index, centroids,
-          kNeighbors = 5, nprobe = 10).queryExecution.executedPlan.toString
-        val cellExchanges = "Exchange hashpartitioning\\(cell".r.findAllIn(p).size
-        assert(cellExchanges == 1, s"corpus side shuffled:\n$p")
-        assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-      // knnJoinIndexed: the corpus-wide neighbor refresh from the index
-      // alone matches the raw-corpus knnJoin
-      assert(
-        AnnIvf.knnJoinIndexed(index, centroids, kNeighbors = 3).collect().toSeq
-          == AnnIvf.knnJoin(emb, centroids, kNeighbors = 3).collect().toSeq)
-    } finally spark.sql("DROP TABLE IF EXISTS graft_ivf_cells")
-  }
-
   test("native nearest-cells ≡ unrolled reference; codegen holds at k=256") {
     val emb = Tables(spark, sfDir, "embeddings")
-    // bit-equality of assignment AND probe selection at a small k and at a
-    // k the unrolled form was architecturally capped near
+    // bit-equality of probe selection at a small k and at a k the
+    // unrolled form was architecturally capped near
     for (k <- Seq(16, 256)) {
       val centroids = AnnIvf.trainCentroids(emb, k = k, iters = 1)
-      def cellsOf(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => (r.getLong(0), r.get(1))).toSet
-      assert(cellsOf(AnnIvf.assignCells(emb, centroids))
-        == cellsOf(AnnIvf.assignCellsUnrolled(emb, centroids)),
-        s"assignment drifted from the unrolled reference at k=$k")
       // probe path (nprobe > 1): ordered cell lists must match per query
       val cents = centroids.collect().map(r =>
         (r.getLong(0), r.getSeq[Float](1), r.getDouble(2))).toSeq.sortBy(_._1)
       val both = emb.filter(col("vec_id") < 32).select(col("vec_id"),
-          AnnIvf.nearestCellsUnrolled(col("embedding"), cents, 4).as("ref"))
+          AnnIvfTwins.nearestCellsUnrolled(col("embedding"), cents, 4).as("ref"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
       val native = AnnIvf.annTopK(emb.filter(col("vec_id") < 32), emb, centroids,
         kNeighbors = 1, nprobe = 4) // exercises the native probe end-to-end
       assert(native.count() > 0)
-      val nativeProbe = AnnIvf.probeCellsNative(emb.filter(col("vec_id") < 32), centroids, 4)
+      val nativeProbe = AnnIvfTwins.probeCellsNative(emb.filter(col("vec_id") < 32), centroids, 4)
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
       assert(nativeProbe == both, s"probe selection drifted at k=$k")
     }
@@ -183,7 +144,7 @@ class AnnIvfSpec extends GraftSpec {
     // whole-stage codegen with zero CodegenFallback nodes — the exact
     // regression the unrolled form hit at large k
     val centroids = AnnIvf.trainCentroids(emb, k = 256, iters = 1)
-    val plan = AnnIvf.assignCells(emb, centroids)
+    val plan = AnnIvf.buildIvfIndex(emb, centroids)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CodegenFallback"), plan.take(2000))
     // the `*(n)` operator prefix IS the whole-stage-codegen marker in
@@ -225,7 +186,6 @@ class AnnIvfSpec extends GraftSpec {
     val empty = emb.filter(col("vec_id") < 0)
     val cents = AnnIvf.trainCentroids(empty, k = 4)
     assert(cents.count() == 0)
-    assert(AnnIvf.assignCells(emb, cents).count() == 0)
     val topk = AnnIvf.annTopK(emb.limit(5), emb, cents, kNeighbors = 3, nprobe = 2)
     assert(topk.count() == 0)
     assert(topk.columns.toSeq == Seq("q_id", "nn_id", "sim", "rank"))

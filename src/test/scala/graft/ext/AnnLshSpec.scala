@@ -9,11 +9,11 @@ class AnnLshSpec extends GraftSpec {
   private val sfDir = "/root/testdata/sf0.01"
 
   test("plane matrix is deterministic and ±1-valued") {
-    val p1 = AnnLsh.planeMatrix(8, 16, seed = 42L)
-    val p2 = AnnLsh.planeMatrix(8, 16, seed = 42L)
+    val p1 = AnnLshTwins.planeMatrix(8, 16, seed = 42L)
+    val p2 = AnnLshTwins.planeMatrix(8, 16, seed = 42L)
     assert(p1 == p2)
     assert(p1.flatten.forall(v => v == 1.0 || v == -1.0))
-    assert(AnnLsh.planeMatrix(8, 16, seed = 43L) != p1)
+    assert(AnnLshTwins.planeMatrix(8, 16, seed = 43L) != p1)
   }
 
   test("buckets: one row per table, bucket within [0, 2^bits)") {
@@ -88,34 +88,5 @@ class AnnLshSpec extends GraftSpec {
       val p = new org.apache.hadoop.fs.Path(tmp)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
-  }
-
-  test("staged bucket table: same result, corpus side never shuffles") {
-    val emb = Tables(spark, sfDir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 8)
-    try {
-      val index = AnnLsh.buildLshIndex(emb, dim = 64)
-      AnnLsh.stageLshBuckets(index, "graft_lsh_bk", numBuckets = 4)
-      val staged = Some(spark.table("graft_lsh_bk"))
-      val self = rows(AnnLsh.annTopK(queries, emb, k = 5, dim = 64))
-      assert(rows(AnnLsh.annTopKIndexed(queries, index, k = 5, dim = 64,
-        corpusBuckets = staged)) == self)
-
-      // plan shape of the candidate join, broadcast off: exactly ONE
-      // (table, bucket)-keyed Exchange — the query side — while the
-      // bucketed corpus scan satisfies the join's partitioning itself.
-      // The distinct's (q_id, nn_id) Exchange and the window's q_id
-      // Exchange are downstream and keyed differently, out of scope.
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val p = AnnLsh.annTopKIndexed(queries, index, k = 5, dim = 64,
-          corpusBuckets = staged).queryExecution.executedPlan.toString
-        val bucketExchanges =
-          "Exchange hashpartitioning\\(table".r.findAllIn(p).size
-        assert(bucketExchanges == 1, s"corpus side shuffled:\n$p")
-        assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    } finally spark.sql("DROP TABLE IF EXISTS graft_lsh_bk")
   }
 }

@@ -105,36 +105,6 @@ class AnnPqSpec extends GraftSpec {
     assert(got.size == truth.size)
   }
 
-  test("cell-bucketed IVF-PQ table: same result, code side never shuffles") {
-    val corpus = emb("/root/testdata/sf0.001")
-    val cb = AnnPq.trainCodebooks(corpus, m = 8, ksub = 16, iters = 1)
-    val centroids = AnnIvf.trainCentroids(corpus, k = 16, iters = 1)
-    val queries = corpus.filter(col("vec_id") < 4)
-    try {
-      AnnPq.stageIvfPqCells(AnnPq.buildIvfPqIndex(corpus, centroids, cb),
-        "graft_ivfpq_cells", numBuckets = 4)
-      val staged = spark.table("graft_ivfpq_cells")
-      val self = AnnPq.ivfPqTopK(queries,
-        AnnPq.buildIvfPqIndex(corpus, centroids, cb), corpus, centroids, cb,
-        kNeighbors = 5, nprobe = 10, rerank = 30).collect().toSeq
-      assert(AnnPq.ivfPqTopK(queries, staged, corpus, centroids, cb,
-        kNeighbors = 5, nprobe = 10, rerank = 30).collect().toSeq == self)
-
-      // with broadcast off: ONE cell-keyed Exchange (the probe side); the
-      // bucketed code scan satisfies the join's partitioning itself
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val p = AnnPq.ivfPqTopK(queries, staged, corpus, centroids, cb,
-          kNeighbors = 5, nprobe = 10, rerank = 30)
-          .queryExecution.executedPlan.toString
-        val cellExchanges = "Exchange hashpartitioning\\(cell".r.findAllIn(p).size
-        assert(cellExchanges == 1, s"code side shuffled:\n$p")
-        assert(!p.contains("CartesianProduct"), p)
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    } finally spark.sql("DROP TABLE IF EXISTS graft_ivfpq_cells")
-  }
-
   test("empty corpus: empty books, empty index, empty topK — never a throw") {
     val empty = emb("/root/testdata/sf0.001").filter(lit(false))
     val cb = AnnPq.trainCodebooks(empty, m = 8, ksub = 16)

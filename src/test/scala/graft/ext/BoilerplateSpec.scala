@@ -73,26 +73,13 @@ class BoilerplateSpec extends GraftSpec {
     }
   }
 
-  test("indexed strip == self-contained strip; the index append law " +
-    "holds for doc-disjoint batches") {
+  test("indexed strip == self-contained strip; one index serves any threshold") {
     def snap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
         .toSet
     val idx = Boilerplate.buildBoilerplateIndex(docs)
     assert(snap(Boilerplate.stripBoilerplateIndexed(docs, idx, minDocs = 3))
       == snap(Boilerplate.stripBoilerplate(docs, minDocs = 3)))
-
-    // append law: batch indexes of doc-disjoint halves merge to the
-    // from-scratch corpus index
-    val b1 = docs.filter($"doc_id" <= 2L)
-    val b2 = docs.filter($"doc_id" > 2L)
-    def idxSnap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-        .toSet
-    assert(idxSnap(Boilerplate.mergeBoilerplateIndexes(
-        Boilerplate.buildBoilerplateIndex(b1),
-        Boilerplate.buildBoilerplateIndex(b2)))
-      == idxSnap(idx))
 
     // one index serves any threshold: the cut applies minDocs at strip
     // time, so a stricter screen needs no rebuild

@@ -52,6 +52,18 @@ class CorpusCompareSpec extends GraftSpec {
     assert(dirAb("alpha") == "a" && dirAb("delta") == "b")
   }
 
+  test("jsDivergenceFromCounts over merged split counts equals " +
+    "jsDivergence (the q161 merge law)") {
+    val a = docs("x y z", "x x q", "y w")
+    val b = docs("q q w", "z")
+    val merged = CorpusCompare.mergeCounts(
+      CorpusCompare.termCounts(a.filter($"doc_id" === 0L))
+        .unionByName(CorpusCompare.termCounts(a.filter($"doc_id" =!= 0L))))
+    assert(CorpusCompare.jsDivergenceFromCounts(
+        merged, CorpusCompare.termCounts(b)).collect().toSeq ==
+      CorpusCompare.jsDivergence(a, b).collect().toSeq)
+  }
+
   test("drift contributions are partitioning-invariant (decimal terms) " +
     "and rank deterministically") {
     val a = docs(Seq.fill(30)("hot cold warm").mkString(" "))

@@ -55,14 +55,6 @@ class DedupSpec extends GraftSpec {
     assert(!pairs.keySet.exists { case (a, b) => a == 3L || b == 3L })
   }
 
-  test("dedup keeps least id of each group and is idempotent") {
-    val survivors = Dedup.dedup(docs, "doc_id", "text", threshold = 0.5)
-    val ids = survivors.select("doc_id").as[Long].collect().sorted
-    assert(ids.sameElements(Array(1L, 3L, 4L))) // 2 and 5 collapse into 1
-    val again = Dedup.dedup(survivors, "doc_id", "text", threshold = 0.5)
-    assert(again.select("doc_id").as[Long].collect().sorted.sameElements(ids))
-  }
-
   test("skew guard: m identical docs cost 1 LSH row, not m²/2 candidates") {
     // 100 byte-identical docs plus two distinct ones. Without the
     // exact-dup collapse every band bucket holds all 100 and the self-join
@@ -77,8 +69,10 @@ class DedupSpec extends GraftSpec {
 
     val reps = Dedup.representatives(df, "doc_id", "text")
     assert(reps.count() == 3)
-    val shReps = reps.select($"id".as("doc_id"), Dedup.shingles($"text").as("sh"))
-    assert(Dedup.candidatePairs(shReps, "doc_id", "sh").count() == 0)
+    // at threshold 0 every LSH candidate survives the verify, so any
+    // representative-level candidate would add cross-group pairs
+    assert(Dedup.nearDuplicatePairs(df, "doc_id", "text", threshold = 0.0)
+      .count() == 100L * 99L / 2L)
 
     val out = Dedup.nearDuplicatePairs(df, "doc_id", "text", threshold = 0.6)
     assert(out.count() == 100L * 99L / 2L)
@@ -93,9 +87,9 @@ class DedupSpec extends GraftSpec {
 
   test("dedupTransitive: a chain collapses to one survivor") {
     // 1 ~ 3 and 2 ~ 3 at J = 0.8 (16 shared of 20 trigrams), 1 ≁ 2
-    // (J = 14/22 ≈ 0.64 < 0.7). The middle doc has the LARGEST id, so the
-    // one-hop rule (drop docs with a smaller-id near-dup) drops only 3 and
-    // keeps both endpoints; connected components keep exactly the least id.
+    // (J = 14/22 ≈ 0.64 < 0.7). The middle doc has the LARGEST id, so a
+    // one-hop rule (drop docs with a smaller-id near-dup) would drop only 3
+    // and keep both endpoints; connected components keep exactly the least id.
     val w = (1 to 24).map(i => f"w$i%02d")
     val chain = Seq(
       (1L, w.slice(0, 20).mkString(" ")),  // tokens w01..w20
@@ -107,10 +101,6 @@ class DedupSpec extends GraftSpec {
     val pairs = Dedup.nearDuplicatePairs(chain, "doc_id", "text", threshold = 0.7)
       .select($"a_id", $"b_id").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 3L), (2L, 3L))) // chain edges only
-
-    val oneHop = Dedup.dedup(chain, "doc_id", "text", threshold = 0.7)
-      .select("doc_id").as[Long].collect().sorted
-    assert(oneHop.sameElements(Array(1L, 2L, 4L))) // per-edge: both endpoints
 
     val cc = Dedup.dedupTransitive(chain, "doc_id", "text", threshold = 0.7)
       .select("doc_id").as[Long].collect().sorted
@@ -228,112 +218,6 @@ class DedupSpec extends GraftSpec {
     assert(again.accepted.count() == 0)
   }
 
-  test("bucketed band-bucket table: same screen result, corpus side never shuffles") {
-    val corpus = Seq(
-      (10L, "the quick brown fox jumps over the lazy dog near the river"),
-      (11L, "completely different words about spark catalyst codegen and shuffles"),
-      (12L, "a third corpus text mentioning broadcast joins and partition pruning")
-    ).toDF("doc_id", "text")
-    val batch = Seq(
-      (21L, "the quick brown fox jumps over the lazy cat near the river"), // near drop
-      (22L, "a wholly novel document mentioning watermarks state stores and sinks")
-    ).toDF("doc_id", "text")
-    val index = Dedup.buildDedupIndex(corpus, "doc_id", "text")
-    try {
-      Dedup.stageDedupBuckets(index, "graft_dedup_bk", numBuckets = 4)
-
-      // the pre-bucketed corpus side screens identically
-      val viaBuckets = Dedup.dedupIncrementalIndexed(
-        batch, index, "doc_id", "text", threshold = 0.5,
-        corpusBuckets = Some(spark.table("graft_dedup_bk")))
-      assert(viaBuckets.accepted.select("doc_id").as[Long].collect().toSeq
-        == Seq(22L))
-
-      // plan shape of the candidate join, broadcast off: exactly ONE hash
-      // Exchange (the batch side) — the bucketed corpus scan satisfies the
-      // join's partitioning itself, plus the distinct's own exchange
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val bBk = Dedup.bandBuckets(
-            index.filter(col("sig").isNotNull), "ghash", "sig", 16, 2)
-          .select(col("ghash").as("b_gh"), col("band"), col("bucket"))
-        val cBk = spark.table("graft_dedup_bk")
-          .select(col("ghash").as("c_gh"), col("band"), col("bucket"))
-        val p = Dedup.candidateGhPairs(bBk, cBk)
-          .queryExecution.executedPlan.toString
-        // band-keyed exchanges only: the distinct's (b_gh, c_gh) exchange
-        // is candidate-sized and out of scope here
-        val exchanges = "Exchange hashpartitioning\\(band"
-          .r.findAllIn(p).size
-        assert(exchanges == 1, s"corpus side shuffled:\n$p")
-        assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-      // the maintenance loop's append half: bucket rows of the accepted
-      // batch append into the same table (bucket spec verified by Spark),
-      // and re-screening the batch against the grown index + grown bucket
-      // table drops everything
-      val r = Dedup.dedupIncrementalIndexed(
-        batch, index, "doc_id", "text", threshold = 0.5)
-      Dedup.stageDedupBuckets(r.indexAppend, "graft_dedup_bk",
-        numBuckets = 4, append = true)
-      val again = Dedup.dedupIncrementalIndexed(
-        batch, index.unionAll(r.indexAppend), "doc_id", "text", threshold = 0.5,
-        corpusBuckets = Some(spark.table("graft_dedup_bk")))
-      assert(again.accepted.count() == 0)
-    } finally spark.sql("DROP TABLE IF EXISTS graft_dedup_bk")
-  }
-
-  test("maintenance loop: 3 append cycles + maintainDedupIndex — screen identical, files bounded") {
-    val corpus = graft.Tables(spark, "/root/testdata/sf0.01", "documents")
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_maint").toString
-    def parquetFiles(p: String): Int = {
-      val hp = new org.apache.hadoop.fs.Path(p)
-      hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .listStatus(hp).count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    }
-    try {
-      Dedup.buildDedupIndex(corpus.filter(col("doc_id") % 4 === 0), "doc_id", "text")
-        .write.mode("overwrite").parquet(dir)
-      Dedup.stageDedupBuckets(spark.read.parquet(dir), "graft_maint_bk", numBuckets = 4)
-      // three daily cycles: screen, append index rows, append bucket rows
-      for (i <- 1 to 3) {
-        val r = Dedup.dedupIncrementalIndexed(
-          corpus.filter(col("doc_id") % 4 === i), spark.read.parquet(dir),
-          "doc_id", "text", threshold = 0.6)
-        r.indexAppend.write.mode("append").parquet(dir)
-        Dedup.stageDedupBuckets(r.indexAppend, "graft_maint_bk",
-          numBuckets = 4, append = true)
-      }
-      val probe = corpus.filter(col("doc_id") % 97 === 3)
-      def screen(): Seq[Long] = Dedup.dedupIncrementalIndexed(
-          probe, spark.read.parquet(dir), "doc_id", "text", threshold = 0.6,
-          corpusBuckets = Some(spark.table("graft_maint_bk")))
-        .accepted.select("doc_id").as[Long].collect().toSeq.sorted
-      val before = screen()
-      val filesBefore = parquetFiles(dir)
-      assert(filesBefore > 1, "appends should have accreted files")
-
-      val stat = Dedup.maintainDedupIndex(spark, dir,
-        bucketTable = Some("graft_maint_bk"), numBuckets = 4)
-      assert(stat.nonEmpty, "maintenance should have compacted the index dir")
-      // toy index is far under one target file — compaction lands on 1
-      assert(parquetFiles(dir) == 1, s"index files: ${parquetFiles(dir)}")
-      // bucket table re-staged whole: back to ≤ 1 file per bucket
-      val tableDir = spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier("graft_maint_bk"))
-        .location.getPath
-      assert(parquetFiles(tableDir) <= 4, s"bucket files: ${parquetFiles(tableDir)}")
-      // the screen is byte-identical through the swap
-      assert(screen() == before)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_maint_bk")
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-  }
-
   test("components: labels converge to the component minimum") {
     // two components: a 4-chain 10-11-12-13 (needs >1 round) and a pair
     val pairs = Seq((11L, 10L), (11L, 12L), (12L, 13L), (20L, 21L))
@@ -438,40 +322,9 @@ class DedupSpec extends GraftSpec {
       (2L, "one two three four five six seven"),
       (3L, "red orange yellow green blue indigo violet")
     ).toDF("doc_id", "text")
-    val sh = distinctDocs.select($"doc_id", Dedup.shingles($"text").as("sh"))
-    assert(Dedup.candidatePairs(sh, "doc_id", "sh").count() == 0)
-  }
-
-  test("repairPreFixShingles: stale persisted rows equal a post-fix rebuild; clean rows untouched") {
-    // hand-written PRE-FIX shingle sets: the old shingler kept the empty
-    // token a leading/trailing whitespace run produces, so padded texts
-    // persisted phantom boundary windows (the extra space inside them)
-    val padded = Seq(
-      (1L, "alpha beta gamma delta ",
-        Seq("alpha beta gamma", "beta gamma delta", "gamma delta ")),
-      (2L, " epsilon zeta eta theta",
-        Seq(" epsilon zeta", "epsilon zeta eta", "zeta eta theta")),
-      (3L, "iota kappa lambda mu", // clean: no padding, no phantoms
-        Seq("iota kappa lambda", "kappa lambda mu")),
-      (4L, "solo word ", // repaired set empties: below the n-token floor
-        Seq("solo word "))
-    ).toDF("doc_id", "text", "sh")
-    val oldIdx = padded.select(
-        md5($"text".cast("binary")).as("ghash"), $"sh")
-      .withColumn("sig",
-        when(size($"sh") > 0, Dedup.minhashSignature($"sh", 32)))
-
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("ghash", "sh", "sig").collect().map { r =>
-        (r.getString(0), r.getSeq[String](1).sorted,
-          Option(r.getSeq[Long](2)).map(_.toList))
-      }.toSet
-
-    // repairing what the old shingler persisted must land EXACTLY on what
-    // the current shingler would build from the same texts — same phantom
-    // windows dropped, same re-signed signatures, same empty-set NULL sig
-    assert(rows(Dedup.repairPreFixShingles(oldIdx)) ==
-      rows(Dedup.buildDedupIndex(padded.select("doc_id", "text"), "doc_id", "text")))
+    // threshold 0: every LSH candidate would survive the verify
+    assert(Dedup.nearDuplicatePairs(distinctDocs, "doc_id", "text",
+      threshold = 0.0).count() == 0)
   }
 
   test("containmentPairs: a quoted paragraph scores ~1 on its side with " +
@@ -579,8 +432,8 @@ class DedupSpec extends GraftSpec {
     assert(shuffled == out)
   }
 
-  test("paragraph index: merge ≡ from-scratch; indexed screen ≡ " +
-      "full-corpus dedup restricted to the batch (history ids first)") {
+  test("paragraph index: indexed screen ≡ full-corpus dedup restricted " +
+      "to the batch (history ids first)") {
     import spark.implicits._
     val history = Seq(
       (1L, "A\n\nB"),
@@ -596,18 +449,6 @@ class DedupSpec extends GraftSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
       .toSet
 
-    // merge law
-    val mergedIdx = Dedup.mergeParagraphIndexes(
-      Dedup.buildParagraphIndex(history, "doc_id", "text"),
-      Dedup.buildParagraphIndex(batch, "doc_id", "text"))
-    val fullIdx = Dedup.buildParagraphIndex(
-      history.unionByName(batch), "doc_id", "text")
-    assert(mergedIdx.collect().map(r =>
-        (r.getString(0), r.getLong(1), r.getInt(2))).toSet ==
-      fullIdx.collect().map(r =>
-        (r.getString(0), r.getLong(1), r.getInt(2))).toSet)
-
-    // screen law
     val screened = rows(Dedup.dedupParagraphsIndexed(batch,
       Dedup.buildParagraphIndex(history, "doc_id", "text"),
       "doc_id", "text"))
@@ -641,7 +482,7 @@ class DedupSpec extends GraftSpec {
     (1 to 4).foreach { n =>
       val got = df.select(col("id"),
           Dedup.shingles(col("text"), n).as("a"),
-          Dedup.shinglesHof(col("text"), n).as("b"))
+          DedupTwins.shinglesHof(col("text"), n).as("b"))
         .collect()
       got.foreach { r =>
         assert(r.getSeq[String](1) == r.getSeq[String](2),
@@ -652,7 +493,7 @@ class DedupSpec extends GraftSpec {
     // null text: both null
     val nulls = Seq((0L, null: String)).toDF("id", "text")
       .select(Dedup.shingles(col("text"), 3).as("a"),
-        Dedup.shinglesHof(col("text"), 3).as("b"))
+        DedupTwins.shinglesHof(col("text"), 3).as("b"))
       .collect()(0)
     assert(nulls.isNullAt(0) && nulls.isNullAt(1))
   }

@@ -73,16 +73,6 @@ class EvalSpec extends GraftSpec {
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2),
         r.getLong(3))).toSet
     assert(ann == exact, s"ann=$ann exact=$exact")
-
-    // the vote also composes with the PERSISTED neighbor path: an
-    // indexed knnJoin feeds the identical frame shape
-    val idx = AnnIvf.buildIvfIndex(emb, centroids)
-    val annIdx = Eval.knnClassifyAnn(
-        AnnIvf.knnJoinIndexed(idx, centroids, kNeighbors = 3, nprobe = 2),
-        emb, k = 3)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2),
-        r.getLong(3))).toSet
-    assert(annIdx == exact)
   }
 
   test("knnClassifyAnn: labelless rows neither vote nor get classified") {
@@ -442,8 +432,7 @@ class EvalSpec extends GraftSpec {
   }
 
   test("hardNegatives: the nearest CROSS-label vector ranks first, " +
-    "same-label near-duplicates are invisible, and the ANN-fed variant " +
-    "equals the exact form when fed the exact pair frame") {
+    "same-label near-duplicates are invisible") {
     // anchor 1 (label 0): vector 3 is nearly parallel but label 0 (no
     // signal — skipped); vector 2 (label 1) is the true hard negative;
     // vector 4 (label 1) is orthogonal — an easy negative, rank 2.
@@ -457,20 +446,6 @@ class EvalSpec extends GraftSpec {
       .filter($"q_id" === 1L).orderBy("rank").collect()
     assert(hn.map(_.getLong(2)).toSeq == Seq(2L, 4L), hn.mkString(";"))
     assert(hn.head.getDouble(4) == 0.96 && hn.head.getInt(3) == 1)
-    // equivalence law: feed the exact all-pairs frame into the ANN face
-    val pairs = df.select($"vec_id".as("q_id"), $"embedding".as("qe"))
-      .crossJoin(df.select($"vec_id".as("nn_id"), $"embedding".as("ne")))
-      .filter($"q_id" =!= $"nn_id")
-      .select($"q_id", $"nn_id", round(
-        Similarity.nativeDot($"qe", $"ne") /
-          nullif(Similarity.norm($"qe") * Similarity.norm($"ne"),
-            lit(0.0)), 6).as("sim"), lit(1L).as("rank"))
-    val viaAnn = Eval.hardNegativesAnn(pairs,
-      df.select($"vec_id", $"label"), k = 2)
-      .orderBy("q_id", "rank").collect().toSeq
-    val exact = Eval.hardNegatives(df, k = 2)
-      .orderBy("q_id", "rank").collect().toSeq
-    assert(viaAnn == exact, "one ranking core, two candidate feeds")
     intercept[IllegalArgumentException] {
       Eval.hardNegatives(df, k = 0)
     }

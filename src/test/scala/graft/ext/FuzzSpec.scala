@@ -96,7 +96,7 @@ class FuzzSpec extends GraftSpec {
       .toDF("i", "sh")
       .select(
         Dedup.minhashSignature($"sh", 8).as("native"),
-        Dedup.minhashSignatureHof($"sh", 8).as("hof"))
+        DedupTwins.minhashSignatureHof($"sh", 8).as("hof"))
       .filter(not($"native" <=> $"hof"))
       .count()
     assert(mismatches == 0)
@@ -111,7 +111,7 @@ class FuzzSpec extends GraftSpec {
       .map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
     val native = TextOps.simhash(docs, "doc_id", "text")
-    val twin = TextOps.simhashRelational(docs, "doc_id", "text")
+    val twin = TextOpsTwins.simhashRelational(docs, "doc_id", "text")
     assert(native.count() == twin.count())
     assert(native.unionAll(twin).distinct().count() == twin.count())
   }
@@ -204,58 +204,6 @@ class FuzzSpec extends GraftSpec {
     }
   }
 
-  test("repairPreFixShingles lands exactly on a fresh rebuild for random padded docs") {
-    // replica of the PRE-FIX shingler: identical windowing, but the token
-    // split keeps the empty tokens a boundary whitespace run produces —
-    // exactly what old persisted indexes hold. DedupSpec pins 4 hand
-    // cases; this pins the full claim ("survivors byte-equal, phantom
-    // windows only ever whole, sig re-signed or NULLed") over random
-    // padding shapes: tabs, multi-space runs, whitespace-only docs,
-    // below-floor docs, unicode tokens.
-    def oldShingles(text: org.apache.spark.sql.Column, n: Int = 3) = {
-      val toks = split(lower(text), "\\s+") // no empty-token filter
-      val shifted = (0 until n).map { k =>
-        if (k == 0) toks
-        else slice(toks, lit(k + 1), greatest(size(toks) - k, lit(0)))
-      }
-      array_distinct(filter(
-        transform(arrays_zip(shifted: _*), x =>
-          when((0 until n).map(k => x.getField(k.toString).isNotNull)
-              .reduce(_ && _),
-            concat_ws(" ", (0 until n).map(k => x.getField(k.toString)): _*))),
-        s => s.isNotNull))
-    }
-
-    val word = Gen.oneOf("alpha", "Beta", "gamma", "δelta", "e", "zz", "中文")
-    val pad = Gen.oneOf("", " ", "  ", "\t", " \t ")
-    val docGen: Gen[String] = for {
-      lead <- pad
-      trail <- pad
-      n <- Gen.chooseNum(0, 6)
-      toks <- Gen.listOfN(n, word)
-      seps <- Gen.listOfN(math.max(n - 1, 0), Gen.oneOf(" ", "  ", "\t"))
-    } yield lead + (if (toks.isEmpty) ""
-      else toks.head + seps.zip(toks.tail).map { case (s, t) => s + t }.mkString
-    ) + trail
-
-    val docs = cases(docGen, 80, seed = 0x5A1EL).zipWithIndex
-      .map { case (t, i) => (i.toLong, t) }
-      .toDF("doc_id", "text")
-    // what an old deployment persisted: one row per distinct text, stale
-    // shingle sets, signatures signed over the stale sets
-    val oldIdx = docs
-      .select(md5($"text".cast("binary")).as("ghash"),
-        oldShingles($"text").as("sh"))
-      .distinct()
-      .withColumn("sig", when(size($"sh") > 0, Dedup.minhashSignature($"sh", 32)))
-    assert(DedupIndexRows(Dedup.repairPreFixShingles(oldIdx)) ==
-      DedupIndexRows(Dedup.buildDedupIndex(docs, "doc_id", "text")))
-    // and on already-clean rows the repair is a bit-exact no-op
-    val clean = Dedup.buildDedupIndex(docs, "doc_id", "text")
-    assert(DedupIndexRows(Dedup.repairPreFixShingles(clean)) ==
-      DedupIndexRows(clean))
-  }
-
   test("pointInRange agrees with the naive filter on random intervals, " +
     "negatives included") {
     val caseGen: Gen[(Seq[Double], Seq[(Long, Double, Double)])] = for {
@@ -325,16 +273,11 @@ class FuzzSpec extends GraftSpec {
     cases(caseGen, 10, seed = 0x1FFC3115L).foreach { case (cents, vecs) =>
       val corpus = vecs.toDF("vec_id", "embedding")
       val centroids = cents.toDF("cell", "centroid", "c_norm")
-      def cellsOf(df: org.apache.spark.sql.DataFrame) =
-        df.collect().map(r => (r.getLong(0), r.get(1))).toMap
-      assert(cellsOf(AnnIvf.assignCells(corpus, centroids))
-        == cellsOf(AnnIvf.assignCellsUnrolled(corpus, centroids)),
-        s"assignment drifted: cents=$cents vecs=$vecs")
       val nprobe = math.min(2, cents.size)
       val ref = corpus.select(col("vec_id"),
-          AnnIvf.nearestCellsUnrolled(col("embedding"), cents, nprobe).as("cells"))
+          AnnIvfTwins.nearestCellsUnrolled(col("embedding"), cents, nprobe).as("cells"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
-      val native = AnnIvf.probeCellsNative(corpus, centroids, nprobe)
+      val native = AnnIvfTwins.probeCellsNative(corpus, centroids, nprobe)
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
       assert(native == ref, s"probe order drifted: cents=$cents vecs=$vecs")
     }

@@ -32,22 +32,6 @@ class MaterializeSpec extends GraftSpec {
     mine.unpersist(true)
   }
 
-  test("scoped: inner scope releases only its cuts; outer survives and nests") {
-    Materialize.release(spark)
-    Materialize.scoped(spark) {
-      val outer = Materialize.cut((1 to 50).toDF("a"))
-      assert(Materialize.trackedIds.size == 1)
-      Materialize.scoped(spark) {
-        Materialize.cut((1 to 60).toDF("b")).count()
-        assert(Materialize.trackedIds.size == 2)
-      }
-      // inner released its cut AND outer tracking resumed
-      assert(Materialize.trackedIds.size == 1)
-      assert(outer.count() == 50) // outer cut untouched by inner release
-    }
-    assert(Materialize.trackedIds.isEmpty) // outer scope released its own
-  }
-
   test("concurrent cuts never adopt a caller-owned cache persisted in between") {
     Materialize.release(spark)
     val pool = Executors.newFixedThreadPool(8)

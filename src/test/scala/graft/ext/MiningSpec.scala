@@ -67,45 +67,6 @@ class MiningSpec extends GraftSpec {
     }
   }
 
-  test("mmrDiversify: a diverse lower-sim candidate beats a near-dup of " +
-    "the first pick; lambda=1 reduces to pure sim order") {
-    // A (0.95, e1) then its near-dup B (0.94, ~e1) vs diverse C (0.80, e2):
-    // at λ=0.7, B's redundancy penalty (~0.3·1.0) sinks it below C
-    val cands = Seq(
-      (1L, 10L, 0.95, Array(1.0f, 0.0f)),
-      (1L, 11L, 0.94, Array(1.0f, 0.01f)),
-      (1L, 12L, 0.80, Array(0.0f, 1.0f))
-    ).toDF("q_id", "nn_id", "sim", "embedding")
-    val picks = Mining.mmrDiversify(cands, lambda = 0.7, k = 2)
-      .orderBy($"mmr_rank")
-      .collect().map(r => (r.getLong(1), r.getInt(2))).toSeq
-    assert(picks == Seq((10L, 1), (12L, 2)), s"got $picks")
-    val pure = Mining.mmrDiversify(cands, lambda = 1.0, k = 3)
-      .orderBy($"mmr_rank")
-      .collect().map(_.getLong(1)).toSeq
-    assert(pure == Seq(10L, 11L, 12L))
-  }
-
-  test("mmrDiversify: per-query independence, k caps at the candidate " +
-    "count, ties break to the smaller nn_id, bounds validated") {
-    val cands = Seq(
-      (1L, 10L, 0.9, Array(1.0f, 0.0f)),
-      (1L, 11L, 0.9, Array(1.0f, 0.0f)), // identical twin — id breaks it
-      (2L, 20L, 0.5, Array(0.0f, 1.0f))
-    ).toDF("q_id", "nn_id", "sim", "embedding")
-    val got = Mining.mmrDiversify(cands, lambda = 0.5, k = 5)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    // q1 emits both candidates (k caps at 2), first pick the smaller id;
-    // q2's singleton is untouched by q1's selection state
-    assert(got == Set((1L, 10L, 1), (1L, 11L, 2), (2L, 20L, 1)), s"$got")
-    intercept[IllegalArgumentException] {
-      Mining.mmrDiversify(cands, lambda = 1.5, k = 2)
-    }
-    intercept[IllegalArgumentException] {
-      Mining.mmrDiversify(cands, lambda = 0.5, k = 0)
-    }
-  }
-
   test("associationRules: textbook support/confidence/lift on a " +
     "4-basket corpus; duplicates collapse; minSupport cuts") {
     val m = Seq((1L, "A"), (1L, "B"), (1L, "B"), // dup membership

@@ -39,9 +39,9 @@ class MultimodalSpec extends GraftSpec {
   }
 
   test("decodeStub: deterministic fixed-width features in [0,1)") {
-    val f1 = assets.select(Multimodal.decodeStub($"payload", 4).as("f"))
+    val f1 = assets.select(StubDecoder.decodeStub($"payload", 4).as("f"))
       .as[Seq[Double]].collect()
-    val f2 = assets.select(Multimodal.decodeStub($"payload", 4).as("f"))
+    val f2 = assets.select(StubDecoder.decodeStub($"payload", 4).as("f"))
       .as[Seq[Double]].collect()
     assert(f1.toSeq == f2.toSeq)
     assert(f1.forall(v => v.length == 4 && v.forall(x => x >= 0.0 && x < 1.0)))

@@ -128,7 +128,7 @@ class ProbeSpec extends GraftSpec {
     val y = when(col("label") === 0, 1.0)
       .when(col("label").isNotNull, 0.0)
     val agg = Probe.fitRidge(df, "embedding", y, dim = 64)
-    val exp = Probe.fitRidgeExploded(df, "embedding", y, dim = 64)
+    val exp = ProbeTwins.fitRidgeExploded(df, "embedding", y, dim = 64)
     val maxDiff = agg.zip(exp).map { case (a, b) => math.abs(a - b) }.max
     assert(agg.length == 65 && maxDiff <= 1e-9,
       s"paths diverge: maxDiff=$maxDiff")

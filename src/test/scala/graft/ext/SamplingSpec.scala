@@ -10,19 +10,6 @@ class SamplingSpec extends GraftSpec {
     .map(i => (i, s"document number $i body", if (i % 2 == 0) "en" else "es"))
     .toDF("doc_id", "text", "lang")
 
-  test("hashSample: deterministic, repartition-stable, pure filter") {
-    val a = Sampling.hashSample(docs, col("text"), "80")
-      .select("doc_id").as[Long].collect().toSet
-    val b = Sampling.hashSample(docs.repartition(7), col("text"), "80")
-      .select("doc_id").as[Long].collect().toSet
-    assert(a == b)                       // stable under repartitioning
-    assert(a.nonEmpty && a.size < 100)   // ceil "80" keeps ≈ half
-    // no shuffle: the sample is a filter over the scan
-    val p = Sampling.hashSample(docs, col("text"), "80")
-      .queryExecution.executedPlan.toString
-    assert(!p.contains("Exchange"))
-  }
-
   test("stratifiedTake: exactly k per stratum, rank order stable") {
     val taken = Sampling.stratifiedTake(docs, "lang", col("text"), "doc_id", 5)
       .select($"lang", $"doc_id", $"rk")
@@ -138,32 +125,13 @@ class SamplingSpec extends GraftSpec {
       again.select("doc_id", "split")).isEmpty)
   }
 
-  test("shuffledLayout: reading files in order replays one deterministic permutation per salt") {
-    val p1 = java.nio.file.Files.createTempDirectory("graft_shuf1").toString
-    Sampling.shuffledLayout(docs, p1, numFiles = 4, col("doc_id"), "epoch1")
-    // the layout IS the order: shuffle_key ranges are disjoint across
-    // files and sorted within them, so path-order streaming is global order
-    val ranges = spark.read.parquet(p1)
-      .groupBy(col("_metadata.file_path"))
-      .agg(min(col("shuffle_key")).as("lo"), max(col("shuffle_key")).as("hi"))
-      .collect().map(r => (r.getString(1), r.getString(2))).sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi), (lo, _)) => assert(hi <= lo, s"overlap: $ranges")
-      case _ =>
-    }
-    // deterministic: rewriting with the same salt replays the same order;
-    // a different salt produces a genuinely different permutation
-    val order1 = spark.read.parquet(p1).orderBy("shuffle_key")
-      .select("doc_id").as[Long].collect().toSeq
-    val p1b = java.nio.file.Files.createTempDirectory("graft_shuf1b").toString
-    Sampling.shuffledLayout(docs.repartition(11), p1b, 4, col("doc_id"), "epoch1")
-    val order1b = spark.read.parquet(p1b).orderBy("shuffle_key")
-      .select("doc_id").as[Long].collect().toSeq
-    assert(order1 == order1b)
-    val p2 = java.nio.file.Files.createTempDirectory("graft_shuf2").toString
-    Sampling.shuffledLayout(docs, p2, 4, col("doc_id"), "epoch2")
-    val order2 = spark.read.parquet(p2).orderBy("shuffle_key")
-      .select("doc_id").as[Long].collect().toSeq
+  test("shuffleKey: one deterministic permutation per salt, independent of partitioning") {
+    def order(df: org.apache.spark.sql.DataFrame, salt: String): Seq[Long] =
+      df.orderBy(Sampling.shuffleKey(col("doc_id"), salt))
+        .select("doc_id").as[Long].collect().toSeq
+    val order1 = order(docs, "epoch1")
+    assert(order(docs.repartition(11), "epoch1") == order1)
+    val order2 = order(docs, "epoch2")
     assert(order1 != order2)
     assert(order1.sorted == order2.sorted) // same corpus, different order
   }

@@ -23,22 +23,6 @@ class SemDedupSpec extends GraftSpec {
     assert(out == Seq(1L, 4L, 5L))
   }
 
-  test("dedupAnn agrees with dedupExact when probes cover everything") {
-    val emb = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")
-    val centroids = AnnIvf.trainCentroids(emb, k = 4, iters = 2)
-    // nprobe = all cells and k large enough to surface every ≥-threshold
-    // neighbor: candidate generation is complete, so ANN ≡ single-block
-    // exact (sf0.001 pair groups are tiny — k=10 is a safe ceiling)
-    val ann = SemDedup.dedupAnn(emb, centroids, threshold = 0.40,
-        kNeighbors = 10, nprobe = 4)
-      .select("vec_id").as[Long].collect().sorted.toSeq
-    val exact = SemDedup.dedupExact(
-        emb.withColumn("one", lit(1)), "vec_id", "embedding", "one", 0.40)
-      .select("vec_id").as[Long].collect().sorted.toSeq
-    assert(ann == exact)
-    assert(ann.size < emb.count()) // the fixture actually has semantic dups
-  }
-
   test("shared closure: q84's survivor rule matches a driver-side union-find") {
     val emb = graft.Tables(spark, "/root/testdata/sf0.01", "embeddings")
     val pairs = Similarity.nearDupPairsBlocked(

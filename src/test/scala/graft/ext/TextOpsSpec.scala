@@ -32,7 +32,7 @@ class TextOpsSpec extends GraftSpec {
       .select($"text")
     for (df <- Seq(edges, docs)) {
       val both = df.select(TextOps.langId($"text").as("native"),
-        TextOps.langIdRelational($"text").as("twin"))
+        TextOpsTwins.langIdRelational($"text").as("twin"))
       assert(both.filter($"native" =!= $"twin").count() == 0)
       assert(both.filter($"native".isNull || $"twin".isNull).count() == 0)
     }
@@ -94,7 +94,7 @@ class TextOpsSpec extends GraftSpec {
       .select(col("doc_id"), col("text"))
       .unionAll(Seq((-1L, ""), (-2L, "   "), (-3L, "one two")).toDF("doc_id", "text"))
     val native = TextOps.simhash(docs, "doc_id", "text")
-    val twin = TextOps.simhashRelational(docs, "doc_id", "text")
+    val twin = TextOpsTwins.simhashRelational(docs, "doc_id", "text")
     assert(native.count() == twin.count(), "native dropped/added docs")
     assert(native.unionAll(twin).distinct().count() == twin.count(),
       "native and relational simhash disagree on some doc")
@@ -145,13 +145,13 @@ class TextOpsSpec extends GraftSpec {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val d = docs.select(
       TextOps.topBigramCount($"text").as("native"),
-      TextOps.topBigramCountHof($"text").as("hof"))
+      TextOpsTwins.topBigramCountHof($"text").as("hof"))
     assert(d.filter($"native" =!= $"hof").count() == 0)
     assert(d.filter($"native" > 1).count() > 0) // corpus actually repeats
     // null text → NULL from both formulations
     val n = Seq((1L, Option.empty[String])).toDF("doc_id", "text")
       .select(TextOps.topBigramCount($"text").as("native"),
-        TextOps.topBigramCountHof($"text").as("hof"))
+        TextOpsTwins.topBigramCountHof($"text").as("hof"))
       .collect().head
     assert(n.isNullAt(0) && n.isNullAt(1))
   }

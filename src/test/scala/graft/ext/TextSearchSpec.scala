@@ -133,31 +133,6 @@ class TextSearchSpec extends GraftSpec {
       == topRows(TextSearch.bm25TopK(docs, "doc_id", "text", "cat", k = 5)))
   }
 
-  test("staged postings table: same result, scan prunes to the query " +
-    "terms' buckets") {
-    val docs = graft.Tables(spark, "/root/testdata/sf0.01", "documents")
-    try {
-      val index = TextSearch.buildLexicalIndex(docs, "doc_id", "text")
-      TextSearch.stageLexicalPostings(index, "graft_lex_post", numBuckets = 16)
-      val staged = Some(spark.table("graft_lex_post"))
-      val self = topRows(
-        TextSearch.bm25TopK(docs, "doc_id", "text", "dup key window", k = 20))
-      assert(topRows(TextSearch.bm25TopKIndexed(index, "dup key window",
-        k = 20, idCol = "doc_id", postings = staged)) == self)
-
-      // the inverted-index point-lookup: `term IN (...)` prunes the scan
-      // to at most |terms| of the 16 buckets before a row is read
-      val p = TextSearch.bm25TopKIndexed(index, "dup key window", k = 20,
-          idCol = "doc_id", postings = staged)
-        .queryExecution.executedPlan.toString
-      val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-        .findFirstMatchIn(p)
-        .getOrElse(fail(s"no bucket pruning in plan:\n$p"))
-      assert(sel.group(2).toInt == 16, p)
-      assert(sel.group(1).toInt <= 3, s"opened ${sel.group(1)} buckets:\n$p")
-    } finally spark.sql("DROP TABLE IF EXISTS graft_lex_post")
-  }
-
   test("rrfFuse: agreement wins, single-list docs score one term, ranks " +
     "fuse by the 1/(K+r) sum") {
     // list A ranks: 1→d1, 2→d2, 3→d3; list B: 1→d2, 2→d4

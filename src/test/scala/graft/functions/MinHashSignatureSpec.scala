@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.{GraftSpec, Tables}
-import graft.ext.Dedup
+import graft.ext.{Dedup, DedupTwins}
 import org.apache.spark.sql.functions._
 
 class MinHashSignatureSpec extends GraftSpec {
@@ -12,7 +12,7 @@ class MinHashSignatureSpec extends GraftSpec {
     val sh = docs.select(col("doc_id"), Dedup.shingles(col("text")).as("sh"))
     val mismatches = sh.select(
         Dedup.minhashSignature(col("sh"), 32).as("native"),
-        Dedup.minhashSignatureHof(col("sh"), 32).as("hof"))
+        DedupTwins.minhashSignatureHof(col("sh"), 32).as("hof"))
       .filter(not(col("native") <=> col("hof")))
       .count()
     assert(mismatches == 0)
@@ -27,7 +27,7 @@ class MinHashSignatureSpec extends GraftSpec {
     ).toDF("id", "sh")
     val rows = df.select(col("id"),
         Dedup.minhashSignature(col("sh"), 4).as("native"),
-        Dedup.minhashSignatureHof(col("sh"), 4).as("hof"))
+        DedupTwins.minhashSignatureHof(col("sh"), 4).as("hof"))
       .orderBy("id").collect()
     rows.filterNot(_.getLong(0) == 3L).foreach { r =>
       assert(r.isNullAt(1) == r.isNullAt(2), s"null mismatch on id=${r.getLong(0)}")

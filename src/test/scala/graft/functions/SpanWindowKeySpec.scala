@@ -1,14 +1,14 @@
 package graft.functions
 
 import graft.GraftSpec
-import graft.ext.SpanDedup
+import graft.ext.SpanDedupTwins
 import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
 /** Twin-spec for [[SpanWindowKey]]: the native one-pass window digest
   * must be BYTE-equal to `unhex(md5(concat_ws(" ", slice(toks, pos, n))))`
-  * — the built-in formulation [[SpanDedup.windowKeyHof]] keeps as the
-  * engine-agnostic reference — across in-range windows, the slice edge
+  * — the built-in formulation [[graft.ext.SpanDedupTwins.windowKeyHof]]
+  * keeps as the engine-agnostic reference — across in-range windows, the slice edge
   * cases (pos past the array, negative pos, short tails), concat_ws's
   * null-element skipping, Unicode token bytes, and NULL propagation.
   * `unhex` is a bijection on md5 hex output, so byte equality here
@@ -24,7 +24,7 @@ class SpanWindowKeySpec extends GraftSpec {
     val out = df.select(
       column(SpanWindowKey(expression(col("toks")), expression(col("pos")), n))
         .as("native"),
-      SpanDedup.windowKeyHof(col("toks"), col("pos"), n).as("twin"))
+      SpanDedupTwins.windowKeyHof(col("toks"), col("pos"), n).as("twin"))
     val bad = out.filter(!(col("native") <=> col("twin")))
     assert(bad.count() == 0, {
       val r = bad.take(1).headOption.map(_.toString).getOrElse("")
@@ -59,7 +59,7 @@ class SpanWindowKeySpec extends GraftSpec {
     val out = df.select(
       column(SpanWindowKey(expression(col("toks")), expression(col("pos")), 3))
         .as("native"),
-      SpanDedup.windowKeyHof(col("toks"), col("pos"), 3).as("twin"))
+      SpanDedupTwins.windowKeyHof(col("toks"), col("pos"), 3).as("twin"))
     assert(out.filter(!(col("native") <=> col("twin"))).count() == 0)
   }
 
@@ -79,7 +79,7 @@ class SpanWindowKeySpec extends GraftSpec {
     val out = df.select(
       column(SpanWindowKey(expression(col("toks")), expression(col("posi")), 2))
         .as("native"),
-      SpanDedup.windowKeyHof(col("toks"), col("posi"), 2).as("twin"))
+      SpanDedupTwins.windowKeyHof(col("toks"), col("posi"), 2).as("twin"))
     assert(out.filter(!(col("native") <=> col("twin"))).count() == 0)
   }
 

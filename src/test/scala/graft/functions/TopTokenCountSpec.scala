@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.GraftSpec
-import graft.ext.TextOps
+import graft.ext.{TextOps, TextOpsTwins}
 import org.apache.spark.sql.functions._
 
 /** Twin-spec for [[TopTokenCount]]: the native O(n) hash pass must equal
@@ -29,7 +29,7 @@ class TopTokenCountSpec extends GraftSpec {
     val tk = TextOps.tokens(col("text"))
     val out = docs.select(
       TextOps.topTokenCount(tk).as("native"),
-      TextOps.topTokenCountHof(tk).cast("long").as("hof"))
+      TextOpsTwins.topTokenCountHof(tk).cast("long").as("hof"))
     val diverged = out.filter(!(col("native") <=> col("hof"))).count()
     assert(diverged == 0,
       s"$diverged rows diverged between graft_top_token and its HOF twin")
@@ -53,7 +53,7 @@ class TopTokenCountSpec extends GraftSpec {
     val tk = TextOps.tokens(col("text"))
     val wc = size(tk)
     val nat = TextOps.topTokenCount(tk).cast("double") / wc <= 0.12
-    val hof = TextOps.topTokenCountHof(tk).cast("double") / wc <= 0.12
+    val hof = TextOpsTwins.topTokenCountHof(tk).cast("double") / wc <= 0.12
     assert(df.filter(!(nat <=> hof)).count() == 0)
   }
 }

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.GraftSpec
-import graft.ext.TextOps
+import graft.ext.{TextOps, TextOpsTwins}
 import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,7 @@ class WhitespaceTokensSpec extends GraftSpec {
       .toDF("id", "text")
     val out = df.select(
       TextOps.tokens(col("text")).as("native"),
-      TextOps.tokensHof(col("text")).as("hof"))
+      TextOpsTwins.tokensHof(col("text")).as("hof"))
     val bad = out.filter(!(col("native") <=> col("hof")))
     assert(bad.count() == 0, {
       val r = bad.take(1).headOption.map(_.toString).getOrElse("")
@@ -69,7 +69,7 @@ class WhitespaceTokensSpec extends GraftSpec {
   test("the expression schema matches the twin's array type") {
     val df = Seq("a b").toDF("text")
     val nat = df.select(TextOps.tokens(col("text")).as("t")).schema("t")
-    val hof = df.select(TextOps.tokensHof(col("text")).as("t")).schema("t")
+    val hof = df.select(TextOpsTwins.tokensHof(col("text")).as("t")).schema("t")
     assert(nat.dataType == hof.dataType && nat.nullable == hof.nullable,
       s"schema drifted: native=$nat twin=$hof")
   }

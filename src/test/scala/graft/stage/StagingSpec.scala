@@ -164,93 +164,6 @@ class StagingSpec extends GraftSpec {
     assert(hitFiles("k2", 0L, 99L) < total)
   }
 
-  test("compact: sliver partitions coalesce, content identical, cool partitions untouched") {
-    // day 1: 12 sliver files; day 2: already one file
-    val day1 = (1L to 600L).map(i => (i, "2024-01-01")).toDF("id", "date")
-    val day2 = (601L to 650L).map(i => (i, "2024-01-02")).toDF("id", "date")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    day1.repartition(12).write.mode("overwrite").partitionBy("date").parquet(tmp)
-    day2.coalesce(1).write.mode("append").partitionBy("date").parquet(tmp)
-
-    val before = spark.read.parquet(tmp)
-    val beforeRows = before.collect().map(_.toSeq).toSet
-    def files(part: String): Set[String] = {
-      val d = new java.io.File(s"$tmp/date=$part")
-      d.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
-    }
-    val day2Files = files("2024-01-02")
-    assert(files("2024-01-01").size == 12)
-
-    // huge target → every hot partition compacts to exactly one file
-    val stats = Staging.compact(spark, tmp, targetFileBytes = 1L << 30)
-    assert(stats.map(s => s.partition -> (s.filesBefore, s.filesAfter)).toMap ==
-      Map("date=2024-01-01" -> (12, 1)))
-    assert(files("2024-01-01").size == 1)
-    // the cool partition kept its exact files (not rewritten)
-    assert(files("2024-01-02") == day2Files)
-    // content byte-preserved
-    val afterRows = spark.read.parquet(tmp).collect().map(_.toSeq).toSet
-    assert(afterRows == beforeRows)
-    // idempotent: a second pass finds nothing to do
-    assert(Staging.compact(spark, tmp, targetFileBytes = 1L << 30).isEmpty)
-  }
-
-  test("compactWithReceipt: the before/after manifests are byte-equal and " +
-    "the compaction still happens; a foreign change trips the receipt") {
-    val day1 = (1L to 600L).map(i => (i, s"p$i", "2024-01-01"))
-      .toDF("id", "payload", "date")
-    val day2 = (601L to 650L).map(i => (i, s"p$i", "2024-01-02"))
-      .toDF("id", "payload", "date")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cwr").toString
-    day1.repartition(12).write.mode("overwrite").partitionBy("date").parquet(tmp)
-    day2.coalesce(1).write.mode("append").partitionBy("date").parquet(tmp)
-
-    val manifestBefore = Staging.manifestOf(spark, tmp, "id", col("payload"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
-    val stats = Staging.compactWithReceipt(spark, tmp, "id", col("payload"),
-      targetFileBytes = 1L << 30)
-    assert(stats.map(_.partition) == Seq("date=2024-01-01"))
-    // the receipt's own claim, re-checked from outside: not one checksum bit
-    // moved across the rewrite
-    val manifestAfter = Staging.manifestOf(spark, tmp, "id", col("payload"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
-    assert(manifestAfter == manifestBefore)
-
-    // failure path, driven through the comparison core: a partition that
-    // changed outside the declared write set must be named
-    val before = Map("date=2024-01-01" -> ((2L, "aa")), "date=2024-01-02" -> ((2L, "bb")))
-    val lost = before.updated("date=2024-01-02", (1L, "cc"))
-    val e = intercept[IllegalArgumentException](
-      Staging.requireUnchanged(before, lost, "compact"))
-    assert(e.getMessage.contains("2024-01-02") && !e.getMessage.contains("2024-01-01"))
-    // ...unless it was declared touched
-    Staging.requireUnchanged(before, lost, "upsert", touched = Set("date=2024-01-02"))
-  }
-
-  test("upsertPartitionsWithReceipt: returns the touched partitions' new " +
-    "manifest rows; untouched partitions prove unchanged") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_uwr").toString
-    val base = Seq(
-      (1L, 1L, "a0", "2024-01-01"), (2L, 1L, "b0", "2024-01-01"),
-      (3L, 1L, "c0", "2024-01-02"), (4L, 1L, "d0", "2024-01-02")
-    ).toDF("id", "ver", "payload", "date")
-    Staging.stage(base, tmp)
-    val day1Before = Staging.manifestOf(spark, tmp, "id", col("payload"))
-      .filter(col("shard") === "2024-01-01").collect()(0).getString(2)
-
-    val updates = Seq((3L, 2L, "c1", "2024-01-02"), (5L, 1L, "e0", "2024-01-02"))
-      .toDF("id", "ver", "payload", "date")
-    val receipt = Staging.upsertPartitionsWithReceipt(spark, tmp, updates,
-      Seq("id"), Seq("ver"), "id", col("payload"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    // the receipt covers exactly the touched partition, with merged counts
-    assert(receipt == Seq(("2024-01-02", 3L)))
-    // and the untouched day's checksum survived the merge bit-for-bit
-    val day1After = Staging.manifestOf(spark, tmp, "id", col("payload"))
-      .filter(col("shard") === "2024-01-01").collect()(0).getString(2)
-    assert(day1After == day1Before)
-  }
-
   test("latestByKey: equals the ranking-window twin; no window, no input sort") {
     val log = (1L to 5000L).map { i =>
       (i % 40, i, s"v$i", (i * 2654435761L) % 1000L) // key, version, payload, noise
@@ -267,66 +180,6 @@ class StagingSpec extends GraftSpec {
     val p = viaAgg.queryExecution.executedPlan.toString
     assert(!p.contains("Window"), p)
     assert(p.contains("partial_max_by") || p.contains("partial_max"), p)
-  }
-
-  test("upsertPartitions: touched partition merges latest-wins, untouched keeps its bytes") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_upsert").toString
-    val base = Seq(
-      (1L, 1L, "a0", "2024-01-01"),
-      (2L, 1L, "b0", "2024-01-01"),
-      (3L, 1L, "c0", "2024-01-02"),
-      (4L, 1L, "d0", "2024-01-02")
-    ).toDF("id", "ver", "payload", "date")
-    Staging.stage(base, tmp)
-
-    def files(part: String): Set[String] =
-      new java.io.File(s"$tmp/date=$part").listFiles()
-        .map(_.getName).filter(_.endsWith(".parquet")).toSet
-    val day1Files = files("2024-01-01")
-
-    // update key 3, insert key 5 — both day 2; day 1 untouched
-    val updates = Seq(
-      (3L, 2L, "c1", "2024-01-02"),
-      (5L, 1L, "e0", "2024-01-02")
-    ).toDF("id", "ver", "payload", "date")
-    Staging.upsertPartitions(spark, tmp, updates, Seq("id"), Seq("ver"))
-
-    val after = spark.read.parquet(tmp)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("ver"),
-        r.getAs[String]("payload"))).toSet
-    assert(after == Set(
-      (1L, 1L, "a0"), (2L, 1L, "b0"),          // day 1 as staged
-      (3L, 2L, "c1"), (4L, 1L, "d0"), (5L, 1L, "e0"))) // day 2 merged
-    assert(files("2024-01-01") == day1Files, "untouched partition rewritten")
-  }
-
-  test("upsertPartitions: NULL partition values throw before any write") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_upsert_null").toString
-    val base = Seq(
-      (1L, 1L, "a0", Option("2024-01-01")),
-      (2L, 1L, "b0", None: Option[String]) // existing NULL-partition row
-    ).toDF("id", "ver", "payload", "date")
-    Staging.stage(base, tmp)
-    val beforeRows = spark.read.parquet(tmp).collect().map(_.toSeq).toSet
-
-    // a NULL-keyed update would merge against nothing (isin never matches
-    // NULL) while dynamic overwrite replaced the NULL partition with the
-    // update alone — the guard must refuse before touching the table
-    val updates = Seq((2L, 2L, "b1", None: Option[String]))
-      .toDF("id", "ver", "payload", "date")
-    val e = intercept[IllegalArgumentException](
-      Staging.upsertPartitions(spark, tmp, updates, Seq("id"), Seq("ver")))
-    assert(e.getMessage.contains("NULL"), e.getMessage)
-    // nothing was written: the table is byte-for-byte what was staged
-    assert(spark.read.parquet(tmp).collect().map(_.toSeq).toSet == beforeRows)
-
-    // a well-keyed upsert on the same table still works
-    val good = Seq((1L, 2L, "a1", Option("2024-01-01")))
-      .toDF("id", "ver", "payload", "date")
-    Staging.upsertPartitions(spark, tmp, good, Seq("id"), Seq("ver"))
-    val after = spark.read.parquet(tmp)
-      .collect().map(r => (r.getAs[Long]("id"), r.getAs[String]("payload"))).toSet
-    assert(after == Set((1L, "a1"), (2L, "b0")))
   }
 
   test("snapshotDiff: insert/update/delete classified; unchanged absent; null-safe compare") {
@@ -387,30 +240,6 @@ class StagingSpec extends GraftSpec {
     Staging.register(spark, "default.graft_reg_qual", tmp) // still idempotent
     try assert(spark.table("default.graft_reg_qual").count() == 1L)
     finally spark.sql("DROP TABLE IF EXISTS default.graft_reg_qual")
-  }
-
-  test("bucketed staging: the co-located join runs with zero Exchange") {
-    val facts = (1L to 500L).map(i => (i % 50, s"r$i")).toDF("user_id", "payload")
-    val dims = (0L to 49L).map(i => (i, s"u$i")).toDF("user_id", "name")
-    try {
-      Staging.stageBucketed(facts, "graft_bkt_facts", "user_id", 4)
-      Staging.stageBucketed(dims, "graft_bkt_dims", "user_id", 4)
-
-      // broadcast off: without bucketing this join MUST shuffle both
-      // sides; with matching buckets Catalyst plans no Exchange at all
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val joined = spark.table("graft_bkt_facts")
-          .join(spark.table("graft_bkt_dims"), "user_id")
-        val plan = joined.queryExecution.executedPlan.toString
-        assert(!plan.contains("Exchange"), s"bucketed join shuffled:\n$plan")
-        assert(joined.count() == 500L)
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_bkt_facts")
-      spark.sql("DROP TABLE IF EXISTS graft_bkt_dims")
-    }
   }
 
   test("exportManifest: partitioning-independent checksums that catch " +
