@@ -53,7 +53,8 @@ object LmScore {
     * before the model is handed out: `contexts` derives from it and
     * every [[score]] joins both frames, so a lazy model would re-run the
     * reference-corpus aggregation once per consumer — a trained model
-    * should mean the training work is DONE. */
+    * should mean the training work is DONE (and [[saveModel]]'d models
+    * get this for free from the parquet read-back). */
   def train(ref: DataFrame, textCol: String): BigramLm = {
     val bigrams = Materialize.cut(
       bigramRows(ref, Seq.empty, textCol)
@@ -66,6 +67,28 @@ object LmScore {
       .head().getLong(0)
     BigramLm(bigrams, contexts, v)
   }
+
+  /** Persist a trained model: count frames as parquet, the vocab scalar
+    * as a 1-row meta table — a standing reference model is trained once
+    * per corpus generation and probed by every batch (the
+    * `Dedup.buildDedupIndex` amortization contract). Overwrites any
+    * model previously at `path`. */
+  def saveModel(lm: BigramLm, path: String): Unit = {
+    lm.bigrams.write.mode("overwrite").parquet(s"$path/bigrams")
+    lm.contexts.write.mode("overwrite").parquet(s"$path/contexts")
+    lm.bigrams.sparkSession.range(1)
+      .select(lit(lm.vocabSize).as("vocab_size"))
+      .write.mode("overwrite").parquet(s"$path/meta")
+  }
+
+  /** Load a [[saveModel]] directory. The count frames come back as bare
+    * columnar scans — scoring against a loaded model reads parquet, it
+    * never re-tokenizes the reference corpus. */
+  def loadModel(spark: org.apache.spark.sql.SparkSession, path: String): BigramLm =
+    BigramLm(
+      spark.read.parquet(s"$path/bigrams"),
+      spark.read.parquet(s"$path/contexts"),
+      spark.read.parquet(s"$path/meta").head().getLong(0))
 
   /**
    * Mean negative log-probability per document: `(idCol, n_bigrams,

@@ -18,6 +18,16 @@ import org.apache.spark.sql.functions._
 object Sampling {
 
   /**
+   * Content-hash Bernoulli sample: keep rows whose lowercase md5 hex of
+   * `key` sorts below `hexCeil` (e.g. "2a" keeps ≈ 42/256 of rows).
+   * Pure filter — no shuffle, no state, trivially pushdown-friendly; the
+   * sharding-safe replacement for `sample()` when the sample must be
+   * stable across reruns and engines.
+   */
+  def hashSample(df: DataFrame, key: Column, hexCeil: String): DataFrame =
+    df.filter(md5(key.cast("binary")) < lit(hexCeil))
+
+  /**
    * Stratified quota by stable hash order: the `k` rows of each stratum
    * whose content hash sorts first (ties broken by `idCol`), with the rank
    * in column `rk` — "give me exactly k docs per language, reproducibly".

@@ -50,6 +50,10 @@ object Similarity {
     * into a per-corpus-row projection). */
   def norm(a: Column): Column = sqrt(nativeDot(a, a))
 
+  /** NULL (not NaN) when either vector has zero norm — see the object doc. */
+  def cosine(a: Column, b: Column): Column =
+    nativeDot(a, b) / nullif(norm(a) * norm(b), lit(0.0))
+
   /**
    * Exact embedding near-duplicate pairs within a blocking key (e.g. a
    * cluster id, language, or length bucket): shuffle both sides once by

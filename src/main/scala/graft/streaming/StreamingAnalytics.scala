@@ -20,16 +20,89 @@ final case class UserSession(
  * Streaming analytics over the parsed CLF stream — the event-time toolbox
  * the batch reference never had (SURVEY.md §2.10 keeps these out of the
  * t2 contract; they are capability extensions for continuous ingest):
- * [[sessionize]] is gap-based sessionization with
- * `flatMapGroupsWithState` + event-time timeout — custom state keyed by
- * user, closed either by an explicit gap in that user's stream or by the
- * watermark passing the idle deadline.
  *
- * Scale: the operator shuffles once by user and keeps per-key state O(1);
- * the watermark bounds total state by active keys × gap, not by stream
- * length.
+ *  - [[windowedCounts]]: tumbling event-time windows with a watermark, so
+ *    state is bounded and late data beyond the delay is dropped — the
+ *    streaming successor of the reference's per-day batch aggregation.
+ *  - [[sessionize]]: gap-based sessionization with
+ *    `flatMapGroupsWithState` + event-time timeout — custom state keyed by
+ *    user, closed either by an explicit gap in that user's stream or by
+ *    the watermark passing the idle deadline.
+ *
+ * Scale: both operators shuffle once by their grouping key and keep
+ * per-key state O(1); the watermark bounds total state by active keys ×
+ * window/gap, not by stream length.
  */
 object StreamingAnalytics {
+
+  /**
+   * Streaming exact dedup — the continuous-ingest twin of the batch
+   * `dropDuplicates` surface (X1): emits the first arrival of each key and
+   * drops re-deliveries (at-least-once sources, retried micro-batches)
+   * that land within the watermark horizon. State is one entry per
+   * distinct key seen inside the horizon and is evicted as the watermark
+   * passes — bounded by arrival rate × delay, not by stream length, which
+   * is what makes exact dedup viable on an unbounded 100 TB/day feed.
+   * Keys typically exclude the event-time column: with `time` in the key
+   * set, two arrivals of the same logical record only collapse when their
+   * timestamps are byte-equal, degrading the within-watermark semantics to
+   * plain exact-key dedup.
+   */
+  def dedupStream(
+      parsed: DataFrame,
+      keyCols: Seq[String],
+      watermarkDelay: String = "10 minutes"): DataFrame =
+    parsed
+      .filter(col("time").isNotNull)
+      .withWatermark("time", watermarkDelay)
+      .dropDuplicatesWithinWatermark(keyCols)
+
+  /**
+   * Watermarked STREAM-STREAM interval join — the native join of two
+   * unbounded streams, not a `foreachBatch` workaround: each left event
+   * pairs with same-key right events whose event time falls in
+   * `[leftTime, leftTime + horizonSeconds]`. Both sides carry
+   * watermarks and the join condition bounds the two event times
+   * against each other — exactly the proof Structured Streaming needs
+   * to know when a buffered row can never match again, so per-side
+   * state is bounded by arrival rate × (watermark delay + horizon),
+   * not by stream length. Every in-horizon pair is emitted, not only
+   * the nearest match (impression→click attribution).
+   *
+   * The key column must be named the same on both sides (it joins and
+   * deduplicates to one output column); all other column names must be
+   * disjoint, the usual contract for a two-stream join.
+   */
+  def intervalJoin(
+      left: DataFrame, right: DataFrame, keyCol: String,
+      leftTime: String, rightTime: String, horizonSeconds: Long,
+      watermarkDelay: String = "10 minutes"): DataFrame = {
+    require(horizonSeconds >= 0L,
+      s"horizonSeconds must be >= 0, got $horizonSeconds")
+    val l = left.withWatermark(leftTime, watermarkDelay)
+    val r = right.withWatermark(rightTime, watermarkDelay)
+    l.join(r,
+        l(keyCol) === r(keyCol) &&
+          r(rightTime) >= l(leftTime) &&
+          r(rightTime) <= l(leftTime) +
+            expr(s"INTERVAL $horizonSeconds SECOND"),
+        "inner")
+      .drop(r(keyCol))
+  }
+
+  /** Per-window, per-status request counts with bounded state. */
+  def windowedCounts(
+      parsed: DataFrame,
+      windowLength: String = "1 hour",
+      watermarkDelay: String = "10 minutes"): DataFrame =
+    parsed
+      .filter(col("time").isNotNull)
+      .withWatermark("time", watermarkDelay)
+      .groupBy(window(col("time"), windowLength), col("status_code"))
+      .agg(count(lit(1)).as("cnt"))
+      .select(
+        col("window.start").as("window_start"),
+        col("status_code"), col("cnt"))
 
   /**
    * Gap-based sessions: a user's session closes when either a later event

@@ -64,6 +64,19 @@ class LmScoreSpec extends GraftSpec {
       s"reference nll $refAvg should beat junk nll $junkAvg")
   }
 
+  test("saved model round-trips: loaded scores equal in-memory scores") {
+    val docs = graft.Tables(spark, "/root/testdata/sf0.001", "documents")
+    val lm = LmScore.train(docs.filter(col("source") === "src0"), "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_lm").toString
+    LmScore.saveModel(lm, dir)
+    val loaded = LmScore.loadModel(spark, dir)
+    assert(loaded.vocabSize == lm.vocabSize)
+    def scores(m: LmScore.BigramLm) =
+      LmScore.score(docs, "doc_id", "text", m)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(scores(loaded) == scores(lm))
+  }
+
   test("classify: label = argmin rounded NLL, ties to the smallest label") {
     val docs = Seq(
       (1L, "a b a b"),   // clearly model A's distribution

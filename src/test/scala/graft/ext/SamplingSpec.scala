@@ -10,6 +10,19 @@ class SamplingSpec extends GraftSpec {
     .map(i => (i, s"document number $i body", if (i % 2 == 0) "en" else "es"))
     .toDF("doc_id", "text", "lang")
 
+  test("hashSample: deterministic, repartition-stable, pure filter") {
+    val a = Sampling.hashSample(docs, col("text"), "80")
+      .select("doc_id").as[Long].collect().toSet
+    val b = Sampling.hashSample(docs.repartition(7), col("text"), "80")
+      .select("doc_id").as[Long].collect().toSet
+    assert(a == b)                       // stable under repartitioning
+    assert(a.nonEmpty && a.size < 100)   // ceil "80" keeps ≈ half
+    // no shuffle: the sample is a filter over the scan
+    val p = Sampling.hashSample(docs, col("text"), "80")
+      .queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange"))
+  }
+
   test("stratifiedTake: exactly k per stratum, rank order stable") {
     val taken = Sampling.stratifiedTake(docs, "lang", col("text"), "doc_id", 5)
       .select($"lang", $"doc_id", $"rk")

@@ -13,6 +13,17 @@ class SimilaritySpec extends GraftSpec {
     (3L, Array(0.9f, 0.1f, 0.0f))
   ).toDF("vec_id", "embedding")
 
+  test("cosine: identical=1, orthogonal=0") {
+    val r = vecs.filter($"vec_id" === 0)
+      .select(
+        Similarity.cosine(col("embedding"), col("embedding")).as("self"),
+        Similarity.cosine(col("embedding"),
+          typedLit(Array(0.0f, 1.0f, 0.0f))).as("orth"))
+      .collect()(0)
+    assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
+    assert(math.abs(r.getDouble(1)) < 1e-12)
+  }
+
   test("brute-force top-k: rank-1 neighbor of each query is itself") {
     val top = Similarity.bruteForceTopK(vecs, vecs, k = 2)
       .filter(col("rank") === 1).collect()
